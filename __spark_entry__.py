@@ -711,7 +711,7 @@ def q_dedup_tokenset_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup mining, exact-verified: pairs with token-set
-    JI ≥ 0.9. b=32/r=4 ⇒ miss prob at the threshold ≈ 1e-15, so the
+    JI ≥ 0.9. r=8/b=33 ⇒ miss prob at the threshold ≈ 8.5e-9, so the
     result matches the exact all-pairs oracle."""
     docs = _docs(spark, sf_dir)
     pairs = dedup.minhash_lsh_dedup(docs, "doc_id", threshold=0.9)

@@ -31,15 +31,17 @@ from dashing_spark.functions.simhash import simhash_batch
 from dashing_spark.operators.ship import ensure_shipped, widen_if_narrow
 
 
-def _set_digest_expr(sorted_arr):
-    """16-byte md5 digest of a sorted string array, INJECTIVE up to
-    64-bit per-element hash collisions: md5 runs over the joined
-    per-element xxhash64 values, not over concat_ws(sep, tokens) —
-    a separator-joined concat is ambiguous when a token itself contains
-    the separator ({"a<sep>b"} vs {"a","b"} collapse to one key and
-    would be emitted as false JI=1.0 duplicates)."""
-    return F.md5(
-        F.concat_ws(",", F.transform(sorted_arr, lambda x: F.xxhash64(x).cast("string")))
+def set_key(items):
+    """The set digest of every near-dup path: 16-byte binary
+    ``unhex(md5)`` over the SORTED int64 item-hash array, so member
+    order and array position never matter. Injective up to 64-bit item
+    hash collisions (each element is a fixed decimal field between
+    commas — no separator ambiguity, unlike a concat of the raw
+    strings, where {"a,b"} and {"a","b"} would collide). Binary, not
+    the 32-char hex string, to halve the key bytes on every join and
+    shuffle keyed by it."""
+    return F.unhex(
+        F.md5(F.concat_ws(",", F.transform(F.sort_array(items), lambda x: x.cast("string"))))
     )
 
 
@@ -60,10 +62,9 @@ def tokenset_dup_clusters(
     multiplicity-insensitive duplicates). The shuffle key is an md5 of
     the sorted set — 16 bytes per row instead of the whole token array
     (which at web scale is the document itself again)."""
-    arr = F.sort_array(F.array_distinct(F.split(F.col(text_col), " ", -1)))
-    key = _set_digest_expr(arr)
     return (
-        df.select(id_col, key.alias("tokenset"))
+        hashed_item_sets(df, id_col, text_col)
+        .select(F.col("id").alias(id_col), set_key("items").alias("tokenset"))
         .groupBy("tokenset")
         .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
     )
@@ -265,7 +266,7 @@ DEFAULT_BUCKET_CAP = 1024
 #: sub-threshold pair at JI=0.7 collides in 18*0.7^4 = 4.3 expected
 #: bands at r=4 vs 33*0.7^8 = 1.9 at r=8 — on a near-dup-heavy corpus
 #: the candidate join's output mass drops ~5-8x (measured 2.5e9 -> ~4e8
-#: raw pair rows at 50k docs, tools/probe_q7_fused.py), which dwarfs
+#: raw pair rows at 50k docs, OPTIMIZATION_r07.md), which dwarfs
 #: the 3.7x larger signature kernel over the (collapsed) rep docs. At
 #: thresholds <= 0.6 the binding r stays <= 4 and the chosen banding is
 #: unchanged from the 128 budget. Verified output is banding-invariant
@@ -273,8 +274,8 @@ DEFAULT_BUCKET_CAP = 1024
 DEFAULT_LSH_HASH_BUDGET = 264
 
 #: per-relation size cap (estimated bytes) under which the exact
-#: verify joins broadcast the rep item-set table and run BEFORE the
-#: candidate distinct (see minhash_lsh_dedup) — beyond it, the
+#: verify joins broadcast the item-set table and run BEFORE the
+#: candidate distinct (see verify_pairs) — beyond it, the
 #: distinct-first plan is kept because attaching items to the raw
 #: candidate stream would shuffle it by id.
 FUSED_VERIFY_BROADCAST_BYTES = 128 << 20
@@ -411,40 +412,41 @@ def capped_band_join(
         sz = sz.localCheckpoint(eager=False)
     at = a.join(sz, ["band", "bhash"])
     bt = b.join(sz, ["band", "bhash"])
-    # the PAIR joins carry a merge hint: their inputs look tiny at test
-    # scale, so AQE otherwise demotes them to broadcast-hash joins that
-    # stream the quadratic probe through the un-exchanged input
-    # partitioning (measured 78 s vs 2.4 s on a 2000-doc template
-    # family) — and at 100 TB neither side could broadcast anyway.
-    # Sort-merge is also the shape AQE's skew-join splitting applies
-    # to. The sizing tag joins above stay unhinted: Catalyst correctly
-    # broadcasts a small size table and shuffles a big one.
-    cold = (
-        at.filter(~F.col("__hot"))
-        .select("a_id", "band", "bhash", *extra_a)
-        .join(
-            bt.filter(~F.col("__hot"))
-            .select("b_id", "band", "bhash", *extra_b)
-            .hint("merge"),
-            ["band", "bhash"],
-        )
-        .select(*out_cols)
-    )
     spark = a.sparkSession
     try:
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:
         shuffle_n = 0  # "auto" (non-numeric) — fall back to parallelism
     n_part = max(spark.sparkContext.defaultParallelism * 2, shuffle_n)
+    # both PAIR joins repartition their sides with an EXPLICIT count:
+    # band rows are tiny in bytes, so AQE's coalescing would otherwise
+    # fuse the join onto one or two reducers (input-size heuristics
+    # cannot see the quadratic join output, nor a verify fused into its
+    # stage; hot grid cells measured 10.5 s vs 5.2 s on a 2000-doc
+    # family, unboundedly worse as buckets grow). An explicit count is
+    # exempt from AQE coalescing. The pair joins also carry a merge
+    # hint: their inputs look tiny at test scale, so AQE otherwise
+    # demotes them to broadcast-hash joins that stream the quadratic
+    # probe (measured 78 s vs 2.4 s) — and at 100 TB neither side could
+    # broadcast anyway. The sizing tag joins above stay unhinted:
+    # Catalyst correctly broadcasts a small size table and shuffles a
+    # big one.
+    cold = (
+        at.filter(~F.col("__hot"))
+        .select("a_id", "band", "bhash", *extra_a)
+        .repartition(n_part, "band", "bhash")
+        .join(
+            bt.filter(~F.col("__hot"))
+            .select("b_id", "band", "bhash", *extra_b)
+            .repartition(n_part, "band", "bhash")
+            .hint("merge"),
+            ["band", "bhash"],
+        )
+        .select(*out_cols)
+    )
     # hot: block a-rows by ka = h(a_id) mod Ga, b-rows by kb = h(b_id)
     # mod Gb; replicate each row across the other axis so block pair
-    # (ka, kb) meets on exactly one reducer. The sides are repartitioned
-    # with an EXPLICIT partition count on the grid keys: the hot rows
-    # are tiny in bytes, so AQE's coalescing would otherwise fuse the
-    # grid cells back onto one reducer (input-size heuristics cannot
-    # see quadratic join output) — measured 10.5 s vs 5.2 s on a
-    # 2000-doc family, and unboundedly worse as buckets grow. An
-    # explicit count is exempt from AQE coalescing.
+    # (ka, kb) meets on exactly one reducer
     keys = ["band", "bhash", "__ka", "__kb"]
     ah = at.filter(F.col("__hot")).select(
         "a_id",
@@ -497,9 +499,6 @@ def lsh_candidate_pairs(
     bands: int = 32,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     materialize: bool = True,
-    sizes: DataFrame | None = None,
-    size_ratio: float | None = None,
-    size_slack: int = 0,
     raw: bool = False,
 ) -> DataFrame:
     """Banded LSH: docs sharing any band of their signature become a
@@ -511,12 +510,10 @@ def lsh_candidate_pairs(
     plan-construction time.
 
     Duplicate emissions (a true near-dup collides in many bands) are
-    removed by `.distinct()` on the 16-byte pair rows: partial (map-side)
-    aggregation compresses the multiset before the shuffle, which
-    measures ~14× faster than carrying per-row band arrays through the
-    join to filter on the first colliding band (433 s vs 30 s on the 5k
-    near-dup-heavy fixture at sf0.1 — the wide rows dominate the join
-    I/O long before the second shuffle is saved).
+    removed by :func:`distinct_pairs` on the 16-byte pair rows: ~14×
+    faster than carrying per-row band arrays through the join to keep
+    only the first colliding band (433 s vs 30 s at sf0.1 — the wide
+    rows dominate the join I/O).
 
     Keyword-only params: a positional ``16`` meant ``bands`` before
     round 3 but would now set ``n_hashes`` — with bands > n_hashes that
@@ -536,55 +533,14 @@ def lsh_candidate_pairs(
     rather than recomputing. On clusters with preemptible executors
     pass False: full lineage is kept and each branch recomputes.
 
-    ``sizes`` + ``size_ratio`` enable the EXACT size-ratio prefilter:
-    JI(A,B) <= min(|A|,|B|)/max(|A|,|B|) for any sets, so when the
-    caller will verify candidates against ``threshold``, pairs with
-    least(na, nb) + size_slack < greatest(na, nb) * size_ratio can
-    never pass and are dropped BEFORE the distinct — on a
-    near-dup-heavy corpus this halves the pair mass the distinct must
-    shuffle (guide section 2.3: shuffle fewer bytes). ``sizes`` must
-    be (id_col, __nsz) with the per-doc distinct item-set size;
-    ``size_slack`` absorbs a bounded count discrepancy between the
-    caller's size column and the verifier's hashed-set size (64-bit
-    in-set hash collisions shrink the hashed size by at most the
-    collision count — slack 2 makes the filter conservative at any
-    realistic scale). Candidate RECALL is unchanged; only
-    provably-sub-threshold candidates disappear, so a downstream
-    exact verify returns the identical pair set.
-
     ``raw=True`` skips the distinct and returns the (a_id, b_id)
     candidate stream with its per-band duplicate emissions — for
-    callers that fuse an exact verify into the join stage (the verify
-    filter leaves so few survivors that deduplicating THEM is far
-    cheaper than exchanging the full candidate mass; see
-    minhash_lsh_dedup). The multiset's distinct support is identical
+    callers that fuse an exact verify into the join stage (see
+    :func:`verify_pairs`). The multiset's distinct support is identical
     either way."""
     banded = lsh_band_rows(signatures, id_col, n_hashes=n_hashes, bands=bands)
     if materialize and bucket_cap is not None and not banded.isStreaming:
         banded = banded.localCheckpoint(eager=False)
-    if sizes is not None and size_ratio is not None:
-        banded = banded.join(
-            sizes.select(F.col(id_col), F.col("__nsz")), id_col
-        )
-        a = banded.select(
-            F.col(id_col).alias("a_id"), "band", "bhash",
-            F.col("__nsz").alias("__na"),
-        )
-        b = banded.select(
-            F.col(id_col).alias("b_id"), "band", "bhash",
-            F.col("__nsz").alias("__nb"),
-        )
-        cand = capped_band_join(
-            a, b, bucket_cap=bucket_cap, symmetric=True,
-            materialize=materialize,
-        ).filter(
-            (F.col("a_id") < F.col("b_id"))
-            & (
-                F.least("__na", "__nb") + F.lit(int(size_slack))
-                >= F.greatest("__na", "__nb") * F.lit(float(size_ratio))
-            )
-        ).select("a_id", "b_id")
-        return cand if raw else distinct_pairs(cand)
     a = banded.select(F.col(id_col).alias("a_id"), "band", "bhash")
     b = banded.select(F.col(id_col).alias("b_id"), "band", "bhash")
     cand = capped_band_join(
@@ -633,7 +589,7 @@ def hashed_item_sets(
 ) -> DataFrame:
     """(id, items array<long>) — each doc's distinct item set as
     xxhash64 values. Items ship as int64 arrays, not strings: ~2.5× less
-    data through pair joins and integer array_intersect. Set sizes are
+    data through pair joins and integer intersects. Set sizes are
     unchanged (distinct strings → distinct hashes up to a ~1e-14
     per-pair collision probability — far below the LSH miss rate the
     candidate stage already carries). ``char_n`` switches items from
@@ -647,6 +603,47 @@ def hashed_item_sets(
     return df.select(F.col(id_col).alias("id"), item_expr.alias("items"))
 
 
+def _jaccard(pairs: DataFrame, items: DataFrame) -> DataFrame:
+    """(a_id, b_id, ji): exact Jaccard of each pair's (id, items) item
+    arrays, intersected JVM-side — the one Jaccard expression of every
+    verify. Cost is O(pairs × set size) with two equi-joins; a
+    token-level join would emit O(pairs × intersection) rows and melt
+    down on near-dup-dense candidates. ``items`` is ONE relation
+    joined once per pair side, so a broadcast ``items`` is exchanged
+    once and its second probe reuses the exchange."""
+
+    def side(s):
+        return items.select(
+            F.col("id").alias(f"{s}_id"), F.col("items").alias(f"{s}_items")
+        )
+
+    return (
+        pairs.select("a_id", "b_id")
+        .join(side("a"), "a_id")
+        .join(side("b"), "b_id")
+        .withColumn("t2", F.size(F.array_intersect("a_items", "b_items")))
+        .select(
+            "a_id",
+            "b_id",
+            (
+                F.col("t2").cast("double")
+                / (F.size("a_items") + F.size("b_items") - F.col("t2"))
+            ).alias("ji"),
+        )
+    )
+
+
+def _candidate_docs(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """``df`` pruned to the docs ``pairs`` names, so only candidates
+    build item arrays."""
+    ids = (
+        pairs.select(F.col("a_id").alias("__cid"))
+        .unionByName(pairs.select(F.col("b_id").alias("__cid")))
+        .distinct()
+    )
+    return df.join(ids, F.col(id_col) == F.col("__cid"), "left_semi")
+
+
 def exact_ji_for_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -655,73 +652,170 @@ def exact_ji_for_pairs(
     shingle_w: int = 1,
     char_n: int | None = None,
 ) -> DataFrame:
-    """Exact Jaccard for candidate pairs only (verify stage).
-
-    Per-doc distinct item *arrays* are joined onto the pair rows and
-    intersected JVM-side (`array_intersect`): cost is O(pairs × set
-    size) with two equi-joins — no token-level join, whose output is
-    O(pairs × intersection) rows and melts down when candidates are
-    dense (e.g. near-dup-heavy corpora). Only candidate docs build
-    arrays (semi-join pruning). ``char_n`` switches items from word
+    """Exact Jaccard (a_id, b_id, ji) of every given candidate pair —
+    the unthresholded verify over per-doc item arrays built for
+    candidate docs only. ``char_n`` switches items from word
     w-shingles to character n-grams."""
-    cand_ids = (
-        pairs.select(F.col("a_id").alias("id"))
-        .unionByName(pairs.select(F.col("b_id").alias("id")))
-        .distinct()
+    items = hashed_item_sets(
+        _candidate_docs(df, pairs, id_col), id_col,
+        text_col=text_col, shingle_w=shingle_w, char_n=char_n,
     )
-    docs = df.join(cand_ids, df[id_col] == cand_ids["id"], "left_semi")
-    sets = hashed_item_sets(
-        docs, id_col, text_col=text_col, shingle_w=shingle_w, char_n=char_n
-    )
-    out = (
-        pairs.join(
-            sets.select(F.col("id").alias("a_id"), F.col("items").alias("a_items")),
-            "a_id",
-        )
-        .join(
-            sets.select(F.col("id").alias("b_id"), F.col("items").alias("b_items")),
-            "b_id",
-        )
-        .withColumn("t2", F.size(F.array_intersect("a_items", "b_items")))
-        .withColumn(
-            "ji",
-            F.col("t2").cast("double")
-            / (F.size("a_items") + F.size("b_items") - F.col("t2")),
-        )
-    )
-    return out.select("a_id", "b_id", "ji")
+    return _jaccard(pairs, items)
 
 
-def verify_ji_broadcast(
-    pairs: DataFrame, items: DataFrame, threshold: float
+def fused_verify(size_src: DataFrame, size) -> bool:
+    """Verify placement: True runs the broadcast-fused verify, False the
+    distinct-first one (see :func:`verify_pairs`). ``size`` bounds each
+    ``size_src`` row's item count — the set size on the set paths, the
+    text length for char n-grams. One size-probe job estimates the
+    broadcast item table (24 B/row + 8 B/item); fused needs it under
+    FUSED_VERIFY_BROADCAST_BYTES and the average set at most
+    FUSED_VERIFY_MAX_AVG_ITEMS. A streaming ``size_src`` takes the
+    scale-safe distinct-first plan without running a job (plan
+    builders never run jobs on a streaming frame)."""
+    if size_src.isStreaming:
+        return False
+    n, total = size_src.agg(
+        F.count("*"), F.coalesce(F.sum(size), F.lit(0))
+    ).first()
+    return (24 * n + 8 * total) <= FUSED_VERIFY_BROADCAST_BYTES and (
+        total <= FUSED_VERIFY_MAX_AVG_ITEMS * max(n, 1)
+    )
+
+
+def verify_pairs(
+    pairs: DataFrame, items: DataFrame, threshold: float, *, fused: bool
 ) -> DataFrame:
-    """Exact-JI verify of a (a_id, b_id) pair stream against a
-    BROADCAST (id, items) table: attach both item arrays by hash probe
-    (no shuffle of the pair stream), intersect JVM-side, keep
-    ji >= threshold. Built for fusing into a candidate join's reduce
-    stage — the pair stream may carry per-band duplicate emissions;
-    every copy computes the identical ji, so the caller dedupes the
-    (few) SURVIVORS instead of the full candidate mass. Only correct
-    to broadcast when ``items`` is bounded (caller decides — see
-    FUSED_VERIFY_BROADCAST_BYTES)."""
-    ia = F.broadcast(
-        items.select(F.col("id").alias("a_id"), F.col("items").alias("a_items"))
-    )
-    ib = F.broadcast(
-        items.select(F.col("id").alias("b_id"), F.col("items").alias("b_items"))
-    )
-    return (
-        pairs.select("a_id", "b_id")
-        .join(ia, "a_id")
-        .join(ib, "b_id")
-        .withColumn("t2", F.size(F.array_intersect("a_items", "b_items")))
-        .withColumn(
-            "ji",
-            F.col("t2").cast("double")
-            / (F.size("a_items") + F.size("b_items") - F.col("t2")),
+    """Distinct (a_id, b_id, ji) pairs with exact ji >= threshold.
+
+    ``fused=True``: ``pairs`` is the RAW candidate stream, per-band
+    duplicate emissions included. ``items`` is broadcast and the verify
+    runs as hash probes inside the candidate join's reduce stage,
+    before any distinct: the candidate mass (mostly sub-threshold pairs
+    that collide in some band) never crosses an exchange, and only the
+    few survivors are deduplicated (every copy of a pair computes the
+    identical ji). ``fused=False``: ``pairs`` is already distinct and
+    ``items`` is attached by shuffle joins — the scale-safe plan when
+    the item table cannot broadcast or large sets make a per-emission
+    intersect cost more than an exchanged row. :func:`fused_verify`
+    picks."""
+    if fused:
+        return (
+            _jaccard(pairs, F.broadcast(items))
+            .filter(F.col("ji") >= threshold)
+            .dropDuplicates(["a_id", "b_id"])
         )
-        .filter(F.col("ji") >= threshold)
-        .select("a_id", "b_id", "ji")
+    return _jaccard(pairs, items).filter(F.col("ji") >= threshold)
+
+
+def set_pairs(
+    new_bands: DataFrame,
+    old_bands: DataFrame | None = None,
+    *,
+    items: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Verified near-dup SET pairs (a_id < b_id, ji >= threshold) — the
+    set-level core of batch and streaming MinHash-LSH dedup.
+
+    ``new_bands`` / ``old_bands`` are (id, band, bhash, nsz) band rows
+    of distinct item sets, ``nsz`` the set's item count; ``items`` is
+    (id, items) for every set either side names. Candidates are the
+    capped band self-join of ``new_bands`` plus, when given (the
+    streaming index), the ``old_bands``-vs-``new_bands`` cross join. A
+    set present on both sides, or repeated across old segments, only
+    re-emits candidates, which the verify's dedup removes.
+
+    Exact size-ratio prefilter: JI(A,B) <= min/max set size, so pairs
+    whose size ratio is below ``threshold`` can never pass and are
+    dropped before the verify and the distinct. Sizes come from the
+    very arrays the verify intersects and the ratio is computed in the
+    same double division (rounding is monotone), so no passing pair is
+    ever dropped."""
+    fused = fused_verify(items, F.size("items"))
+
+    def side(bands, s):
+        return bands.select(
+            F.col("id").alias(f"{s}_id"), "band", "bhash",
+            F.col("nsz").alias(f"__n{s}"),
+        )
+
+    b = side(new_bands, "b")
+    cand = capped_band_join(side(new_bands, "a"), b, symmetric=True).filter(
+        F.col("a_id") < F.col("b_id")
+    )
+    if old_bands is not None:
+        cross = capped_band_join(side(old_bands, "a"), b).filter(
+            F.col("a_id") != F.col("b_id")
+        )
+        cand = cand.unionByName(
+            cross.select(
+                F.least("a_id", "b_id").alias("a_id"),
+                F.greatest("a_id", "b_id").alias("b_id"),
+                "__na",
+                "__nb",
+            )
+        )
+    cand = cand.filter(
+        F.least("__na", "__nb") / F.greatest("__na", "__nb") >= threshold
+    ).select("a_id", "b_id")
+    return verify_pairs(
+        cand if fused else distinct_pairs(cand), items, threshold, fused=fused
+    )
+
+
+def expand_members(
+    set_pairs: DataFrame,
+    new_members: DataFrame,
+    old_members: DataFrame | None = None,
+) -> DataFrame:
+    """Document pairs (a_id < b_id, ji) from verified set pairs: each
+    member of a set pairs with every member of each verified partner
+    set at the set pair's ji, and with every other member of its own
+    set at ji 1.0 (identical item sets).
+
+    ``set_pairs`` is (a_id, b_id, ji) over set ids; members are
+    (id, set) rows. Only pairs with at least one NEW member are
+    emitted — a pair of two ``old_members`` was emitted when the later
+    of them arrived. A pair of two new members is reachable from both
+    of its ends, so only the canonical end (lower set id, or lower doc
+    id within one set) emits it: every pair comes out exactly once.
+    Output-bound equi-joins: the rows joined are the rows emitted."""
+    if not set_pairs.isStreaming:
+        # both orientations below read the set pairs — run the
+        # candidate join and verify once, not twice
+        set_pairs = set_pairs.localCheckpoint(eager=False)
+    partners = set_pairs.select(
+        F.col("a_id").alias("__sa"), F.col("b_id").alias("__sb"), "ji"
+    )
+    partners = partners.unionByName(
+        partners.select(
+            F.col("__sb").alias("__sa"), F.col("__sa").alias("__sb"), "ji"
+        )
+    )
+    everyone = new_members.withColumn("__new", F.lit(True))
+    if old_members is not None:
+        everyone = everyone.unionByName(
+            old_members.withColumn("__new", F.lit(False))
+        )
+    new = new_members.select(F.col("id").alias("__x"), F.col("set").alias("__sa"))
+    other = everyone.select(
+        F.col("id").alias("__y"), F.col("set").alias("__sb"), "__new"
+    )
+    cross = (
+        new.join(partners, "__sa")
+        .join(other, "__sb")
+        .filter(~F.col("__new") | (F.col("__sa") < F.col("__sb")))
+    )
+    same = (
+        new.join(other, F.col("__sa") == F.col("__sb"))
+        .filter(~F.col("__new") | (F.col("__x") < F.col("__y")))
+        .withColumn("ji", F.lit(1.0))
+    )
+    return cross.unionByName(same).select(
+        F.least("__x", "__y").alias("a_id"),
+        F.greatest("__x", "__y").alias("b_id"),
+        "ji",
     )
 
 
@@ -737,64 +831,42 @@ def minhash_lsh_dedup(
 ) -> DataFrame:
     """Near-duplicate pairs with exact JI ≥ threshold, found via
     MinHash-LSH candidates + exact verify. Banding adapts to the
-    threshold (pick_lsh_bands) so the miss probability at JI=threshold
-    stays ≤ 1e-8 — at the 0.9 default that is r=4/b=32 (miss ≈ 1e-15).
+    threshold (:func:`pick_lsh_banding`: the fewest bands whose miss
+    probability at JI=threshold stays ≤ 1e-8) — at the 0.9 default
+    with the 264-hash budget that is r=8/b=33 (miss ≈ 8.5e-9).
 
-    Exact-duplicate sets are clustered FIRST (one md5-of-sorted-shingles
-    groupBy — the production exact-then-near dedup layout): Jaccard
-    depends only on the shingle set, so every member of a cluster is
-    equivalent, the quadratic LSH machinery runs on one representative
-    per distinct set, and member pairs are reconstructed by output-bound
-    equi-joins afterwards. On web corpora, where boilerplate clusters
-    are huge, this shrinks the candidate join quadratically; the md5 key
-    also replaces the wide sorted-array shuffle key.
+    Exact-duplicate sets are clustered FIRST (one :func:`set_key`
+    window — the production exact-then-near dedup layout): Jaccard
+    depends only on the item set, so every member of a set is
+    equivalent. The quadratic LSH machinery runs on one representative
+    per distinct set (its min doc id) through :func:`set_pairs`, and
+    :func:`expand_members` rebuilds the member pairs. On web corpora,
+    where boilerplate clusters are huge, this shrinks the candidate
+    join quadratically.
 
     ``char_n`` switches the item universe from word w-shingles to
-    character n-grams (the `ngram_jaccard_pairs` path rides this same
-    clustered pipeline).
-
-    Verify placement adapts to the rep-item-table size (one tiny agg
-    action at plan-build time): when the (rep_id, items) table fits
-    FUSED_VERIFY_BROADCAST_BYTES it is broadcast and the exact verify
-    runs INSIDE the candidate join's reduce stage, BEFORE any distinct
-    — the candidate mass (dominated by sub-threshold pairs that
-    collide in some band) then never crosses an exchange; only the few
-    verified survivors are deduplicated. Measured 229 s -> 58 s on the
-    candidate+verify core at 50k docs (tools/probe_q7_fused.py).
-    Beyond the cap the scale-safe distinct-first plan is kept (the
-    attach joins would otherwise shuffle the full candidate stream by
-    id)."""
-    item_set = (
-        _char_gram_set_expr(text_col, char_n)
-        if char_n is not None
-        else _shingle_set_expr(text_col, shingle_w)
+    character n-grams (the `ngram_jaccard_pairs` clustered path rides
+    this pipeline). Verify placement is :func:`fused_verify`'s: on
+    small word sets the fused verify measured 229 s -> 58 s on the
+    candidate+verify core at 50k docs (OPTIMIZATION_r07.md)."""
+    docs = hashed_item_sets(
+        df, id_col, text_col=text_col, shingle_w=shingle_w, char_n=char_n
+    ).filter(F.size("items") > 0)  # empty-set docs have undefined JI
+    # a doc's set id is its set's min doc id: the representative
+    members = docs.select(
+        "id",
+        F.min("id").over(Window.partitionBy(set_key("items"))).alias("set"),
+        F.size("items").alias("nsz"),
     )
-    sets = df.select(
-        F.col(id_col).alias("__id"),
-        _set_digest_expr(F.sort_array(item_set)).alias("__sk"),
-        F.size(item_set).alias("__nitems"),
-    ).filter(F.col("__nitems") > 0)  # empty-set docs have undefined JI
-    if not sets.isStreaming:
-        # consumed by intra (x2), reps, and the member expansion (x2) —
-        # one digest scan instead of five
-        sets = sets.localCheckpoint(eager=False)
-    # intra-cluster pairs: identical shingle sets ⇒ JI exactly 1
-    s_a = sets.select(F.col("__id").alias("a_id"), "__sk")
-    s_b = sets.select(F.col("__id").alias("b_id"), "__sk")
-    intra = (
-        s_a.join(s_b, "__sk")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", F.lit(1.0).alias("ji"))
+    if not members.isStreaming:
+        # read by the reps and both sides of the member expansion
+        members = members.localCheckpoint(eager=False)
+    reps = members.filter(F.col("id") == F.col("set")).select("id", "nsz")
+    rep_docs = df.join(
+        reps.select(F.col("id").alias("__rep")),
+        F.col(id_col) == F.col("__rep"),
+        "left_semi",
     )
-    if threshold > 1.0:
-        intra = intra.filter(F.lit(False))
-    # LSH + exact verify over one representative per distinct set
-    # every member of a cluster shares the item set, so any member's
-    # __nitems is the rep's size — carried here for the prefilter below
-    reps = sets.groupBy("__sk").agg(
-        F.min("__id").alias("rep_id"), F.first("__nitems").alias("__nsz")
-    )
-    rep_docs = df.join(reps, df[id_col] == reps["rep_id"], "left_semi")
     if bands is None:
         # minimal banding: same r and miss bound as pick_lsh_bands but
         # no bands beyond the bound — each surplus band re-emits the
@@ -803,64 +875,21 @@ def minhash_lsh_dedup(
     sigs = minhash_signatures(
         rep_docs, id_col, text_col, n_hashes, shingle_w, char_n=char_n
     )
-    if not sigs.isStreaming:
-        # consumed by the band rows AND (fused path) the band-array
-        # broadcast — one signature kernel pass, not two
-        sigs = sigs.localCheckpoint(eager=False)
-    # exact size-ratio prefilter: JI <= min/max set size, so pairs
-    # failing the ratio at `threshold` can never survive the verify
-    # (slack 2 absorbs any in-set 64-bit hash collisions in the
-    # verifier's hashed sizes); measured 2x less candidate pair mass
-    # through the distinct on the sf1.0 near-dup corpus
-    rep_sizes = reps.select(F.col("rep_id").alias(id_col), "__nsz")
-    # verify placement: broadcast-fused when the rep item table is
-    # small (estimate: 24 B/row + 8 B/item, from the same agg that
-    # seeds the prefilter sizes), distinct-first otherwise
-    n_reps, sum_sz = reps.agg(
-        F.count("*"), F.coalesce(F.sum("__nsz"), F.lit(0))
-    ).first()
-    fused = (24 * n_reps + 8 * sum_sz) <= FUSED_VERIFY_BROADCAST_BYTES and (
-        sum_sz <= FUSED_VERIFY_MAX_AVG_ITEMS * max(n_reps, 1)
+    rep_bands = lsh_band_rows(
+        sigs, id_col, n_hashes=n_hashes, bands=bands
+    ).withColumnRenamed(id_col, "id")
+    if not rep_bands.isStreaming:
+        # the capped join's sizing/routing branches read the band rows
+        # 4-6 times — one signature kernel pass, not one per branch
+        rep_bands = rep_bands.localCheckpoint(eager=False)
+    rep_items = hashed_item_sets(
+        rep_docs, id_col, text_col=text_col, shingle_w=shingle_w, char_n=char_n
     )
-    if fused:
-        raw_cands = lsh_candidate_pairs(
-            sigs, id_col, n_hashes=n_hashes, bands=bands,
-            sizes=rep_sizes, size_ratio=threshold, size_slack=2, raw=True,
-        )
-        rep_items = hashed_item_sets(
-            rep_docs, id_col, text_col=text_col,
-            shingle_w=shingle_w, char_n=char_n,
-        )
-        rep_pairs = verify_ji_broadcast(
-            raw_cands, rep_items, threshold
-        ).dropDuplicates(["a_id", "b_id"])
-    else:
-        cands = lsh_candidate_pairs(
-            sigs, id_col, n_hashes=n_hashes, bands=bands,
-            sizes=rep_sizes, size_ratio=threshold, size_slack=2,
-        )
-        rep_pairs = exact_ji_for_pairs(
-            rep_docs, cands, id_col, text_col, shingle_w, char_n=char_n
-        ).filter(F.col("ji") >= threshold)
-    # expand representative pairs to all member pairs (clusters disjoint,
-    # so no overlap with intra and no duplicates)
-    rk = reps.select(F.col("rep_id"), F.col("__sk"))
-    keyed = (
-        rep_pairs.join(rk.withColumnRenamed("__sk", "__sk_a"), F.col("a_id") == F.col("rep_id"))
-        .drop("rep_id", "a_id")
-        .join(rk.withColumnRenamed("__sk", "__sk_b"), F.col("b_id") == F.col("rep_id"))
-        .drop("rep_id", "b_id")
+    pairs = set_pairs(rep_bands.join(reps, "id"), items=rep_items, threshold=threshold)
+    # the filter keeps threshold > 1 pair-free, identical sets included
+    return expand_members(pairs, members.select("id", "set")).filter(
+        F.col("ji") >= threshold
     )
-    cross = (
-        keyed.join(sets.select(F.col("__id").alias("ma"), F.col("__sk").alias("__sk_a")), "__sk_a")
-        .join(sets.select(F.col("__id").alias("mb"), F.col("__sk").alias("__sk_b")), "__sk_b")
-        .select(
-            F.least("ma", "mb").alias("a_id"),
-            F.greatest("ma", "mb").alias("b_id"),
-            "ji",
-        )
-    )
-    return intra.unionByName(cross)
 
 
 # ---------------------------------------------------------------- SimHash
@@ -1011,7 +1040,7 @@ def ngram_jaccard_pairs(
     Candidates come from char-gram MinHash-LSH (r=2 rows/band, b=64
     bands: miss probability at JI=t is (1−t²)⁶⁴ — 1.005e−8 at t=0.5
     (within pick_lsh_bands' 1.05× slack), ≤4e−13 at t=0.6); the JI
-    emitted is EXACT (array_intersect verify with codepoint substring
+    emitted is EXACT (item-array verify with codepoint substring
     semantics, matching the codepoint-gram signatures). A direct gram-level equi-join is not used: its
     output is O(Σ per-gram df²), which a single stopword-like gram melts
     down (measured 2.2e9 joined rows on the 5k-doc fixture, where a df
@@ -1047,39 +1076,33 @@ def ngram_jaccard_pairs(
     sigs = minhash_signatures(df, id_col, text_col, n_hashes=n_used, char_n=n)
     if not sigs.isStreaming:
         sigs = sigs.localCheckpoint(eager=False)
-    # fused-verify dispatch (as in minhash_lsh_dedup): the char-gram
-    # set size is bounded by the text length, so one cheap scan bounds
-    # the item-table bytes without building the gram sets twice
-    n_docs, sum_len = df.agg(
-        F.count("*"), F.coalesce(F.sum(F.length(text_col)), F.lit(0))
-    ).first()
-    fused = (24 * n_docs + 8 * sum_len) <= FUSED_VERIFY_BROADCAST_BYTES and (
-        sum_len <= FUSED_VERIFY_MAX_AVG_ITEMS * max(n_docs, 1)
-    )
+    # the char-gram set size is bounded by the text length, so the
+    # placement probe sizes the item table without building gram sets
+    fused = fused_verify(df, F.length(text_col))
     cands = lsh_candidate_pairs(
         sigs, id_col, n_hashes=n_used, bands=bands_n, raw=fused
     )
     if block_cols:
         keys = df.select(F.col(id_col).alias("__bid"), *block_cols)
-        a_keys = keys.select(
-            F.col("__bid").alias("a_id"), *[F.col(c).alias(f"__a_{c}") for c in block_cols]
-        )
-        b_keys = keys.select(
-            F.col("__bid").alias("b_id"), *[F.col(c).alias(f"__b_{c}") for c in block_cols]
-        )
         if fused:
-            a_keys, b_keys = F.broadcast(a_keys), F.broadcast(b_keys)
-        cands = cands.join(a_keys, "a_id").join(b_keys, "b_id")
+            keys = F.broadcast(keys)
+        for s in ("a", "b"):
+            cands = cands.join(
+                keys.select(
+                    F.col("__bid").alias(f"{s}_id"),
+                    *[F.col(c).alias(f"__{s}_{c}") for c in block_cols],
+                ),
+                f"{s}_id",
+            )
         for c in block_cols:
             cands = cands.filter(F.col(f"__a_{c}") == F.col(f"__b_{c}"))
         cands = cands.select("a_id", "b_id")
-    if fused:
-        items = hashed_item_sets(df, id_col, text_col=text_col, char_n=n)
-        return verify_ji_broadcast(cands, items, threshold).dropDuplicates(
-            ["a_id", "b_id"]
-        )
-    ji = exact_ji_for_pairs(df, cands, id_col, text_col, char_n=n)
-    return ji.filter(F.col("ji") >= threshold)
+    # distinct-first: only candidate docs build their gram sets
+    items = hashed_item_sets(
+        df if fused else _candidate_docs(df, cands, id_col), id_col,
+        text_col=text_col, char_n=n,
+    )
+    return verify_pairs(cands, items, threshold, fused=fused)
 
 
 # ---------------------------------------------------------------- components

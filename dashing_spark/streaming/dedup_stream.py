@@ -15,30 +15,31 @@ shrinks the pair mass quadratically: measured 104.6e6 member pairs from
 
 - ``sets_epoch_{id}``: (sk, signature array<long>, items array<long>,
   nsz, member_ids array<long>) — one row per distinct item set among
-  this epoch's NEW docs (sk = md5 over the sorted item hashes), with
-  the epoch's member doc ids inline. A set with new members in several
-  epochs appears in each, carrying THAT epoch's members — so each
-  epoch dir is self-contained and TTL expiry of whole epochs keeps
-  exact per-DOC window semantics (a set stays matchable exactly while
-  some live epoch carries a member of it);
+  this epoch's NEW docs (sk = :func:`dedup.set_key`, the 16-byte binary
+  md5 over the sorted item hashes), with the epoch's member doc ids
+  inline. A set with new members in several epochs appears in each,
+  carrying THAT epoch's members — so each epoch dir is self-contained
+  and TTL expiry of whole epochs keeps exact per-DOC window semantics
+  (a set stays matchable exactly while some live epoch carries a
+  member of it);
 - ``pairs_epoch_{id}``: (a_id, b_id, ji) — pairs found this epoch.
 
-Member rows and band rows are DERIVED (explode / 33 deterministic
-xxhash64 per set), never stored: one state write+read per epoch beside
-the pairs, and the index scan reads one pre-collapsed table.
+Member rows and band rows are DERIVED (explode / one deterministic
+xxhash64 per band per set), never stored: one state write+read per
+epoch beside the pairs, and the index scan reads one pre-collapsed
+table.
 
 Per micro-batch the work is: signatures/items/sk for the batch docs
-(O(batch)), a band-key equi-join of the batch's distinct-set bands
-against the committed band index (shuffle bounded by colliding keys,
-the LSH guarantee), the batch's internal set-level self-join, the exact
-item-array verify on SET pairs only, then member expansion joins whose
-output is exactly the emitted pair rows. Cross-epoch duplicate set/band
-rows only add candidate emissions (removed by the set-level distinct or
-recomputed-identical verify rows) and are deduplicated by ``sk`` before
-any item attach. Nothing is ever rewritten — state grows append-only
-by one epoch directory per batch, so per-epoch cost is independent of
-corpus age (at 100 TB the band index would be a bucketed table on
-(band, bhash) so the join prunes to matching buckets).
+(O(batch)), then the set-level core shared with the batch operator —
+:func:`dedup.set_pairs` (the batch's distinct-set bands joined against
+themselves and against the committed index, exact size-ratio
+prefilter, exact item-array verify on SET pairs only) and
+:func:`dedup.expand_members` (member expansion joins whose output is
+exactly the emitted pair rows). Nothing is ever rewritten — state
+grows append-only by one epoch directory per batch, so per-epoch cost
+is independent of corpus age (at 100 TB the band index would be a
+bucketed table on (band, bhash) so the join prunes to matching
+buckets).
 
 Exactness: signatures and band keys are deterministic pure functions of
 the document text (counter-based randomness, no RNG state), so a pair
@@ -53,10 +54,18 @@ table): epoch dirs are written first, the manifest append is committed
 with an atomic rename, and a foreachBatch retry of a committed epoch is
 a no-op. A crash mid-epoch leaves unreferenced (and deterministically
 rebuilt) directories, never a half-counted pair.
+
+The first commit also writes a ``_LAYOUT`` record (layout version, set
+key scheme, n_hashes and bands after banding, threshold, shingle_w,
+char_n). Every later epoch refuses with ``ValueError`` to resume a
+state_dir whose record differs, or whose manifest has committed epochs
+but no record (state of an older layout): resuming either would match
+against keys this run never produces and silently miss duplicates.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Sequence
 
@@ -65,27 +74,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from dashing_spark.operators import dedup
 
 _MANIFEST = "_EPOCHS"
-
-
-def _dbg_t():
-    import time
-
-    return time.time()
-
-
-def _dbg(epoch_id, stage, t0):
-    """Per-stage epoch timing on stderr when SPARK_GRAFT_DD_DEBUG=1 —
-    measurement aid (guide §1), no cost when unset."""
-    if os.environ.get("SPARK_GRAFT_DD_DEBUG") == "1":
-        import sys
-        import time
-
-        now = time.time()
-        print(
-            f"[dd epoch {epoch_id}] {stage}: {now - t0:.2f}s (at {now % 10000:.2f})",
-            file=sys.stderr,
-            flush=True,
-        )
+_LAYOUT = "_LAYOUT"
+#: bumped whenever the persisted tables or the set key change shape
+_LAYOUT_VERSION = 1
+#: per-epoch table prefixes (``{prefix}_epoch_{token}`` directories)
+_PREFIXES = ("sets", "pairs")
 
 
 def _manifest_tokens(state_dir: str) -> list[str]:
@@ -111,17 +104,45 @@ def committed_epochs(state_dir: str) -> list[int]:
     return [_token_epoch(t) for t in _manifest_tokens(state_dir)]
 
 
+def _atomic_write(path: str, text: str) -> None:
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
 def _write_manifest(state_dir: str, tokens: list[str]) -> None:
     """Atomic rewrite (write-then-rename) — the manifest is the single
     source of truth; directories it doesn't reference are garbage."""
-    tmp = os.path.join(state_dir, f"{_MANIFEST}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(tokens))
-    os.replace(tmp, os.path.join(state_dir, _MANIFEST))
+    _atomic_write(os.path.join(state_dir, _MANIFEST), "\n".join(tokens))
 
 
-def _commit_epoch(state_dir: str, epoch_id: int) -> None:
-    """Atomically append an epoch id."""
+def _check_layout(state_dir: str, tokens: list[str], layout: dict) -> None:
+    """Refuse a state_dir written under another layout or other
+    parameters: its set keys, band keys or threshold would silently
+    disagree with this run's, and matching would go quietly wrong."""
+    path = os.path.join(state_dir, _LAYOUT)
+    if os.path.exists(path):
+        with open(path) as fh:
+            have = json.load(fh)
+        if have != layout:
+            raise ValueError(
+                f"{state_dir} holds dedup state of layout {have}, this "
+                f"run needs {layout}: use a fresh state_dir"
+            )
+    elif tokens:
+        raise ValueError(
+            f"{state_dir} has committed epochs {tokens} but no {_LAYOUT}: "
+            "state of an older, incompatible layout; use a fresh state_dir"
+        )
+
+
+def _commit_epoch(state_dir: str, epoch_id: int, layout: dict) -> None:
+    """Atomically append an epoch id. The first commit writes the
+    layout record first, so committed epochs never lack one."""
+    path = os.path.join(state_dir, _LAYOUT)
+    if not os.path.exists(path):
+        _atomic_write(path, json.dumps(layout))
     _write_manifest(state_dir, _manifest_tokens(state_dir) + [str(epoch_id)])
 
 
@@ -133,6 +154,13 @@ def _epoch_union(
     if not paths:
         return None
     return spark.read.parquet(*paths)
+
+
+def _members(sets_df: DataFrame) -> DataFrame:
+    """(id, set) member rows of a sets table."""
+    return sets_df.select(
+        F.explode("member_ids").alias("id"), F.col("sk").alias("set")
+    )
 
 
 def apply_dedup_batch(
@@ -177,7 +205,22 @@ def apply_dedup_batch(
         raise ValueError(f"ttl_epochs must be >= 1, got {ttl_epochs}")
     if max_segments is not None and max_segments < 2:
         raise ValueError(f"max_segments must be >= 2, got {max_segments}")
-    t_entry = _dbg_t()
+    # minimal banding (same r / miss bound as pick_lsh_bands, fewest
+    # bands): deterministic in (n_hashes, threshold), so every epoch of
+    # a state_dir bands identically and cross-epoch collisions keep the
+    # batch-run equivalence the module docstring pins
+    bands_n, n_hashes = dedup.pick_lsh_banding(n_hashes, threshold)
+    layout = {
+        "version": _LAYOUT_VERSION,
+        "set_key": "unhex(md5(sorted int64 item hashes))",
+        "n_hashes": n_hashes,
+        "bands": bands_n,
+        "threshold": threshold,
+        "shingle_w": shingle_w,
+        "char_n": char_n,
+    }
+    tokens = _manifest_tokens(state_dir)
+    _check_layout(state_dir, tokens, layout)
     if batch_df.isEmpty():
         # an empty epoch still advances the TTL horizon: docs older
         # than the window must stop matching (and their pair files age
@@ -189,7 +232,6 @@ def apply_dedup_batch(
         if ttl_epochs is not None:
             expire_epochs(state_dir, min_epoch=epoch_id - ttl_epochs + 1)
         return
-    tokens = _manifest_tokens(state_dir)
     done = [_token_epoch(t) for t in tokens]
     if done and epoch_id <= max(done):
         if epoch_id == max(done):
@@ -204,12 +246,6 @@ def apply_dedup_batch(
             f"{state_dir}: state_dir/checkpoint_dir mismatch"
         )
     spark = batch_df.sparkSession
-    # minimal banding (same r / miss bound as pick_lsh_bands, fewest
-    # bands): deterministic in (n_hashes, threshold), so every epoch of
-    # a state_dir bands identically and cross-epoch collisions keep the
-    # batch-run equivalence the module docstring pins
-    bands_n, n_hashes = dedup.pick_lsh_banding(n_hashes, threshold)
-
     sigs = dedup.minhash_signatures(
         batch_df, id_col, text_col, n_hashes=n_hashes,
         shingle_w=shingle_w, char_n=char_n,
@@ -219,36 +255,20 @@ def apply_dedup_batch(
     )
     # empty item sets carry the all-sentinel signature and would collide
     # pairwise in every band — same filter as the batch operator.
-    # sk: md5 over the sorted item hashes — identical sets (hence
-    # identical signatures: a MinHash is a pure function of the set)
-    # collapse to one matching unit
+    # Identical sets (hence identical signatures: a MinHash is a pure
+    # function of the set) collapse to one matching unit by set key
     new_docs = (
         sigs.join(items, "id")
         .filter(F.size("items") > 0)
-        .select(
-            "id",
-            "signature",
-            "items",
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.sort_array("items"), lambda x: x.cast("string")
-                    ),
-                )
-            ).alias("sk"),
-        )
+        .select("id", "signature", "items", dedup.set_key("items").alias("sk"))
         # at-least-once sources can redeliver a document: within the
         # batch keep one row per id, and drop ids the index already
         # holds — re-indexing would emit self-pairs and duplicate rows
         # in every later expansion join
         .dropDuplicates(["id"])
     )
-    old_sets_pre = _epoch_union(spark, state_dir, "sets", tokens)
-    _members = lambda sets_df: sets_df.select(  # noqa: E731
-        F.explode("member_ids").alias("id"), "sk"
-    )
-    old_members = None if old_sets_pre is None else _members(old_sets_pre)
+    old_sets = _epoch_union(spark, state_dir, "sets", tokens)
+    old_members = None if old_sets is None else _members(old_sets)
     if old_members is not None:
         new_docs = new_docs.join(
             old_members.select("id"), "id", "left_anti"
@@ -264,199 +284,52 @@ def apply_dedup_batch(
         F.collect_list("id").alias("member_ids"),
     )
     sets_out = os.path.join(state_dir, f"sets_epoch_{epoch_id}")
-    t0 = _dbg_t()
     new_sets.write.mode("overwrite").parquet(sets_out)
     new_sets = spark.read.parquet(sets_out)  # cut lineage; reuse below
-    _dbg(epoch_id, "write sets", t0)
-    new_members = _members(new_sets)
 
-    # band rows are DERIVED from the sets tables (33 xxhash64 per set
-    # row), never stored: the index scan reads one pre-collapsed table
-    # per epoch and the per-epoch bands write+read of the first r7 cut
-    # (one more file pair per epoch, pure overhead at small batches) is
-    # gone. lsh_band_rows is deterministic in the signature, so derived
-    # band keys collide across epochs exactly like stored ones did.
+    # band rows are DERIVED from the sets tables (one xxhash64 per band
+    # per set row), never stored: band keys are deterministic in the
+    # signature, so derived band keys collide across epochs exactly
+    # like stored ones would. Set candidates: batch sets vs (batch ∪
+    # index) sets; the item table is deduplicated by sk so a set
+    # re-written by several epochs attaches exactly one items row.
     def _bands_of(sets_df):
-        return dedup.lsh_band_rows(
-            sets_df.select("sk", "signature"), "sk",
-            n_hashes=n_hashes, bands=bands_n,
-        ).join(sets_df.select("sk", "nsz"), "sk")
-
-    new_bands = _bands_of(new_sets)
-    # set-level candidates: batch sets vs (batch ∪ index) sets, both
-    # joins through the skew-safe capped band join (a template family
-    # — many DISTINCT near-identical sets — still piles onto one
-    # (band, bhash) bucket; identical sets no longer contribute at
-    # all). Band rows carry the set size so the EXACT ratio bound
-    # (JI <= min/max size) drops provably-sub-threshold pairs before
-    # the distinct; sizes come from the very arrays the verify
-    # intersects, so no slack is needed.
-    ratio_keep = F.least("__na", "__nb") >= F.greatest("__na", "__nb") * F.lit(
-        float(threshold)
-    )
-    a = new_bands.select(
-        F.col("sk").alias("a_id"), "band", "bhash", F.col("nsz").alias("__na")
-    )
-    b = new_bands.select(
-        F.col("sk").alias("b_id"), "band", "bhash", F.col("nsz").alias("__nb")
-    )
-    cand = dedup.capped_band_join(a, b, symmetric=True).filter(
-        (F.col("a_id") < F.col("b_id")) & ratio_keep
-    ).select("a_id", "b_id")
-    old_sets = old_sets_pre
-    if old_sets is not None:
-        cross = dedup.capped_band_join(
-            _bands_of(old_sets).select(
-                F.col("sk").alias("a_id"), "band", "bhash",
-                F.col("nsz").alias("__na"),
+        return sets_df.select(
+            F.col("sk").alias("id"),
+            "nsz",
+            F.posexplode(dedup.band_hash_array(n_hashes, bands_n)).alias(
+                "band", "bhash"
             ),
-            b,
-        )
-        cand = cand.unionByName(
-            cross.filter((F.col("a_id") != F.col("b_id")) & ratio_keep).select(
-                F.least("a_id", "b_id").alias("a_id"),
-                F.greatest("a_id", "b_id").alias("b_id"),
-            )
         )
 
-    # exact verify on SET pairs (item arrays attached by sk; the union
-    # is deduplicated — a set re-written by several epochs must attach
-    # exactly one items row). Verify placement follows the batch
-    # operator's dispatch: broadcast-fused before any distinct when the
-    # set table is small with small sets, distinct-first otherwise. The
-    # surviving set pairs are deduplicated either way: a set living in
-    # both the index and this batch meets its partners through BOTH
-    # the self- and the cross-join.
     all_sets = (
         new_sets
         if old_sets is None
         else new_sets.unionByName(old_sets).dropDuplicates(["sk"])
-    ).select(F.col("sk").alias("id"), "items", "nsz")
-    t0 = _dbg_t()
-    n_sets, sum_sz = all_sets.agg(
-        F.count("*"), F.coalesce(F.sum("nsz"), F.lit(0))
-    ).first()
-    _dbg(epoch_id, "sets size agg", t0)
-    fused = (
-        24 * n_sets + 8 * sum_sz
-    ) <= dedup.FUSED_VERIFY_BROADCAST_BYTES and (
-        sum_sz <= dedup.FUSED_VERIFY_MAX_AVG_ITEMS * max(n_sets, 1)
     )
-    if fused:
-        set_pairs = dedup.verify_ji_broadcast(
-            cand, all_sets, threshold
-        ).dropDuplicates(["a_id", "b_id"])
-    else:
-        set_pairs = (
-            dedup.distinct_pairs(cand)
-            .join(
-                all_sets.select(
-                    F.col("id").alias("a_id"), F.col("items").alias("a_items")
-                ),
-                "a_id",
-            )
-            .join(
-                all_sets.select(
-                    F.col("id").alias("b_id"), F.col("items").alias("b_items")
-                ),
-                "b_id",
-            )
-            .withColumn("t2", F.size(F.array_intersect("a_items", "b_items")))
-            .withColumn(
-                "ji",
-                F.col("t2").cast("double")
-                / (F.size("a_items") + F.size("b_items") - F.col("t2")),
-            )
-            .filter(F.col("ji") >= threshold)
-            .select("a_id", "b_id", "ji")
-        )
-    set_pairs = set_pairs.select(
-        F.col("a_id").alias("sk_a"), F.col("b_id").alias("sk_b"), "ji"
+    pairs = dedup.set_pairs(
+        _bands_of(new_sets),
+        None if old_sets is None else _bands_of(old_sets),
+        items=all_sets.select(F.col("sk").alias("id"), "items"),
+        threshold=threshold,
     )
-    # the expansion below references set_pairs three times (direct +
-    # both vsym orientations) — checkpoint so the candidate join +
-    # verify execute ONCE per epoch, not once per consumer
-    set_pairs = set_pairs.localCheckpoint(eager=False)
-
-    # member expansion — ONE pair of output-bound equi-joins
-    # reconstructing exactly the per-doc pair emissions this epoch's
-    # arrivals cause. Partner relation = both orientations of the
-    # verified set pairs PLUS the identity (sk, sk, ji=1.0) of each
-    # batch set; the other side holds old ∪ new members tagged. A pair
-    # (x new, y) is emitted when y is old (always — the cross/同-set
-    # channel of earlier epochs), or when y is also new and (sk, id)
-    # is canonically ordered — so a both-new pair, reachable through
-    # both orientations, is emitted exactly once.
-    mn = new_members.select(F.col("id").alias("__nid"), F.col("sk"))
-    vsym = set_pairs.unionByName(
-        set_pairs.select(
-            F.col("sk_b").alias("sk_a"), F.col("sk_a").alias("sk_b"), "ji"
-        )
-    )
-    vplus = vsym.unionByName(
-        new_sets.select(
-            F.col("sk").alias("sk_a"), F.col("sk").alias("sk_b"),
-            F.lit(1.0).alias("ji"),
-        )
-    )
-    m_all = new_members.select("id", "sk", F.lit(True).alias("__new"))
-    if old_members is not None:
-        m_all = m_all.unionByName(
-            old_members.select("id", "sk", F.lit(False).alias("__new"))
-        )
-    emitted = (
-        mn.withColumnRenamed("sk", "sk_a")
-        .join(vplus, "sk_a")
-        .join(
-            m_all.select(
-                F.col("id").alias("__mid"), F.col("sk").alias("sk_b"), "__new"
-            ),
-            "sk_b",
-        )
-        .filter(
-            (~F.col("__new"))
-            | (F.col("sk_a") < F.col("sk_b"))
-            | ((F.col("sk_a") == F.col("sk_b")) & (F.col("__nid") < F.col("__mid")))
-        )
-        .select(
-            F.least("__nid", "__mid").alias("a_id"),
-            F.greatest("__nid", "__mid").alias("b_id"),
-            "ji",
-        )
-    )
-    _dbg(epoch_id, "plan build (since entry)", t_entry)
-    explain_dir = os.environ.get("SPARK_GRAFT_DD_EXPLAIN")
-    if explain_dir:
-        # measurement aid: dump this epoch's emitted-pairs physical plan
-        # (the real plan, not a reconstruction) for plans/r07 evidence
-        with open(
-            os.path.join(explain_dir, f"dd_epoch_{epoch_id}_plan.txt"), "w"
-        ) as fh:
-            fh.write(
-                emitted._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                    emitted._jdf.queryExecution(), "formatted"
-                )
-            )
-    t0 = _dbg_t()
+    emitted = dedup.expand_members(pairs, _members(new_sets), old_members)
     emitted.write.mode("overwrite").parquet(
         os.path.join(state_dir, f"pairs_epoch_{epoch_id}")
     )
-    _dbg(epoch_id, "verify+expand+write pairs", t0)
-    _commit_epoch(state_dir, epoch_id)
+    _commit_epoch(state_dir, epoch_id, layout)
     if ttl_epochs is not None:
         expire_epochs(state_dir, min_epoch=epoch_id - ttl_epochs + 1)
     if max_segments is not None and len(_manifest_tokens(state_dir)) > max_segments:
         # with a TTL active, never re-absorb existing segments: folding
         # a segment forward re-stamps its docs with a newer max epoch,
         # so it would never age past the horizon (see compact_index)
-        t0 = _dbg_t()
         compact_index(
             spark,
             state_dir,
             keep_last=max_segments // 2,
             absorb_compacted=ttl_epochs is None,
         )
-        _dbg(epoch_id, "compact_index", t0)
 
 
 def incremental_dedup_query(
@@ -565,7 +438,7 @@ def compact_index(
         raise ValueError(
             f"compacted segment {target} already exists in {tokens}"
         )
-    for prefix in ("sets", "members", "pairs"):
+    for prefix in _PREFIXES:
         merged = _epoch_union(spark, state_dir, prefix, merge)
         out = os.path.join(state_dir, f"{prefix}_epoch_{target}")
         if merged is None:
@@ -595,7 +468,7 @@ def compact_index(
     # the new one: every epoch they cover precedes the merge set's
     _write_manifest(state_dir, retained_c + [target] + kept)
     for t in merge:  # best-effort: unreferenced after the atomic rewrite
-        for prefix in ("sets", "members", "pairs"):
+        for prefix in _PREFIXES:
             shutil.rmtree(
                 os.path.join(state_dir, f"{prefix}_epoch_{t}"),
                 ignore_errors=True,
@@ -620,7 +493,7 @@ def expire_epochs(state_dir: str, min_epoch: int) -> list[str]:
         return []
     _write_manifest(state_dir, [t for t in tokens if t not in dropped])
     for t in dropped:  # best-effort: unreferenced after the rewrite
-        for prefix in ("sets", "members", "pairs"):
+        for prefix in _PREFIXES:
             shutil.rmtree(
                 os.path.join(state_dir, f"{prefix}_epoch_{t}"),
                 ignore_errors=True,

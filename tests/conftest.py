@@ -32,3 +32,24 @@ def spark():
 @pytest.fixture(scope="session")
 def rng():
     return np.random.default_rng(42)
+
+
+@pytest.fixture(params=["fused", "distinct_first"])
+def verify_placement(request, monkeypatch):
+    """Run a near-dup test under each exact-verify placement. The
+    distinct-first plan is forced by a zero broadcast cap; the returned
+    list records every placement decision taken (True = fused), so a
+    test can assert that the placement it asked for really ran."""
+    from dashing_spark.operators import dedup
+
+    if request.param == "distinct_first":
+        monkeypatch.setattr(dedup, "FUSED_VERIFY_BROADCAST_BYTES", 0)
+    decided = []
+    decide = dedup.fused_verify
+
+    def recording(*args):
+        decided.append(decide(*args))
+        return decided[-1]
+
+    monkeypatch.setattr(dedup, "fused_verify", recording)
+    return request.param, decided

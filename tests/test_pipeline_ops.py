@@ -25,7 +25,7 @@ def emb(spark):
 
 
 class TestDedup:
-    def test_minhash_lsh_recall_vs_exact(self, spark, docs):
+    def test_minhash_lsh_recall_vs_exact(self, spark, docs, verify_placement):
         found = {
             (r["a_id"], r["b_id"])
             for r in dedup.minhash_lsh_dedup(docs, "doc_id", threshold=0.9).collect()
@@ -51,6 +51,8 @@ class TestDedup:
         )
         truth = {(r["a_id"], r["b_id"]) for r in exact.collect()}
         assert found == truth  # verify stage ⇒ no false positives; LSH ⇒ recall 1 here
+        placement, decided = verify_placement
+        assert decided == [placement == "fused"]
 
     def test_signatures_deterministic(self, spark, docs):
         a = {

@@ -7,6 +7,8 @@ A regression here is a 100×-scale performance bug even when results stay
 correct.
 """
 
+import re
+
 import pytest
 
 from dashing_spark.functions import HLL
@@ -108,6 +110,51 @@ class TestPlanInvariants:
         above_exchange = plan[: plan.index("Exchange hashpartitioning(a_id")]
         assert "signature" not in above_exchange
         assert cands.columns == ["a_id", "b_id"]
+
+    def test_fused_verify_broadcasts_items_once(self, spark):
+        """The fused verify joins ONE broadcast item relation on both
+        pair sides: the executed plan holds a single BroadcastExchange
+        and a ReusedExchange for the second probe, never two
+        broadcasts of the same table."""
+        from dashing_spark.operators import dedup
+
+        pairs = spark.createDataFrame(
+            [(1, 2), (1, 3), (2, 3), (1, 2)], "a_id long, b_id long"
+        )
+        items = spark.createDataFrame(
+            [(1, [1, 2, 3]), (2, [1, 2, 3]), (3, [7, 8])],
+            "id long, items array<long>",
+        )
+        out = dedup.verify_pairs(pairs, items, 0.9, fused=True)
+        assert sorted(tuple(r) for r in out.collect()) == [(1, 2, 1.0)]
+        final = _plan(out).split("Initial Plan")[0]
+        nodes = re.findall(r"[+:]- (?:\*\(\d+\) )?(\w+)", final)
+        assert nodes.count("BroadcastExchange") == 1
+        assert nodes.count("ReusedExchange") == 1
+
+    def test_plan_build_runs_no_job_on_streaming_frame(self, spark, tmp_path):
+        """Near-dup plan builders must not run a Spark job: on a
+        streaming frame a job cannot run at all, so the verify
+        placement takes distinct-first without a size probe."""
+        from dashing_spark.operators import dedup
+
+        src = str(tmp_path / "stream_src")
+        schema = "doc_id long, text string"
+        spark.createDataFrame(
+            [(1, "a b c d"), (2, "a b c e")], schema
+        ).write.parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        sc = spark.sparkContext
+        sc.setJobGroup("near_dup_plan_build", "plan build only")
+        try:
+            outs = [
+                dedup.minhash_lsh_dedup(stream, "doc_id"),
+                dedup.ngram_jaccard_pairs(stream, "doc_id", n=3, threshold=0.6),
+            ]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert all(o.isStreaming for o in outs)
+        assert list(sc.statusTracker().getJobIdsForGroup("near_dup_plan_build")) == []
 
     def test_ngram_join_is_not_gram_level(self, spark, docs):
         """ngram_jaccard_pairs must not contain a gram-token equi-join

@@ -284,7 +284,9 @@ class TestStatefulStream:
 
 
 class TestStreamingDedup:
-    def test_streamed_pairs_equal_batch_pipeline(self, spark, docs, tmp_path):
+    def test_streamed_pairs_equal_batch_pipeline(
+        self, spark, docs, tmp_path, verify_placement
+    ):
         from dashing_spark.operators import dedup
         from dashing_spark.streaming import dedup_stream
 
@@ -333,6 +335,8 @@ class TestStreamingDedup:
         }
         assert streamed == batch
         assert streamed  # fixture has ~8% near-dups: non-vacuous
+        placement, decided = verify_placement
+        assert decided and set(decided) == {placement == "fused"}
 
     def test_epoch_retry_is_noop(self, spark, docs, tmp_path):
         from dashing_spark.streaming import dedup_stream
@@ -383,6 +387,40 @@ class TestStreamingDedup:
         assert all(r["a_id"] != r["b_id"] for r in rows)
         assert len(rows) == len({(r["a_id"], r["b_id"]) for r in rows})
         assert len(rows) > n0  # the genuinely-new odd docs added pairs
+
+    def test_resume_with_other_n_hashes_raises(self, spark, docs, tmp_path):
+        """A state_dir banded under one n_hashes must refuse an epoch
+        banded under another: its band keys would never collide with
+        the new ones, so old docs would silently stop matching."""
+        from dashing_spark.streaming import dedup_stream
+
+        state_dir = str(tmp_path / "dd_layout")
+        dedup_stream.apply_dedup_batch(
+            docs.filter(F.col("doc_id") % 2 == 0), 0,
+            id_col="doc_id", state_dir=state_dir, threshold=0.9,
+        )
+        with pytest.raises(ValueError, match="layout"):
+            dedup_stream.apply_dedup_batch(
+                docs.filter(F.col("doc_id") % 2 == 1), 1,
+                id_col="doc_id", state_dir=state_dir, threshold=0.9,
+                n_hashes=128,
+            )
+        assert dedup_stream.committed_epochs(state_dir) == [0]
+
+    def test_resume_manifest_without_layout_raises(self, spark, docs, tmp_path):
+        """Committed epochs with no _LAYOUT record are state of an older
+        layout (e.g. per-doc docs_/bands_ tables): resuming must refuse,
+        not treat the index as empty."""
+        from dashing_spark.streaming import dedup_stream
+
+        state_dir = tmp_path / "dd_legacy"
+        (state_dir / "docs_epoch_0").mkdir(parents=True)
+        (state_dir / "_EPOCHS").write_text("0")
+        with pytest.raises(ValueError, match="_LAYOUT"):
+            dedup_stream.apply_dedup_batch(
+                docs, 1, id_col="doc_id", state_dir=str(state_dir),
+                threshold=0.9,
+            )
 
     def test_epoch_counter_restart_raises(self, spark, docs, tmp_path):
         from dashing_spark.streaming import dedup_stream
