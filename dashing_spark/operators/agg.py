@@ -8,13 +8,25 @@ get partial aggregation from Catalyst for free, but pandas grouped-agg
 UDFs do NOT (each group's rows all reach one task), so we implement the
 partial/final split explicitly:
 
-  stage 1 (map-side combine): ``mapInPandas`` — every input partition
-      emits AT MOST ONE ROW PER KEY, holding a serialized partial sketch.
-      All hashing/updating is whole-batch numpy on Arrow batches.
+  stage 1 (map-side combine): ``mapInArrow`` (``mapInPandas`` on the
+      precomputed-column paths) — every input partition emits AT MOST
+      ONE ROW PER KEY, holding a serialized partial sketch. All
+      hashing/updating is whole-batch numpy on Arrow batches.
   stage 2 (optional salt level): ``groupBy(key, part_id % salt)`` merge —
       the explicit tree level that bounds fan-in per task under skew
-      (north rule; analogous to par_reduce's log2 tree).
+      (north rule; analogous to par_reduce's log2 tree). It runs only
+      when the partial stage may have more than ``salt`` partitions:
+      with P <= salt every salted group is a single partial. P is read
+      at plan time only where that runs no Spark job (a batch plan with
+      no exchange); otherwise the level stays.
   stage 3: ``groupBy(key)`` merge -> final sketch row per key.
+
+Both merge levels are grouped Arrow UDFs (``applyInArrow``): each group
+arrives as one Arrow table, with no pandas frame per group. The number
+of Python stages matters more than their work here: every Python task
+costs about 0.2 CPU-s (4-core x86_64 host) before user code runs, as
+PySpark's worker calls ``importlib.invalidate_caches()`` per task,
+which re-reads the ``pyspark.zip`` directory.
 
 Only sketch blobs cross the shuffle (p=14 HLL = 16 KiB), so at 10^12
 input rows the shuffle volume is O(#keys × #partitions), not O(rows).
@@ -649,18 +661,52 @@ def sketch_hash_col_by_key(
     return _merge_partials(partials, key_cols, salt)
 
 
-def _merge_rows(
-    pdf: pd.DataFrame, key_cols: Sequence[str], acc_merges=None
-) -> pd.DataFrame:
-    blobs = pdf[SKETCH_COL]
-    sk = sketch_from_bytes(blobs.iloc[0])
-    for b in blobs.iloc[1:]:
-        sk.merge(sketch_from_bytes(b))
-    if acc_merges is not None:
-        acc_merges.add(max(0, len(blobs) - 1))
-    out = pdf.iloc[[0]][list(key_cols)].copy()
-    out[SKETCH_COL] = [sk.to_bytes()]
-    return out
+def _merge_groups(
+    df: DataFrame, key_cols: Sequence[str], acc_merges=None
+) -> DataFrame:
+    """One merged sketch per ``key_cols`` group, as a grouped Arrow UDF.
+
+    Spark does the grouping, so null keys, NaN and -0.0 group as in any
+    ``groupBy``, and each group reaches Python as one Arrow table (one
+    group in memory at a time). The group's blobs merge in arrival
+    order; the output row is the group's key slice plus one blob."""
+    key_cols = list(key_cols)
+
+    def merge(table):
+        import pyarrow as pa
+
+        blobs = table.column(SKETCH_COL).to_pylist()
+        sk = sketch_from_bytes(blobs[0])
+        for b in blobs[1:]:
+            sk.merge(sketch_from_bytes(b))
+        if acc_merges is not None:
+            acc_merges.add(len(blobs) - 1)
+        return (
+            table.select(key_cols)
+            .slice(0, 1)
+            .append_column(SKETCH_COL, pa.array([sk.to_bytes()], pa.binary()))
+        )
+
+    return (
+        df.select(*key_cols, SKETCH_COL)
+        .groupBy(*key_cols)
+        .applyInArrow(merge, schema=_result_schema(df, key_cols))
+    )
+
+
+def _partition_count_without_job(df: DataFrame) -> int | None:
+    """``df``'s partition count when reading it runs no Spark job, else
+    None. That needs a batch plan with no exchange and no subquery:
+    either one puts AQE in the plan, and AQE answers a partition count
+    by running the stages below it (a cached relation prints its plan,
+    so an exchange inside a not-yet-materialized cache counts too)."""
+    if df.isStreaming:
+        return None
+    plan = df._jdf.queryExecution().executedPlan()
+    text = plan.toString()
+    if any(s in text for s in ("Exchange", "Subquery", "AdaptiveSparkPlan")):
+        return None
+    return plan.execute().getNumPartitions()
 
 
 def _merge_partials(
@@ -669,39 +715,20 @@ def _merge_partials(
     salt: int | None,
     counters: dict | None = None,
 ) -> DataFrame:
-    result_schema = _result_schema(partials, key_cols)
     acc_merges = (counters or {}).get("merges")
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _merge_rows(pdf, key_cols, acc_merges)
-
     if salt and salt > 1:
-        # explicit tree level: cap fan-in per merge task (par_reduce
-        # analogue, /root/reference/src/union.cpp:10-24)
-        salted = partials.withColumn(
-            "__salt", F.pmod(F.col(_PART_COL), F.lit(salt)).cast("int")
-        )
-        salted_schema = T.StructType(
-            _key_schema(partials, key_cols)
-            + [
-                T.StructField("__salt", T.IntegerType(), False),
-                T.StructField(SKETCH_COL, T.BinaryType(), False),
-            ]
-        )
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = _merge_rows(pdf, key_cols, acc_merges)
-            out["__salt"] = pdf["__salt"].iloc[0]
-            return out[[*key_cols, "__salt", SKETCH_COL]]
-
-        partials = (
-            salted.groupBy(*key_cols, "__salt")
-            .applyInPandas(merge_salted, schema=salted_schema)
-        )
-    else:
-        partials = partials.drop(_PART_COL)
-
-    return partials.groupBy(*key_cols).applyInPandas(merge_fn, schema=result_schema)
+        # the partial stage emits at most one row per key per partition,
+        # so with P <= salt partitions every (key, part % salt) group is
+        # a single partial and the salt level would merge nothing
+        n_parts = _partition_count_without_job(partials)
+        if n_parts is None or n_parts > salt:
+            # explicit tree level: cap fan-in per merge task (par_reduce
+            # analogue, /root/reference/src/union.cpp:10-24)
+            salted = partials.withColumn(
+                "__salt", F.pmod(F.col(_PART_COL), F.lit(salt)).cast("int")
+            )
+            partials = _merge_groups(salted, [*key_cols, "__salt"], acc_merges)
+    return _merge_groups(partials, key_cols, acc_merges)
 
 
 def merge_sketches_by_key(
@@ -713,11 +740,7 @@ def merge_sketches_by_key(
     come from different builds (e.g. different precisions after
     `fold_expr`); blobs under one key must be merge-compatible."""
     ensure_shipped(sketches.sparkSession)
-    # the no-salt _merge_partials branch IS this operation (its
-    # drop(_PART_COL) is a no-op here) — one merge implementation
-    return _merge_partials(
-        sketches.select(*key_cols, SKETCH_COL), key_cols, salt=None
-    )
+    return _merge_groups(sketches, key_cols)
 
 
 def union_all_sketches(sketches: DataFrame, sketch_col: str = SKETCH_COL) -> DataFrame:
@@ -725,7 +748,7 @@ def union_all_sketches(sketches: DataFrame, sketch_col: str = SKETCH_COL) -> Dat
     (/root/reference/src/union.cpp:32-58). Partition-level partial merge
     (mapInPandas) then a single final merge, i.e. a two-level tree."""
     ensure_shipped(sketches.sparkSession)
-    schema = T.StructType([T.StructField(sketch_col, T.BinaryType(), False)])
+    schema = T.StructType([T.StructField(SKETCH_COL, T.BinaryType(), False)])
 
     def partial(batches):
         acc = None
@@ -736,20 +759,10 @@ def union_all_sketches(sketches: DataFrame, sketch_col: str = SKETCH_COL) -> Dat
                 else:
                     acc.merge(sketch_from_bytes(b))
         if acc is not None:
-            yield pd.DataFrame({sketch_col: [acc.to_bytes()]})
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = sketch_from_bytes(pdf[sketch_col].iloc[0])
-        for b in pdf[sketch_col].iloc[1:]:
-            acc.merge(sketch_from_bytes(b))
-        return pd.DataFrame({sketch_col: [acc.to_bytes()]})
+            yield pd.DataFrame({SKETCH_COL: [acc.to_bytes()]})
 
     partials = sketches.select(sketch_col).mapInPandas(partial, schema=schema)
-    return (
-        partials.withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(lambda pdf: final(pdf), schema=schema)
-    )
+    return _merge_groups(partials, []).withColumnRenamed(SKETCH_COL, sketch_col)
 
 
 def estimate_expr(estimator: str = "default"):

@@ -32,10 +32,8 @@ import os
 import shutil
 from typing import Callable, Sequence
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from dashing_spark.functions.serde import sketch_from_bytes
 from dashing_spark.operators import agg
 
 _MANIFEST = "_CURRENT"
@@ -45,22 +43,7 @@ def merge_sketch_states(
     a: DataFrame, b: DataFrame, key_cols: Sequence[str]
 ) -> DataFrame:
     """Merge two sketch tables keyed the same way (outer union-merge)."""
-    key_cols = list(key_cols)
-    both = a.unionByName(b)
-    schema = T.StructType(
-        [f for f in a.schema.fields if f.name in key_cols]
-        + [T.StructField(agg.SKETCH_COL, T.BinaryType(), False)]
-    )
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = sketch_from_bytes(pdf[agg.SKETCH_COL].iloc[0])
-        for blob in pdf[agg.SKETCH_COL].iloc[1:]:
-            sk.merge(sketch_from_bytes(blob))
-        out = pdf.iloc[[0]][key_cols].copy()
-        out[agg.SKETCH_COL] = [sk.to_bytes()]
-        return out
-
-    return both.groupBy(*key_cols).applyInPandas(merge_fn, schema=schema)
+    return agg.merge_sketches_by_key(a.unionByName(b), key_cols)
 
 
 def committed_epoch(state_dir: str) -> int | None:

@@ -2,9 +2,9 @@
 
 These assert properties of the *plan*, not the result: column pruning
 reaches the parquet scan, the two-stage agg shuffles only sketch blobs
-(exactly two exchanges), and the pair stage broadcasts the sketch table.
-A regression here is a 100×-scale performance bug even when results stay
-correct.
+(one exchange, two with a salt level), and the pair stage broadcasts
+the sketch table. A regression here is a 100×-scale performance bug
+even when results stay correct.
 """
 
 import re
@@ -49,13 +49,31 @@ class TestPlanInvariants:
             assert "source" not in rs
             assert "text" in rs and "lang" in rs
 
-    def test_two_stage_agg_shuffle_count(self, spark, docs):
+    def test_two_stage_agg_shuffle_count(self, spark, docs, tmp_path):
         # unsalted: exactly ONE exchange (partials -> final merge)
         sk = agg.sketch_tokens_by_key(docs, ["lang"], lambda: HLL.empty(10))
         assert _plan(sk).count("Exchange hashpartitioning") == 1
-        # salted: exactly TWO (tree level + final)
+        # salted, partial stage with P <= salt partitions: every salted
+        # group is one partial, so the salt level is skipped -> ONE
+        assert docs.rdd.getNumPartitions() <= 4
         sk2 = agg.sketch_tokens_by_key(docs, ["lang"], lambda: HLL.empty(10), salt=4)
-        assert _plan(sk2).count("Exchange hashpartitioning") == 2
+        assert _plan(sk2).count("Exchange hashpartitioning") == 1
+        # salted, P = 8 > salt and no upstream exchange: TWO (tree
+        # level + final)
+        path = str(tmp_path / "docs8")
+        docs.repartition(8).write.parquet(path)
+        # one scan partition per file: without this, Spark packs the 8
+        # small files into as many partitions as there are cores
+        spark.conf.set("spark.sql.files.minPartitionNum", "8")
+        try:
+            docs8 = spark.read.parquet(path)
+            assert docs8.rdd.getNumPartitions() == 8
+            sk3 = agg.sketch_tokens_by_key(
+                docs8, ["lang"], lambda: HLL.empty(10), salt=2
+            )
+            assert _plan(sk3).count("Exchange hashpartitioning") == 2
+        finally:
+            spark.conf.unset("spark.sql.files.minPartitionNum")
 
     def test_raw_rows_never_shuffle(self, spark, docs):
         """The exchange inputs must be post-partial (sketch column
@@ -155,6 +173,32 @@ class TestPlanInvariants:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert all(o.isStreaming for o in outs)
         assert list(sc.statusTracker().getJobIdsForGroup("near_dup_plan_build")) == []
+
+    def test_salt_decision_runs_no_job(self, spark, docs):
+        """Building a salted sketch plan runs no Spark job, also where
+        the upstream exchange (plain or inside a not-yet-materialized
+        cache) hides the partial-stage partition count; those inputs
+        keep the salt level."""
+        sc = spark.sparkContext
+        inputs = {
+            "scan": (docs, 1),
+            "repartition": (docs.repartition(11), 2),
+            "cached_repartition": (docs.repartition(11).cache(), 2),
+        }
+        try:
+            for name, (df, n_exchanges) in inputs.items():
+                group = f"salt_plan_build_{name}"
+                sc.setJobGroup(group, "plan build only")
+                try:
+                    sk = agg.sketch_tokens_by_key(
+                        df, ["lang"], lambda: HLL.empty(10), salt=4
+                    )
+                finally:
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+                assert _plan(sk).count("Exchange hashpartitioning") == n_exchanges, name
+        finally:
+            inputs["cached_repartition"][0].unpersist()
 
     def test_ngram_join_is_not_gram_level(self, spark, docs):
         """ngram_jaccard_pairs must not contain a gram-token equi-join
