@@ -2,7 +2,9 @@
 
 Everything in this package is whole-batch numpy (no per-row Python),
 Spark-free, and unit-testable on plain arrays. The Spark layer in
-``dashing_spark.operators`` wraps these in mapInPandas/applyInPandas.
+``dashing_spark.operators`` wraps these in Arrow UDFs (one ``mapInArrow``
+partial kernel for every sketch builder, grouped Arrow merges) and
+pandas UDFs.
 """
 
 from dashing_spark.functions import hashing

@@ -8,10 +8,13 @@ get partial aggregation from Catalyst for free, but pandas grouped-agg
 UDFs do NOT (each group's rows all reach one task), so we implement the
 partial/final split explicitly:
 
-  stage 1 (map-side combine): ``mapInArrow`` (``mapInPandas`` on the
-      precomputed-column paths) — every input partition emits AT MOST
-      ONE ROW PER KEY, holding a serialized partial sketch. All
-      hashing/updating is whole-batch numpy on Arrow batches.
+  stage 1 (map-side combine): one ``mapInArrow`` kernel,
+      ``_partial_sketches``, serves every builder — every input
+      partition emits AT MOST ONE ROW PER KEY (per sketch variant),
+      holding a serialized partial sketch. All hashing/updating is
+      whole-batch numpy on Arrow batches; a builder supplies only its
+      items generator (token shingles or one value column) and its
+      sketch factories.
   stage 2 (optional salt level): ``groupBy(key, part_id % salt)`` merge —
       the explicit tree level that bounds fan-in per task under skew
       (north rule; analogous to par_reduce's log2 tree). It runs only
@@ -44,6 +47,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from dashing_spark.functions import hashing
+from dashing_spark.functions.cms import CountMinSketch
 from dashing_spark.functions.serde import sketch_from_bytes
 from dashing_spark.operators.ship import ensure_shipped
 
@@ -70,35 +74,11 @@ def _key_schema(df: DataFrame, key_cols: Sequence[str]) -> list[T.StructField]:
     return [by_name[k] for k in key_cols]
 
 
-def _partial_schema(df: DataFrame, key_cols: Sequence[str]) -> T.StructType:
-    return T.StructType(
-        _key_schema(df, key_cols)
-        + [
-            T.StructField(_PART_COL, T.IntegerType(), False),
-            T.StructField(SKETCH_COL, T.BinaryType(), False),
-        ]
-    )
-
-
 def _result_schema(df: DataFrame, key_cols: Sequence[str]) -> T.StructType:
     return T.StructType(
         _key_schema(df, key_cols)
         + [T.StructField(SKETCH_COL, T.BinaryType(), False)]
     )
-
-
-def _emit_partials(acc: dict, key_cols: Sequence[str]) -> pd.DataFrame:
-    part_id = TaskContext.get().partitionId() if TaskContext.get() else -1
-    rows = {k: [] for k in key_cols}
-    blobs = []
-    for key, sk in acc.items():
-        for c, v in zip(key_cols, key):
-            rows[c].append(v)
-        blobs.append(sk.to_bytes())
-    out = pd.DataFrame(rows)
-    out[_PART_COL] = np.int32(part_id)
-    out[SKETCH_COL] = blobs
-    return out
 
 
 def _shingle_hash_df(
@@ -129,9 +109,8 @@ def _batch_key_codes(rb, n_keys: int):
     Single key column: Arrow dictionary-encode yields the codes without
     materializing a Python object per row — only the len(uniq)
     dictionary values cross into Python (as acc keys). Multi-key (or
-    null-bearing) batches fall back to pandas factorize. Shared by the
-    plain and weighted-CM partial stages so the fast path cannot drift
-    between them.
+    null-bearing) batches fall back to pandas factorize over tuples of
+    the Arrow values as Python objects, so 64-bit keys stay exact.
     """
     enc = rb.column(0).dictionary_encode() if n_keys == 1 else None
     if enc is not None and enc.indices.null_count == 0:
@@ -141,6 +120,190 @@ def _batch_key_codes(rb, n_keys: int):
         keys = list(zip(*(rb.column(i).to_pylist() for i in range(n_keys))))
         codes, uniq = pd.factorize(pd.Series(keys, dtype=object))
     return codes, uniq
+
+
+def _token_items(widths: Sequence[int], seed: int, hasher: str = "arrow"):
+    """Items generator of the token builders. The text column after the
+    keys is tokenized and hashed once per batch (with ``hasher="jvm"``
+    it already holds the JVM-side token hashes); each width in
+    ``widths`` is then rolled once into its own shingle stream."""
+
+    def items(rb, n_keys):
+        col = rb.column(n_keys)
+        if hasher == "jvm":
+            th = col.flatten().to_numpy(zero_copy_only=False).view(np.uint64)
+            lens = np.diff(col.offsets.to_numpy()).astype(np.int64)
+        else:
+            th, lens = hashing.hash_tokens_arrow(col)
+        for w in widths:
+            sh, doc_idx = hashing.shingle_hashes(th, lens, w=w, seed=seed)
+            yield w, sh, doc_idx
+
+    return items
+
+
+def _column_items(dtype):
+    """Items generator of the column builders: the one value column
+    after the keys, one value per row, as ``dtype`` (int64 hashes wrap
+    to uint64). Callers drop null values JVM-side."""
+
+    def items(rb, n_keys):
+        vals = rb.column(n_keys).to_numpy(zero_copy_only=False).astype(dtype)
+        yield None, vals, None
+
+    return items
+
+
+def _partial_sketches(
+    src: DataFrame,
+    key_cols: Sequence[str],
+    items: Callable,
+    variants: "list[tuple[object, object, Callable[[], object]]]",
+    salt: int | None,
+    counters: dict | None = None,
+    tag_field: "T.StructField | None" = None,
+    update: str = "update_hashes",
+) -> DataFrame:
+    """The one partial stage (stage 1) behind every builder, followed by
+    :func:`_merge_partials`.
+
+    ``src`` holds ``key_cols`` first, then the value columns ``items``
+    reads. Per Arrow batch, ``items(rb, n_keys)`` yields ``(stream,
+    values, row_of_value)`` once for every stream, empty or not;
+    ``row_of_value`` maps each value to its batch row, or is None when
+    values line up with rows. ``variants`` is ``[(tag, stream,
+    factory)]``: every key seen gets one sketch per variant, keyed
+    ``(tag, *key)``, whose ``update`` method takes that key's values of
+    the variant's stream, in row order, once per batch. ``tag_field``
+    names the leading tag column of the output; with None the single
+    variant's tag is dropped.
+
+    The output batch is built as Arrow arrays typed from the schema: a
+    pandas frame would turn a null-bearing int64 key column into
+    float64 and merge distinct keys above 2^53. ``counters`` may carry
+    accumulators under "rows" / "partials" / "merges"."""
+    ensure_shipped(src.sparkSession)
+    key_cols = list(key_cols)
+    n_keys = len(key_cols)
+    lead = [tag_field] if tag_field is not None else []
+    out_keys = [f.name for f in lead] + key_cols
+    partial_schema = T.StructType(
+        lead
+        + _key_schema(src, key_cols)
+        + [
+            T.StructField(_PART_COL, T.IntegerType(), False),
+            T.StructField(SKETCH_COL, T.BinaryType(), False),
+        ]
+    )
+    by_stream: dict = {}
+    for tag, stream, make_sketch in variants:
+        by_stream.setdefault(stream, []).append((tag, make_sketch))
+    skip = 0 if tag_field is not None else 1
+
+    def partial_fn(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(partial_schema)
+        acc: dict[tuple, object] = {}
+        n_rows = 0
+        for rb in batches:
+            n_rows += rb.num_rows
+            codes, uniq = _batch_key_codes(rb, n_keys)
+            for stream, vals, row in items(rb, n_keys):
+                val_codes = codes if row is None else codes[row]
+                order = np.argsort(val_codes, kind="stable")
+                bounds = np.searchsorted(val_codes[order], np.arange(len(uniq) + 1))
+                for ci, key in enumerate(uniq):
+                    seg = order[bounds[ci] : bounds[ci + 1]]
+                    # one fancy-index copy per key, shared by every
+                    # variant (updates never mutate their input)
+                    key_vals = vals[seg] if len(seg) else None
+                    for tag, make_sketch in by_stream[stream]:
+                        tk = (tag, *key)
+                        sk = acc.get(tk)
+                        if sk is None:
+                            sk = acc[tk] = make_sketch()
+                        if key_vals is not None:
+                            getattr(sk, update)(key_vals)
+        if counters:
+            if "rows" in counters:
+                counters["rows"].add(n_rows)
+            if "partials" in counters:
+                counters["partials"].add(len(acc))
+        ctx = TaskContext.get()
+        part_id = ctx.partitionId() if ctx else -1
+        rows = [(*tk[skip:], part_id, sk.to_bytes()) for tk, sk in acc.items()]
+        cols = [list(c) for c in zip(*rows)] or [[] for _ in arrow_schema]
+        yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    partials = src.mapInArrow(partial_fn, schema=partial_schema)
+    return _merge_partials(partials, out_keys, salt, counters)
+
+
+class _CMWeighted:
+    """Weighted adapter, CM-approximate occurrence indexing — the
+    reference's ACTUAL WeightedSketcher mechanism (wjcm defaults,
+    src/dashing.h:252-253,471-485): a per-key sketch
+    wrapper whose Count-Min sketch streams occurrence counts, so the
+    i-th duplicate of a shingle becomes item hash64(shingle,
+    cm_count_so_far) of the wrapped sketch.
+
+    Cost shape vs the exact mode: the exact row_number() window
+    shuffles EVERY token occurrence once (no map-side combine is
+    possible under a window); here the only shuffle is a repartition of
+    the raw doc rows by key — so each key is one stream, the per-file
+    granularity the reference runs at — and the CM lives in executor
+    memory. Error: CM only OVERcounts (by ≤ εN with ε = e/2^lg_width
+    per row, Pr ≥ 1-δ), so colliding shingles skip occurrence slots;
+    the multiset estimate inherits that one-sided inflation on top of
+    the sketch's own JI error (property-tested bound in
+    tests/test_spark_agg.py).
+
+    Vectorization: occurrences of a shingle within one Arrow batch get
+    consecutive indices base..base+c-1 with base = the CM estimate
+    carried across batches, then one batched CM update per batch —
+    batch-granularity CM streaming, same ε bound as element-at-a-time.
+
+    Memory: each live key holds a depth x 2^lg_width int64 counter
+    matrix in the executor (2 MiB at the 16/4 defaults). With the
+    repartition by key, a partition carries ~(#keys / #partitions)
+    counters — for high-cardinality keys (url/site rather than lang)
+    size ``cm_lg_width`` down (the eps = e/2^lg_width overcount bound
+    trades directly against it) or prefer the exact mode, whose window
+    shuffle holds no per-key executor state.
+
+    Skew: one key = one stream = one task, so a giant key serializes
+    through a single executor — inherent to streaming occurrence
+    indexing (the reference's per-file counter has the same property),
+    and bounded by that key's own data, not the table. Keys needing
+    parallel exactness should use the exact mode (whose window shuffle
+    parallelizes by (key, shingle))."""
+
+    __slots__ = ("sketch", "cm")
+
+    def __init__(self, sketch, cm_lg_width: int, cm_depth: int):
+        self.sketch = sketch
+        self.cm = CountMinSketch(cm_lg_width, cm_depth)
+
+    def update_hashes(self, vals: np.ndarray) -> "_CMWeighted":
+        u, inv, cnt = np.unique(vals, return_inverse=True, return_counts=True)
+        base = self.cm.query_hashes(u).astype(np.int64)
+        # within-batch cumcount per shingle: group-sort inv, then
+        # position minus group start
+        g_order = np.argsort(inv, kind="stable")
+        starts = np.concatenate(([0], np.cumsum(cnt[:-1])))
+        local = np.arange(len(vals), dtype=np.int64) - np.repeat(starts, cnt)
+        occ = np.empty(len(vals), dtype=np.int64)
+        occ[g_order] = base[inv[g_order]] + local
+        self.cm.update_hashes(u, cnt.astype(np.int64))
+        with np.errstate(over="ignore"):
+            items = hashing.splitmix64(vals ^ hashing.splitmix64(occ.view(np.uint64)))
+        self.sketch.update_hashes(items)
+        return self
+
+    def to_bytes(self) -> bytes:
+        return self.sketch.to_bytes()
 
 
 def sketch_tokens_by_key(
@@ -162,7 +325,7 @@ def sketch_tokens_by_key(
     ``counters`` optionally carries Spark accumulators under keys
     "rows" / "partials" / "merges" — the pipeline's metrics hooks
     (plans/pipeline.py) ride the same kernels instead of duplicating
-    them. Ignored on the weighted path.
+    them. Ignored with ``weighted=True``.
 
     ``hasher="arrow"`` (default): tokens are hashed by the numpy
     byte-polynomial kernel directly over Arrow string buffers — zero
@@ -182,16 +345,15 @@ def sketch_tokens_by_key(
     sketch per file (single-threaded); the distributed-exact equivalent
     is a row_number window over (key, shingle) — one shuffle, then the
     (shingle, occurrence) pair is hashed JVM-side and the normal
-    hash-column sketch path takes over.
+    hash-column sketch path takes over. ``weighted="cm"`` is the
+    streaming CM mode itself (:class:`_CMWeighted`, Arrow hasher).
     """
-    ensure_shipped(df.sparkSession)
     key_cols = list(key_cols)
+    make = make_sketch
     if weighted == "cm":
-        return _sketch_tokens_weighted_cm(
-            df, key_cols, make_sketch, text_col, shingle_w, seed, salt,
-            cm_lg_width=cm_lg_width, cm_depth=cm_depth,
-        )
-    if weighted:
+        df, hasher = df.repartition(*key_cols), "arrow"
+        make = lambda: _CMWeighted(make_sketch(), cm_lg_width, cm_depth)  # noqa: E731
+    elif weighted:
         from pyspark.sql import Window
 
         if shingle_w == 1:
@@ -215,53 +377,14 @@ def sketch_tokens_by_key(
         src = df.select(*key_cols, token_hashes_col(text_col).alias("__th"))
     else:
         src = df.select(*key_cols, text_col)
-    partial_schema = _partial_schema(src.select(*key_cols), key_cols)
-    n_keys = len(key_cols)
-
-    def partial_fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(partial_schema)
-        acc: dict[tuple, object] = {}
-        n_rows = 0
-        for rb in batches:
-            n_rows += rb.num_rows
-            if hasher == "jvm":
-                col = rb.column(n_keys)
-                th = col.flatten().to_numpy(zero_copy_only=False).view(np.uint64)
-                lens = np.diff(col.offsets.to_numpy()).astype(np.int64)
-            else:
-                th, lens = hashing.hash_tokens_arrow(rb.column(n_keys))
-            sh, doc_idx = hashing.shingle_hashes(th, lens, w=shingle_w, seed=seed)
-            codes, uniq = _batch_key_codes(rb, n_keys)
-            if len(sh):
-                shingle_codes = codes[doc_idx]
-                order = np.argsort(shingle_codes, kind="stable")
-                bounds = np.searchsorted(
-                    shingle_codes[order], np.arange(len(uniq) + 1)
-                )
-            for ci, key in enumerate(uniq):
-                sk = acc.get(key)
-                if sk is None:
-                    sk = acc[key] = make_sketch()
-                if len(sh):
-                    seg = order[bounds[ci] : bounds[ci + 1]]
-                    if len(seg):
-                        sk.update_hashes(sh[seg])
-        if counters:
-            if "rows" in counters:
-                counters["rows"].add(n_rows)
-            if "partials" in counters:
-                counters["partials"].add(len(acc))
-        yield pa.RecordBatch.from_pandas(
-            _emit_partials(acc, key_cols),
-            schema=arrow_schema,
-            preserve_index=False,
-        )
-
-    partials = src.mapInArrow(partial_fn, schema=partial_schema)
-    return _merge_partials(partials, key_cols, salt, counters)
+    return _partial_sketches(
+        src,
+        key_cols,
+        _token_items([shingle_w], seed, hasher),
+        [(None, shingle_w, make)],
+        salt,
+        counters,
+    )
 
 
 def _sketch_tokens_multi(
@@ -275,84 +398,24 @@ def _sketch_tokens_multi(
     counters: dict | None = None,
 ) -> DataFrame:
     """Shared engine for the one-scan sweep kernels: tokens are hashed
-    once per Arrow batch; each distinct shingle width among ``variants``
-    is rolled once; every variant's sketch consumes its width's hash
-    segment. ``variants`` is [(tag_value, shingle_w, factory)]; the tag
-    becomes the leading output column named by ``tag_field``. Output:
-    (tag, *key_cols, sketch); each variant's blobs are bit-identical to
+    once per Arrow batch and each distinct shingle width among
+    ``variants`` ([(tag_value, shingle_w, factory)]) is rolled once.
+    Output: (tag, *key_cols, sketch), the tag column named by
+    ``tag_field``; each variant's blobs are bit-identical to
     ``sketch_tokens_by_key`` with that (factory, shingle_w) — pinned by
     tests."""
-    ensure_shipped(df.sparkSession)
-    key_cols = list(key_cols)
-    if not variants:
-        raise ValueError("variants must be non-empty")
-    tags = [t for t, _, _ in variants]
-    if len(set(tags)) != len(tags):
-        raise ValueError(f"variant tags must be distinct, got {tags}")
     if any(w < 1 for _, w, _ in variants):
         raise ValueError("shingle widths must be >= 1")
-    src = df.select(*key_cols, text_col)
-    out_keys = [tag_field.name] + key_cols
-    partial_schema = T.StructType(
-        [tag_field]
-        + _key_schema(src, key_cols)
-        + [
-            T.StructField(_PART_COL, T.IntegerType(), False),
-            T.StructField(SKETCH_COL, T.BinaryType(), False),
-        ]
+    key_cols = list(key_cols)
+    return _partial_sketches(
+        df.select(*key_cols, text_col),
+        key_cols,
+        _token_items(sorted({w for _, w, _ in variants}), seed),
+        variants,
+        salt,
+        counters,
+        tag_field,
     )
-    n_keys = len(key_cols)
-    widths = sorted({w for _, w, _ in variants})
-
-    def partial_fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(partial_schema)
-        acc: dict[tuple, object] = {}
-        n_rows = 0
-        for rb in batches:
-            n_rows += rb.num_rows
-            th, lens = hashing.hash_tokens_arrow(rb.column(n_keys))
-            codes, uniq = _batch_key_codes(rb, n_keys)
-            for w in widths:
-                sh, doc_idx = hashing.shingle_hashes(th, lens, w=w, seed=seed)
-                if len(sh):
-                    shingle_codes = codes[doc_idx]
-                    order = np.argsort(shingle_codes, kind="stable")
-                    bounds = np.searchsorted(
-                        shingle_codes[order], np.arange(len(uniq) + 1)
-                    )
-                w_variants = [(t, mk) for t, vw, mk in variants if vw == w]
-                for ci, key in enumerate(uniq):
-                    vals = None
-                    if len(sh):
-                        seg = order[bounds[ci] : bounds[ci + 1]]
-                        if len(seg):
-                            # one fancy-index copy per key, shared by
-                            # every sketch type (update_hashes never
-                            # mutates its input)
-                            vals = sh[seg]
-                    for tag, make_sketch in w_variants:
-                        tk = (tag, *key)
-                        sk = acc.get(tk)
-                        if sk is None:
-                            sk = acc[tk] = make_sketch()
-                        if vals is not None:
-                            sk.update_hashes(vals)
-        if counters:
-            if "rows" in counters:
-                counters["rows"].add(n_rows)
-            if "partials" in counters:
-                counters["partials"].add(len(acc))
-        yield pa.RecordBatch.from_pandas(
-            _emit_partials(acc, out_keys),
-            schema=arrow_schema,
-            preserve_index=False,
-        )
-
-    partials = src.mapInArrow(partial_fn, schema=partial_schema)
-    return _merge_partials(partials, out_keys, salt, counters)
 
 
 def sketch_tokens_multi_w(
@@ -416,6 +479,15 @@ def sketch_tokens_multi_type(
     )
 
 
+def _non_null(df: DataFrame, col: str) -> DataFrame:
+    """``df`` without the rows whose ``col`` is null (or NaN, for a
+    floating-point column), dropped JVM-side before any sketching."""
+    keep = F.col(col).isNotNull()
+    if dict(df.dtypes).get(col) in ("float", "double"):
+        keep = keep & ~F.isnan(col)
+    return df.filter(keep)
+
+
 def sketch_hash_col_multi_type(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -425,153 +497,21 @@ def sketch_hash_col_multi_type(
 ) -> DataFrame:
     """Multi-type variant of :func:`sketch_hash_col_by_key`: one scan of
     a precomputed int64 hash column updates EVERY factory's sketch per
-    key. Same output shape as :func:`sketch_tokens_multi_type`."""
-    ensure_shipped(df.sparkSession)
+    key. Same output shape as :func:`sketch_tokens_multi_type`. Null
+    hashes are dropped JVM-side, so a key whose hashes are all null
+    yields no row."""
     key_cols = list(key_cols)
     factories = dict(factories)
     if not factories:
         raise ValueError("factories must be non-empty")
-    src = df.select(*key_cols, hash_col)
-    out_keys = ["sketch_type"] + key_cols
-    partial_schema = T.StructType(
-        [T.StructField("sketch_type", T.StringType(), False)]
-        + _key_schema(src, key_cols)
-        + [
-            T.StructField(_PART_COL, T.IntegerType(), False),
-            T.StructField(SKETCH_COL, T.BinaryType(), False),
-        ]
+    return _partial_sketches(
+        _non_null(df, hash_col).select(*key_cols, hash_col),
+        key_cols,
+        _column_items(np.uint64),
+        [(name, None, mk) for name, mk in factories.items()],
+        salt,
+        tag_field=T.StructField("sketch_type", T.StringType(), False),
     )
-
-    def partial_fn(batches):
-        acc: dict[tuple, object] = {}
-        for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
-            keys = list(zip(*(pdf[k] for k in key_cols)))
-            codes, uniq = pd.factorize(pd.Series(keys, dtype=object))
-            order = np.argsort(codes, kind="stable")
-            bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
-            for ci, key in enumerate(uniq):
-                seg = order[bounds[ci] : bounds[ci + 1]]
-                vals = h[seg] if len(seg) else None  # one copy per key
-                for name, make_sketch in factories.items():
-                    tk = (name, *key)
-                    sk = acc.get(tk)
-                    if sk is None:
-                        sk = acc[tk] = make_sketch()
-                    if vals is not None:
-                        sk.update_hashes(vals)
-        yield _emit_partials(acc, out_keys)
-
-    partials = src.mapInPandas(partial_fn, schema=partial_schema)
-    return _merge_partials(partials, out_keys, salt)
-
-
-def _sketch_tokens_weighted_cm(
-    df: DataFrame,
-    key_cols: list,
-    make_sketch: Callable[[], object],
-    text_col: str,
-    shingle_w: int,
-    seed: int,
-    salt: int | None,
-    cm_lg_width: int = 16,
-    cm_depth: int = 4,
-) -> DataFrame:
-    """Weighted adapter, CM-approximate occurrence indexing — the
-    reference's ACTUAL WeightedSketcher mechanism (wjcm defaults,
-    /root/reference/src/dashing.h:252-253,471-485): a Count-Min sketch
-    streams occurrence counts and the i-th duplicate of a shingle
-    becomes item hash64(shingle, cm_count_so_far).
-
-    Cost shape vs the exact mode: the exact row_number() window
-    shuffles EVERY token occurrence once (no map-side combine is
-    possible under a window); here the only shuffle is a repartition of
-    the raw doc rows by key — so each key is one stream, the per-file
-    granularity the reference runs at — and the CM lives in executor
-    memory. Error: CM only OVERcounts (by ≤ εN with ε = e/2^lg_width
-    per row, Pr ≥ 1-δ), so colliding shingles skip occurrence slots;
-    the multiset estimate inherits that one-sided inflation on top of
-    the sketch's own JI error (property-tested bound in
-    tests/test_spark_agg.py).
-
-    Vectorization: occurrences of a shingle within one Arrow batch get
-    consecutive indices base..base+c-1 with base = the CM estimate
-    carried across batches, then one batched CM update per batch —
-    batch-granularity CM streaming, same ε bound as element-at-a-time.
-
-    Memory: each live key holds a depth x 2^lg_width int64 counter
-    matrix in the executor (2 MiB at the 16/4 defaults). With the
-    repartition by key, a partition carries ~(#keys / #partitions)
-    counters — for high-cardinality keys (url/site rather than lang)
-    size ``cm_lg_width`` down (the eps = e/2^lg_width overcount bound
-    trades directly against it) or prefer the exact mode, whose window
-    shuffle holds no per-key executor state.
-
-    Skew: one key = one stream = one task, so a giant key serializes
-    through a single executor — inherent to streaming occurrence
-    indexing (the reference's per-file counter has the same property),
-    and bounded by that key's own data, not the table. Keys needing
-    parallel exactness should use the exact mode (whose window shuffle
-    parallelizes by (key, shingle))."""
-    ensure_shipped(df.sparkSession)
-    src = df.repartition(*key_cols).select(*key_cols, text_col)
-    partial_schema = _partial_schema(src.select(*key_cols), key_cols)
-    n_keys = len(key_cols)
-
-    def partial_fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from dashing_spark.functions.cms import CountMinSketch
-
-        arrow_schema = to_arrow_schema(partial_schema)
-        acc: dict[tuple, object] = {}
-        cms: dict[tuple, CountMinSketch] = {}
-        for rb in batches:
-            th, lens = hashing.hash_tokens_arrow(rb.column(n_keys))
-            sh, doc_idx = hashing.shingle_hashes(th, lens, w=shingle_w, seed=seed)
-            codes, uniq = _batch_key_codes(rb, n_keys)
-            if len(sh):
-                shingle_codes = codes[doc_idx]
-                order = np.argsort(shingle_codes, kind="stable")
-                bounds = np.searchsorted(
-                    shingle_codes[order], np.arange(len(uniq) + 1)
-                )
-            for ci, key in enumerate(uniq):
-                sk = acc.get(key)
-                if sk is None:
-                    sk = acc[key] = make_sketch()
-                    cms[key] = CountMinSketch(cm_lg_width, cm_depth)
-                if not len(sh):
-                    continue
-                seg = order[bounds[ci] : bounds[ci + 1]]
-                if not len(seg):
-                    continue
-                vals = sh[seg]
-                cm = cms[key]
-                u, inv, cnt = np.unique(vals, return_inverse=True, return_counts=True)
-                base = cm.query_hashes(u).astype(np.int64)
-                # within-batch cumcount per shingle: group-sort inv, then
-                # position minus group start
-                g_order = np.argsort(inv, kind="stable")
-                starts = np.concatenate(([0], np.cumsum(cnt[:-1])))
-                local = np.arange(len(vals), dtype=np.int64) - np.repeat(starts, cnt)
-                occ = np.empty(len(vals), dtype=np.int64)
-                occ[g_order] = base[inv[g_order]] + local
-                cm.update_hashes(u, cnt.astype(np.int64))
-                with np.errstate(over="ignore"):
-                    items = hashing.splitmix64(
-                        vals ^ hashing.splitmix64(occ.view(np.uint64))
-                    )
-                sk.update_hashes(items)
-        yield pa.RecordBatch.from_pandas(
-            _emit_partials(acc, key_cols),
-            schema=arrow_schema,
-            preserve_index=False,
-        )
-
-    partials = src.mapInArrow(partial_fn, schema=partial_schema)
-    return _merge_partials(partials, key_cols, salt)
 
 
 def sketch_numeric_by_key(
@@ -587,33 +527,15 @@ def sketch_numeric_by_key(
     into a quantile sketch poisons its compactions (comparisons against
     NaN are false), while exact rank oracles skip nulls; both sides
     must agree on the population."""
-    ensure_shipped(df.sparkSession)
     key_cols = list(key_cols)
-    keep = F.col(value_col).isNotNull()
-    if dict(df.dtypes).get(value_col) in ("float", "double"):
-        keep = keep & ~F.isnan(value_col)
-    src = df.filter(keep).select(*key_cols, value_col)
-    partial_schema = _partial_schema(src, key_cols)
-
-    def partial_fn(batches):
-        acc: dict[tuple, object] = {}
-        for pdf in batches:
-            vals = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            keys = list(zip(*(pdf[k] for k in key_cols)))
-            codes, uniq = pd.factorize(pd.Series(keys, dtype=object))
-            order = np.argsort(codes, kind="stable")
-            bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
-            for ci, key in enumerate(uniq):
-                sk = acc.get(key)
-                if sk is None:
-                    sk = acc[key] = make_sketch()
-                seg = order[bounds[ci] : bounds[ci + 1]]
-                if len(seg):
-                    sk.update_batch(vals[seg])
-        yield _emit_partials(acc, key_cols)
-
-    partials = src.mapInPandas(partial_fn, schema=partial_schema)
-    return _merge_partials(partials, key_cols, salt)
+    return _partial_sketches(
+        _non_null(df, value_col).select(*key_cols, value_col),
+        key_cols,
+        _column_items(np.float64),
+        [(None, None, make_sketch)],
+        salt,
+        update="update_batch",
+    )
 
 
 def sketch_hash_col_by_key(
@@ -621,44 +543,19 @@ def sketch_hash_col_by_key(
     key_cols: Sequence[str],
     make_sketch: Callable[[], object],
     hash_col: str,
-    weight_col: str | None = None,
     salt: int | None = None,
 ) -> DataFrame:
     """One sketch per key over a precomputed int64 hash column (e.g.
-    ``F.xxhash64(...)`` kept JVM-side) with optional weights (CMS path)."""
-    ensure_shipped(df.sparkSession)
+    ``F.xxhash64(...)`` kept JVM-side). Null hashes are dropped
+    JVM-side, so a key whose hashes are all null yields no row."""
     key_cols = list(key_cols)
-    cols = [*key_cols, hash_col] + ([weight_col] if weight_col else [])
-    src = df.select(*cols)
-    partial_schema = _partial_schema(src, key_cols)
-
-    def partial_fn(batches):
-        acc: dict[tuple, object] = {}
-        for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
-            w = (
-                pdf[weight_col].to_numpy(dtype=np.int64)
-                if weight_col
-                else None
-            )
-            keys = list(zip(*(pdf[k] for k in key_cols)))
-            codes, uniq = pd.factorize(pd.Series(keys, dtype=object))
-            order = np.argsort(codes, kind="stable")
-            bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
-            for ci, key in enumerate(uniq):
-                sk = acc.get(key)
-                if sk is None:
-                    sk = acc[key] = make_sketch()
-                seg = order[bounds[ci] : bounds[ci + 1]]
-                if len(seg):
-                    if w is not None:
-                        sk.update_hashes(h[seg], weights=w[seg])
-                    else:
-                        sk.update_hashes(h[seg])
-        yield _emit_partials(acc, key_cols)
-
-    partials = src.mapInPandas(partial_fn, schema=partial_schema)
-    return _merge_partials(partials, key_cols, salt)
+    return _partial_sketches(
+        _non_null(df, hash_col).select(*key_cols, hash_col),
+        key_cols,
+        _column_items(np.uint64),
+        [(None, None, make_sketch)],
+        salt,
+    )
 
 
 def _merge_groups(

@@ -141,8 +141,8 @@ def pick_pair_strategy(sketches: DataFrame) -> int | None:
     real whenever the sketch table is materialized (the 100 TB flow:
     `plans/pipeline.py::build_or_resume_sketch_table` writes sketch
     parquet, so the re-read scan has file-size stats). Stats propagated
-    THROUGH a Python-eval node (un-materialized mapInPandas /
-    applyInPandas sketch builds) are input-scaled guesses — Catalyst
+    THROUGH a Python-eval node (un-materialized mapInArrow /
+    applyInArrow sketch builds) are input-scaled guesses — Catalyst
     assumes UDF output ~ input size, so a 5-row sketch table over a
     50M-doc scan "weighs" gigabytes. Those plans keep the broadcast
     default rather than taxing small in-flight panels with B-way

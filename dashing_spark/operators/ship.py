@@ -9,6 +9,7 @@ Python workers can unpickle our UDFs. Idempotent per SparkContext.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -17,29 +18,36 @@ _shipped: set[int] = set()
 
 
 def package_zip_path() -> str:
-    """Build (once) a py-files zip of the dashing_spark package."""
+    """Build (once per distinct source) a py-files zip of the package.
+
+    The zip is named by a digest of every ``.py`` path and its bytes, so
+    two checkouts share a zip only when their code is identical (a
+    name shared by all checkouts, reused while newer than the sources,
+    ships one checkout's code to another's workers). It is written to a
+    pid-unique tmp file and renamed into place, so concurrent builders
+    never write one file."""
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = os.path.join(tempfile.gettempdir(), "dashing_spark_pyfiles.zip")
-    src_mtime = max(
-        os.path.getmtime(os.path.join(r, f))
-        for r, _, fs in os.walk(pkg_dir)
-        for f in fs
-        if f.endswith(".py")
+    entries = []
+    digest = hashlib.sha256()
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        for f in sorted(files):
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    data = fh.read()
+                rel = os.path.join("dashing_spark", os.path.relpath(full, pkg_dir))
+                digest.update(b"%s\0%d\0" % (rel.encode(), len(data)) + data)
+                entries.append((rel, data))
+    out = os.path.join(
+        tempfile.gettempdir(), f"dashing_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
     )
-    if os.path.exists(out) and os.path.getmtime(out) >= src_mtime:
+    if os.path.exists(out):
         return out
-    tmp = out + ".tmp"
+    tmp = f"{out}.{os.getpid()}.tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "dashing_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    z.write(full, rel)
+        for rel, data in entries:
+            z.writestr(rel, data)
     os.replace(tmp, out)
     return out
 

@@ -8,15 +8,16 @@ checkpoint wrote snapshots with ``mode("overwrite")`` straight over the
 live directory — a crash mid-overwrite destroys the only copy. This
 module reimplements the part of the (public) Iceberg spec the
 checkpoint actually needs — the HadoopTables commit protocol — in ~150
-lines over any POSIX-rename filesystem:
+lines over any local POSIX filesystem with hard links (a commit on a
+filesystem without them raises, leaving no tmp file or data dir):
 
 - **immutable data**: every commit writes its parquet under a fresh
   ``data/<version>-<op>/`` directory; nothing ever rewrites a committed
   file, so readers of snapshot N are never torn by a writer of N+1;
-- **atomic commit**: a commit IS one ``os.rename`` of a tmp metadata
+- **atomic commit**: a commit IS one ``os.link`` of a tmp metadata
   json to ``metadata/v<N>.json`` (atomic on POSIX; fails if vN exists,
   which is the optimistic-concurrency conflict signal). Data written
-  for a commit that never renamed its metadata is invisible garbage,
+  for a commit that never linked its metadata is invisible garbage,
   never a half-visible table;
 - **crash recovery**: ``version-hint.text`` is a read accelerator, not
   truth — the committed version is max(vN.json present), exactly
@@ -88,6 +89,40 @@ def _load_meta(table_dir: str, version: int) -> dict:
         return json.load(f)
 
 
+def _publish(tmp: str, final: str, version: int, data_dir: str | None = None) -> None:
+    """THE commit point: hard-link the written metadata ``tmp`` to
+    ``final``, then fsync the metadata directory so the commit survives
+    a crash. ``os.link`` is create-if-absent (EEXIST when ``final``
+    exists), unlike rename, whose POSIX semantics SILENTLY REPLACE an
+    existing destination — an exists() check before a rename is TOCTOU
+    and two racing committers of the same version could both "succeed",
+    one snapshot's metadata silently overwritten and its data dir later
+    reaped as an orphan (r6 ADVICE #1).
+
+    The snapshot log therefore needs a local POSIX filesystem with hard
+    links. On any failure the tmp file and the commit's ``data_dir``
+    are removed: losing the race raises :class:`CommitConflict`, any
+    other ``os.link`` error an ``OSError`` naming that requirement."""
+    try:
+        os.link(tmp, final)
+    except OSError as e:
+        os.unlink(tmp)
+        if data_dir is not None:
+            shutil.rmtree(data_dir, ignore_errors=True)
+        if isinstance(e, FileExistsError):
+            raise CommitConflict(f"version {version} already committed") from e
+        raise OSError(
+            f"snapshot commit of {final} failed: the snapshot log needs a "
+            f"local POSIX filesystem with hard links (os.link: {e})"
+        ) from e
+    os.unlink(tmp)
+    fd = os.open(os.path.dirname(final), os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def commit(
     table_dir: str,
     df: DataFrame,
@@ -131,20 +166,7 @@ def commit(
         json.dump(meta, f, sort_keys=True)
         f.flush()
         os.fsync(f.fileno())
-    final = _meta_path(table_dir, version)
-    # THE commit point: os.link is create-if-absent (EEXIST when the
-    # destination exists), unlike rename, whose POSIX semantics SILENTLY
-    # REPLACE an existing destination — an exists() check before a
-    # rename is TOCTOU and two racing committers of the same version
-    # could both "succeed", one snapshot's metadata silently overwritten
-    # and its data dir later reaped as an orphan (r6 ADVICE #1)
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        os.unlink(tmp)  # lost the race: our data dir is garbage
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise CommitConflict(f"version {version} already committed")
-    os.unlink(tmp)
+    _publish(tmp, _meta_path(table_dir, version), version, data_dir)
     # hint is best-effort: written via tmp+rename so it is never torn
     hint_tmp = os.path.join(table_dir, _HINT + ".tmp")
     with open(hint_tmp, "w") as f:
@@ -217,13 +239,7 @@ def rollback(table_dir: str, to_version: int) -> int:
         json.dump(meta, f, sort_keys=True)
         f.flush()
         os.fsync(f.fileno())  # same crash-durability as commit()
-    final = _meta_path(table_dir, version)
-    try:
-        os.link(tmp, final)  # create-if-absent commit point (ADVICE #1)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise CommitConflict(f"version {version} already committed")
-    os.unlink(tmp)
+    _publish(tmp, _meta_path(table_dir, version), version)
     return version
 
 

@@ -213,6 +213,30 @@ class TestAdviceR7Regressions:
         # no tmp litter from the loser
         assert not [f for f in os.listdir(t) if ".tmp." in f]
 
+    def test_link_failure_leaves_no_garbage_and_names_requirement(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A filesystem without hard links (os.link raising anything but
+        EEXIST): commit and rollback leave no tmp metadata and no new
+        data dir, and raise an error naming the local-POSIX need."""
+        t = str(tmp_path / "t")
+        S.commit(t, _df(spark, [1]), op="overwrite")
+        data_before = set(os.listdir(os.path.join(t, "data")))
+
+        def no_link(src, dst):
+            raise PermissionError(1, "Operation not permitted")
+
+        monkeypatch.setattr(os, "link", no_link)
+        with pytest.raises(OSError, match="local POSIX filesystem with hard links"):
+            S.commit(t, _df(spark, [2]), op="overwrite")
+        with pytest.raises(OSError, match="local POSIX filesystem with hard links"):
+            S.rollback(t, 0)
+        monkeypatch.undo()
+        assert set(os.listdir(os.path.join(t, "data"))) == data_before
+        assert not [f for f in os.listdir(os.path.join(t, "metadata")) if ".tmp." in f]
+        assert S.current_version(t) == 0
+        assert _xs(S.read_table(spark, t)) == [1]
+
     def test_rollback_without_commits_raises_cleanly(self, spark, tmp_path):
         t = str(tmp_path / "t_empty")
         os.makedirs(t, exist_ok=True)

@@ -8,10 +8,12 @@ determinism invariant from BASELINE.json's input_hint.
 
 import math
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from dashing_spark.functions import HLL, KLL, BloomFilter, CountMinSketch, TDigest
+from dashing_spark.functions import HLL, KLL, BloomFilter, CountMinSketch, TDigest, hashing
 from dashing_spark.functions.serde import sketch_from_bytes
 from dashing_spark.operators import agg
 from dashing_spark.sources.tables import extract_text, load_table, synth_pages
@@ -185,6 +187,85 @@ class TestTwoStageAgg:
             ).collect()
         }
         assert s1 == s2
+
+
+class TestExactKeys:
+    """Keys and values pass the partial stage exactly: a null-bearing
+    int64 key column must not round keys above 2^53 (distinct keys
+    would merge), and null hashes must not become items."""
+
+    SCHEMA = "k long, k2 string, text string, h long, v double"
+    COLS = ["k", "k2", "text", "h", "v"]
+    ROWS = [
+        (2**62 + 1, "a", "x y z", 11, 1.0),
+        (2**62 + 1, "b", "y w", 12, 2.0),
+        (2**62 + 2, "a", "p q x", 13, 3.0),
+        (None, "a", "r s", 14, 4.0),
+        (2**62 + 2, "a", "q t", -15, 5.0),
+    ]
+
+    @staticmethod
+    def _tokens_blob(rows):
+        th, lens = hashing.hash_tokens_arrow(pa.array([r[2] for r in rows]))
+        sh, _ = hashing.shingle_hashes(th, lens, w=1, seed=0)
+        return HLL.empty(10).update_hashes(sh).to_bytes()
+
+    @staticmethod
+    def _hash_blob(rows):
+        h = np.array([r[3] for r in rows], dtype=np.int64).view(np.uint64)
+        return HLL.empty(10).update_hashes(h).to_bytes()
+
+    @staticmethod
+    def _numeric_blob(rows):
+        return KLL.empty(200).update_batch(np.array([r[4] for r in rows])).to_bytes()
+
+    @pytest.mark.parametrize("key_cols", [["k"], ["k", "k2"]])
+    def test_64bit_keys_with_null_stay_exact(self, spark, key_cols):
+        # one partition, one batch: each key's sketch sees its rows in
+        # row order, so it equals the sketch of that key's rows alone
+        df = spark.createDataFrame(self.ROWS, self.SCHEMA).coalesce(1)
+        idx = [self.COLS.index(k) for k in key_cols]
+        groups = {}
+        for r in self.ROWS:
+            groups.setdefault(tuple(r[i] for i in idx), []).append(r)
+        builds = {
+            "tokens": (
+                agg.sketch_tokens_by_key(df, key_cols, lambda: HLL.empty(10)),
+                self._tokens_blob,
+            ),
+            "hash_col": (
+                agg.sketch_hash_col_by_key(df, key_cols, lambda: HLL.empty(10), "h"),
+                self._hash_blob,
+            ),
+            "numeric": (
+                agg.sketch_numeric_by_key(df, key_cols, lambda: KLL.empty(200), "v"),
+                self._numeric_blob,
+            ),
+        }
+        for name, (sk, expect) in builds.items():
+            got = {
+                tuple(r[k] for k in key_cols): bytes(r["sketch"]) for r in sk.collect()
+            }
+            assert set(got) == set(groups), name
+            for key, rows in groups.items():
+                assert got[key] == expect(rows), (name, key)
+
+    def test_null_hashes_are_dropped(self, spark):
+        df = spark.createDataFrame(
+            [("a", None), ("a", None), ("b", 5), ("b", None), ("b", -7), ("c", 9)],
+            "key string, h long",
+        )
+        kept = df.filter(F.col("h").isNotNull())
+        for build in (
+            lambda d: agg.sketch_hash_col_by_key(d, ["key"], lambda: HLL.empty(10), "h"),
+            lambda d: agg.sketch_hash_col_multi_type(
+                d, ["key"], {"hll": lambda: HLL.empty(10)}, "h"
+            ),
+        ):
+            got = {r["key"]: bytes(r["sketch"]) for r in build(df).collect()}
+            want = {r["key"]: bytes(r["sketch"]) for r in build(kept).collect()}
+            assert set(got) == {"b", "c"}  # all-null key "a": no row
+            assert got == want
 
 
 class TestSynthPages:
