@@ -11,9 +11,13 @@ strategy: estimates vs `--use-full-khash-sets` ground truth
 
 from __future__ import annotations
 
+import atexit
+import functools
 import math
 import os
+import shutil
 import sys
+import tempfile
 from functools import reduce
 from collections.abc import Callable
 
@@ -33,6 +37,21 @@ P_HLL = 14
 _HLL_RSE3 = 3 * 1.04 / math.sqrt(1 << P_HLL)  # 3σ relative error bound
 QUANTILE_PS = (0.25, 0.5, 0.75, 0.95)
 RANK_EPS = 0.05
+
+
+@functools.cache
+def _temp_root() -> str:
+    """One temporary directory per process, removed at interpreter exit."""
+    root = tempfile.mkdtemp(prefix="dashspark_entry_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _temp_dir(prefix: str) -> str:
+    """A new directory for a query's stream source, state or checkpoint,
+    under :func:`_temp_root`: the returned DataFrames may still read
+    it lazily, so no query can remove its own."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_temp_root())
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1368,14 +1387,13 @@ def q_streaming_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The union of per-epoch pair emissions must equal the exact JI >= 0.9
     pair set (LSH miss bound <= 1e-8 at the threshold) — the same
     guarantee the batch operator carries, now under streaming arrival."""
-    import tempfile
 
     from dashing_spark.streaming import dedup_stream
 
     docs = _docs(spark, sf_dir)
-    src_dir = tempfile.mkdtemp(prefix="dash_dd_src_")
-    state_dir = tempfile.mkdtemp(prefix="dash_dd_state_")
-    ckpt_dir = tempfile.mkdtemp(prefix="dash_dd_ckpt_")
+    src_dir = _temp_dir("dash_dd_src_")
+    state_dir = _temp_dir("dash_dd_state_")
+    ckpt_dir = _temp_dir("dash_dd_ckpt_")
     docs.repartition(3).write.mode("overwrite").parquet(src_dir)
     stream = (
         spark.readStream.schema(docs.schema)
@@ -1403,7 +1421,7 @@ def q_streaming_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # {ji >= 0.9, |epoch_a - epoch_b| <= 2, max(epoch) >= 3}: expiry
     # after each commit keeps index epochs within the window, and the
     # final manifest retains only the last ttl epochs' pair files
-    ttl_state = tempfile.mkdtemp(prefix="dash_dd_ttl_state_")
+    ttl_state = _temp_dir("dash_dd_ttl_state_")
     n_epochs, ttl = 5, 2
     for e in range(n_epochs):
         dedup_stream.apply_dedup_batch(
@@ -1706,7 +1724,6 @@ def q_streaming_users_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic two-phase scenario — window finalized once, late
     replay dropped by the checkpoint-recovered watermark, open window
     held back — as three bound booleans."""
-    import tempfile
 
     from dashing_spark.streaming.incremental import (
         incremental_sketch_query,
@@ -1714,7 +1731,7 @@ def q_streaming_users_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from dashing_spark.streaming.windowed import late_data_scenario
 
-    wm = late_data_scenario(spark, tempfile.mkdtemp(prefix="dash_wmk_"))
+    wm = late_data_scenario(spark, _temp_dir("dash_wmk_"))
 
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
 
@@ -1724,9 +1741,9 @@ def q_streaming_users_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn("__h", F.xxhash64("user_id"))
         return agg.sketch_hash_col_by_key(src, ["day"], lambda: HLL.empty(P_HLL), "__h")
 
-    src_dir = tempfile.mkdtemp(prefix="dash_stream_src_")
-    state_dir = tempfile.mkdtemp(prefix="dash_stream_state_")
-    ckpt_dir = tempfile.mkdtemp(prefix="dash_stream_ckpt_")
+    src_dir = _temp_dir("dash_stream_src_")
+    state_dir = _temp_dir("dash_stream_state_")
+    ckpt_dir = _temp_dir("dash_stream_ckpt_")
     ev.repartition(4).write.mode("overwrite").parquet(src_dir)
     stream = (
         spark.readStream.schema(ev.schema)
@@ -1774,16 +1791,15 @@ def q_stateful_users_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-day estimates bound-checked vs exact; n_updates must sum to the
     event count exactly (engine state = no double-counting across
     micro-batches)."""
-    import tempfile
 
     from pyspark.sql import Window
 
     from dashing_spark.streaming.stateful import stateful_sketch_stream
 
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    src = tempfile.mkdtemp(prefix="dash_state_src_")
-    ck = tempfile.mkdtemp(prefix="dash_state_ck_")
-    out_dir = tempfile.mkdtemp(prefix="dash_state_out_")
+    src = _temp_dir("dash_state_src_")
+    ck = _temp_dir("dash_state_ck_")
+    out_dir = _temp_dir("dash_state_out_")
     ev.repartition(4).write.mode("overwrite").parquet(src)
     stream = (
         spark.readStream.schema(ev.schema)
@@ -1838,7 +1854,6 @@ def q_streaming_kll_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch KLL query (KLL compaction is merge-tree-shaped, so stream ≡
     batch bit-identity is NOT expected — the rank bound is the
     contract)."""
-    import tempfile
 
     from dashing_spark.streaming.incremental import (
         incremental_sketch_query,
@@ -1852,9 +1867,9 @@ def q_streaming_kll_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             df, ["event_type"], lambda: KLL.empty(200), "value"
         )
 
-    src_dir = tempfile.mkdtemp(prefix="dash_skll_src_")
-    state_dir = tempfile.mkdtemp(prefix="dash_skll_state_")
-    ckpt_dir = tempfile.mkdtemp(prefix="dash_skll_ckpt_")
+    src_dir = _temp_dir("dash_skll_src_")
+    state_dir = _temp_dir("dash_skll_state_")
+    ckpt_dir = _temp_dir("dash_skll_ckpt_")
     ev.repartition(4).write.mode("overwrite").parquet(src_dir)
     stream = (
         spark.readStream.schema(ev.schema)
@@ -2007,13 +2022,12 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     must leave the prior snapshot time-travelable with bit-identical
     blobs (Iceberg commit semantics without the jars)."""
     import os as _os
-    import tempfile
 
     from dashing_spark.plans import snapshots as snaps
     from dashing_spark.plans.pipeline import build_or_resume_sketch_table
 
     docs = _docs(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="dashspark_ckpt_")
+    ckpt = _temp_dir("dashspark_ckpt_")
     sk1, m1 = build_or_resume_sketch_table(
         docs, ["lang"], lambda: HLL.empty(P_HLL), ckpt
     )
@@ -2073,7 +2087,6 @@ def q_distmat_sinks_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches the oracle's literal TRUE) on any lossy format
     option."""
     import os as _os
-    import tempfile
 
     from dashing_spark.sources import sinks, tables as _tables
 
@@ -2094,7 +2107,7 @@ def q_distmat_sinks_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe = docs.unionByName(hostile)
     for fmt in ("jsonl", "csv"):
-        fd = tempfile.mkdtemp(prefix=f"dashspark_doc_{fmt}_")
+        fd = _temp_dir(f"dashspark_doc_{fmt}_")
         _tables.write_documents(probe, _os.path.join(fd, "d"), fmt)
         back = _tables.read_documents(
             spark, _os.path.join(fd, "d"), fmt, schema=ddl
@@ -2104,7 +2117,7 @@ def q_distmat_sinks_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         fmt_ok = fmt_ok and (n_diff == 0)
     pairs = dist.exact_pair_measures(_lang_tokens(docs), "lang", "token", ("ji",))
-    d = tempfile.mkdtemp(prefix="dashspark_mat_")
+    d = _temp_dir("dashspark_mat_")
     keys = sinks.write_packed_binary(pairs, "ji", _os.path.join(d, "m.bin"))
     back = sinks.read_packed_binary(_os.path.join(d, "m.bin"), keys)
     sinks.write_ut_tsv(pairs, "ji", _os.path.join(d, "m.tsv"))

@@ -161,10 +161,6 @@ def _sketch_factory(args) -> Callable[[], object]:
     return lambda: HLL.empty(p)
 
 
-def _estimator(args) -> str:
-    return args.estimator
-
-
 def _item_rows(sets_df: DataFrame, args) -> DataFrame:
     """(key, __h) item-hash rows — the exact-mode / min-count spine."""
     if args.kmer_length <= 1:
@@ -708,7 +704,7 @@ def _cmd_dist(spark, args, by_seq: bool = False) -> int:
         sets_df, labels = _input_sets(spark, args, by_seq)
         sk = _build_sketches(spark, sets_df, args, expected_keys=labels)
 
-    estimator = _estimator(args)
+    estimator = args.estimator
     if args.out_sizes:
         sizes = dist.estimate_cardinalities(sk, ["key"], estimator=estimator)
         _emit_tsv_df(sizes, args.out_sizes)
@@ -779,7 +775,7 @@ def _cmd_card(spark, args) -> int:
             args,
             expected_keys=[_label_for(p) for p in paths],
         )
-    out = dist.estimate_cardinalities(sk, ["key"], estimator=_estimator(args))
+    out = dist.estimate_cardinalities(sk, ["key"], estimator=args.estimator)
     _emit_tsv_df(out.orderBy("key"), args.out)
     return 0
 

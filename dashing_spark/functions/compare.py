@@ -20,9 +20,14 @@ import numpy as np
 
 from dashing_spark.functions.bbmh import BBitMinHash, bbmh_jaccard
 from dashing_spark.functions.bloom import BloomFilter
+from dashing_spark.functions.cbbmh import CountingBBitMinHash, cbbmh_weighted_jaccard
+from dashing_spark.functions.crmh import CountingKMV, crmh_histogram_intersection
 from dashing_spark.functions.hll import HLL
 from dashing_spark.functions.hll import set_triple as hll_set_triple
+from dashing_spark.functions.hmh import HyperMinHash, hmh_jaccard
 from dashing_spark.functions.kmv import KMV, kmv_set_triple
+from dashing_spark.functions.serde import sketch_from_bytes
+from dashing_spark.functions.smh import SuperMinHash, smh_jaccard
 
 MEASURES = (
     "ji",
@@ -46,6 +51,10 @@ DISTANCE_MEASURES = frozenset(
 
 def set_triple_any(a, b, estimator: str = "default") -> tuple[float, float, float]:
     """(|A\\B|, |B\\A|, |A∩B|) for any comparable sketch pair."""
+    if type(a) is not type(b):
+        raise TypeError(
+            f"cannot compare {type(a).__name__} with {type(b).__name__}"
+        )
     if isinstance(a, HLL):
         if estimator in ("ertl_joint_mle", "ertl_joint"):
             t0, t1, t2 = hll_joint_triple_batch(
@@ -67,22 +76,16 @@ def set_triple_any(a, b, estimator: str = "default") -> tuple[float, float, floa
         # solve inter from ji = inter/(ca+cb-inter)
         inter = ji * (ca + cb) / (1.0 + ji) if ji > 0 else 0.0
         return max(0.0, ca - inter), max(0.0, cb - inter), inter
-    from dashing_spark.functions.hmh import HyperMinHash, hmh_jaccard
-
     if isinstance(a, HyperMinHash):
         ji = hmh_jaccard(a, b)
-        ca, cb = a.estimate(), b.estimate()
+        ca, cb = a.estimate(estimator), b.estimate(estimator)
         inter = ji * (ca + cb) / (1.0 + ji) if ji > 0 else 0.0
         return max(0.0, ca - inter), max(0.0, cb - inter), inter
-    from dashing_spark.functions.smh import SuperMinHash, smh_jaccard
-
     if isinstance(a, SuperMinHash):
         ji = smh_jaccard(a, b)
         ca, cb = a.estimate(), b.estimate()
         inter = ji * (ca + cb) / (1.0 + ji) if ji > 0 else 0.0
         return max(0.0, ca - inter), max(0.0, cb - inter), inter
-    from dashing_spark.functions.crmh import CountingKMV, crmh_histogram_intersection
-
     if isinstance(a, CountingKMV):
         # weighted (multiset) triple: JI is the histogram intersection
         # (the reference's wjaccard dist semantics,
@@ -101,11 +104,6 @@ def set_triple_any(a, b, estimator: str = "default") -> tuple[float, float, floa
         ca, cb = _wsize(a), _wsize(b)
         inter = ji * (ca + cb) / (1.0 + ji) if ji > 0 else 0.0
         return max(0.0, ca - inter), max(0.0, cb - inter), inter
-    from dashing_spark.functions.cbbmh import (
-        CountingBBitMinHash,
-        cbbmh_weighted_jaccard,
-    )
-
     if isinstance(a, CountingBBitMinHash):
         ji = cbbmh_weighted_jaccard(a, b)
 
@@ -529,18 +527,6 @@ def hll_joint_triple_batch(
     return la, lb, lx
 
 
-def hll_triple_batch(
-    a_regs: np.ndarray, b_regs: np.ndarray, p: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized set triples for row-aligned HLL register matrices."""
-    u = np.maximum(a_regs, b_regs)
-    ca = hll_estimate_batch(a_regs, p)
-    cb = hll_estimate_batch(b_regs, p)
-    cu = hll_estimate_batch(u, p)
-    inter = np.maximum(0.0, ca + cb - cu)
-    return np.maximum(0.0, cu - cb), np.maximum(0.0, cu - ca), inter
-
-
 def measure_from_triple_batch(
     t0: np.ndarray, t1: np.ndarray, t2: np.ndarray, measure: str, ksinv: float = 1.0
 ) -> np.ndarray:
@@ -577,10 +563,14 @@ def measure_from_triple_batch(
 # Vectorized batch kernels for the minhash-family pair stage
 # ---------------------------------------------------------------------------
 #
-# The pair UDF receives row-aligned sketch blob batches; deserializing two
-# Python objects per pair (the round-2 fallback) is O(pairs) interpreter
-# work. These kernels stack payloads into matrices (one b"".join +
-# np.frombuffer — no per-element Python) and compute whole-batch.
+# The pair UDF receives row-aligned sketch blob batches. Deserializing two
+# Python objects per pair is O(pairs) interpreter work, so
+# triple_batch_from_blobs deserializes each DISTINCT blob once and every
+# kernel below takes the distinct sketches of one (type, params) group
+# plus per-pair gather indices (ia, ib) into that group. A kernel stacks
+# the sketches' arrays into one matrix and computes whole-batch; the
+# minhash-family kernels have no estimator choice and ignore
+# ``estimator``, as the sketches' own ``estimate`` methods do.
 #
 # Key batch-shape fact: a pair batch over K keys carries at most K DISTINCT
 # sketches but up to K² rows (all_pairs self-join), so everything that
@@ -603,10 +593,14 @@ def _triple_from_ji_batch(
         return np.fmax(0.0, ca - inter), np.fmax(0.0, cb - inter), inter
 
 
-def _stack_payloads(blobs, offset: int, nbytes: int, dtype) -> np.ndarray:
-    """(n, m) matrix from equal-width blob payloads via one memcpy."""
-    buf = b"".join(x[offset : offset + nbytes] for x in blobs)
-    return np.frombuffer(buf, dtype=dtype).reshape(len(blobs), -1)
+def _padded(arrays, width: int, fill, dtype) -> np.ndarray:
+    """(n, width) matrix of the variable-length ``arrays``, each
+    right-padded with ``fill`` (bottom-k states hold fewer than k
+    values until k distinct hashes were seen)."""
+    out = np.full((len(arrays), width), fill, dtype=dtype)
+    for j, x in enumerate(arrays):
+        out[j, : len(x)] = x
+    return out
 
 
 def _dedupe_blobs(a_blobs, b_blobs):
@@ -644,7 +638,7 @@ def _concat_triples(parts):
 
 
 def kmv_triple_batch(
-    uniq_blobs, ia: np.ndarray, ib: np.ndarray
+    sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Batch kmv_set_triple: distinct-blob cardinalities + one lockstep
     sort of the (npairs, 2k) concatenated bottom-k value matrix.
@@ -654,16 +648,9 @@ def kmv_triple_batch(
     (runs have length exactly 2); sentinel pads sort last. The union
     sample's unique-rank is a cumsum over the duplicate mask — no
     argsort / provenance planes needed."""
-    import struct
-
-    k = struct.unpack_from("<I", uniq_blobs[0], 5)[0]
-    lens = np.array(
-        [struct.unpack_from("<I", x, 9)[0] for x in uniq_blobs], np.int64
-    )
-    pad = lambda x, ln: x[13 : 13 + 8 * ln] + b"\xff" * (8 * (k - ln))
-    U = np.frombuffer(
-        b"".join(pad(x, int(l)) for x, l in zip(uniq_blobs, lens)), np.uint64
-    ).reshape(len(uniq_blobs), k)
+    k = sks[0].k
+    lens = np.array([len(s.mins) for s in sks], np.int64)
+    U = _padded([s.mins for s in sks], k, _U64_SENT, np.uint64)
 
     u64 = float(2**64)
     kth = U[:, k - 1].astype(np.float64) + 1.0
@@ -745,9 +732,11 @@ def _bbmh_cards_batch(U: np.ndarray, lg_r: int) -> np.ndarray:
 
 
 def bbmh_triple_batch(
-    U: np.ndarray, ia: np.ndarray, ib: np.ndarray, lg_r: int, b_bits: int
+    sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch b-bit MinHash triples; U = (n_uniq, r) uint64 registers."""
+    """Batch b-bit MinHash triples over (n_uniq, r) uint64 registers."""
+    lg_r, b_bits = sks[0].lg_r, sks[0].b
+    U = np.stack([s.mins for s in sks])
     r = 1 << lg_r
     occ = U != _U64_SENT                       # (n_uniq, r) bool
     # compared signature: low b bits, narrowed (by b) so per-pair
@@ -772,9 +761,10 @@ def bbmh_triple_batch(
 
 
 def smh_triple_batch(
-    U: np.ndarray, ia: np.ndarray, ib: np.ndarray
+    sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch SuperMinHash triples; U = (n_uniq, m) float64 registers."""
+    """Batch SuperMinHash triples over (n_uniq, m) float64 registers."""
+    U = np.stack([s.vals for s in sks])
     m = U.shape[1]
     fin = np.isfinite(U)
     nf = fin.sum(axis=1).astype(np.float64)
@@ -804,12 +794,14 @@ def smh_triple_batch(
 
 
 def hmh_triple_batch(
-    U: np.ndarray, ia: np.ndarray, ib: np.ndarray, p: int, b_bits: int, estimator: str
+    sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch HyperMinHash triples; U = (n_uniq, m) uint16 registers.
+    """Batch HyperMinHash triples over (n_uniq, m) uint16 registers.
 
     The Ertl MLE (lockstep bisection — the expensive part) runs once per
     DISTINCT sketch; only register matching runs at pair width."""
+    p, b_bits = sks[0].p, sks[0].b
+    U = np.stack([s.regs for s in sks])
     m = float(1 << p)
     q = 64 - p
     occ = U != 0
@@ -845,9 +837,11 @@ _POPCNT8_TABLE = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint
 
 
 def bloom_triple_batch(
-    U: np.ndarray, ia: np.ndarray, ib: np.ndarray, lg_bits: int, k: int
+    sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch Bloom set triples; U = (n_uniq, w) uint64 word matrices."""
+    """Batch Bloom set triples over (n_uniq, w) uint64 word matrices."""
+    lg_bits, k = sks[0].lg_bits, sks[0].k
+    U = np.stack([s.words for s in sks])
     m = float(1 << lg_bits)
 
     def _card_from_pop(x: np.ndarray) -> np.ndarray:
@@ -880,7 +874,7 @@ def bloom_triple_batch(
 
 
 def crmh_triple_batch(
-    uniq_blobs, ia: np.ndarray, ib: np.ndarray
+    sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Batch CountingKMV weighted triples — the histogram-intersection
     JI (Σ min(ca,cb) / Σ max over the union bottom-k, dashing's
@@ -888,21 +882,10 @@ def crmh_triple_batch(
     chunk. Multiset sizes are mean-sampled-count × distinct estimate,
     exactly the scalar path's formula; integer count sums keep the
     division bit-identical to the scalar kernel."""
-    import struct
-
-    k = struct.unpack_from("<I", uniq_blobs[0], 5)[0]
-    lens = np.array(
-        [struct.unpack_from("<I", x, 9)[0] for x in uniq_blobs], np.int64
-    )
-
-    def _pad(x: bytes, ln: int):
-        mins = x[13 : 13 + 8 * ln] + b"\xff" * (8 * (k - ln))
-        cnts = x[13 + 8 * ln : 13 + 16 * ln] + b"\x00" * (8 * (k - ln))
-        return mins, cnts
-
-    padded = [_pad(x, int(l)) for x, l in zip(uniq_blobs, lens)]
-    M = np.frombuffer(b"".join(p[0] for p in padded), np.uint64).reshape(-1, k)
-    CNT = np.frombuffer(b"".join(p[1] for p in padded), np.int64).reshape(-1, k)
+    k = sks[0].k
+    lens = np.array([len(s.mins) for s in sks], np.int64)
+    M = _padded([s.mins for s in sks], k, _U64_SENT, np.uint64)
+    CNT = _padded([s.counts for s in sks], k, 0, np.int64)
 
     u64 = float(2**64)
     kth = M[:, k - 1].astype(np.float64) + 1.0
@@ -971,17 +954,15 @@ def crmh_triple_batch(
 
 
 def cbbmh_triple_batch(
-    M: np.ndarray,
-    CNT: np.ndarray,
-    ia: np.ndarray,
-    ib: np.ndarray,
-    lg_r: int,
-    b_bits: int,
+    sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Batch counting-b-bit-MinHash weighted triples (Ruzicka JI from
     matched b-bit registers with the collision correction, multiset
     sizes as filled-bucket mean count × BBMH distinct estimate —
     mirror of the scalar cbbmh branch of set_triple_any)."""
+    lg_r, b_bits = sks[0].lg_r, sks[0].b
+    M = np.stack([s.mins for s in sks])
+    CNT = np.stack([s.counts for s in sks])
     r = 1 << lg_r
     filled = M != _U64_SENT
     sig = (M & np.uint64((1 << b_bits) - 1)).astype(_sig_dtype(b_bits))
@@ -1014,117 +995,119 @@ def cbbmh_triple_batch(
     )
 
 
+def _flajolet_from_hist(c: np.ndarray, m: float, q: int) -> np.ndarray:
+    """Flajolet et al. 2007 estimates with the linear-counting small-range
+    correction (hll._flajolet_original) over (nrows, q+2) histograms:
+    Σ 2^-register is Σ_k C[k]·2^-k."""
+    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(int(m), 0.7213 / (1.0 + 1.079 / m))
+    est = alpha * m * m / (c @ np.exp2(-np.arange(q + 2, dtype=np.float64)))
+    c0 = c[:, 0]
+    with np.errstate(divide="ignore"):
+        linear = m * np.log(m / np.where(c0 > 0, c0, m))
+    return np.where((est <= 2.5 * m) & (c0 > 0), linear, est)
+
+
+#: HLL estimator name -> per-row cardinality over (nrows, q+2) register
+#: histograms (Ertl 2017, arXiv:1702.01284). The pair stage's "default"
+#: is improved raw; ``compare`` and ``HLL.estimate`` default to the MLE.
+_HLL_ESTIMATORS = {
+    "default": _ertl_improved_from_hist,
+    "ertl_improved": _ertl_improved_from_hist,
+    "ertl_mle": ertl_mle_batch,
+    "original": _flajolet_from_hist,
+}
+#: estimators of the whole triple at once (Ertl 2017 §4), not per sketch
+_HLL_JOINT = frozenset(("ertl_joint_mle", "ertl_joint"))
+_ESTIMATORS = frozenset(_HLL_ESTIMATORS) | _HLL_JOINT
+
+
+def check_estimator(estimator: str) -> None:
+    """Raise ValueError unless ``estimator`` names a pair-stage estimator."""
+    if estimator not in _ESTIMATORS:
+        raise ValueError(
+            f"unknown estimator {estimator!r}; expected one of {sorted(_ESTIMATORS)}"
+        )
+
+
 def hll_pair_triple_batch(
-    U: np.ndarray, ia: np.ndarray, ib: np.ndarray, p: int
+    sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inclusion–exclusion HLL triples with per-DISTINCT-sketch side
-    cardinalities; only the union register max + estimate is pairwise.
+    """HLL triples under ``estimator``: the joint estimators run Ertl's
+    joint MLE on the gathered register pairs; the others take
+    inclusion–exclusion with per-DISTINCT-sketch side cardinalities,
+    so only the union register max + estimate is pairwise.
 
     The pairwise part runs gather → max → histogram FUSED over pair
     chunks: materializing the full (n_pairs, m) gathered matrices first
     streams ~3·n_pairs·m bytes through main memory and measured 4.6x
     slower than chunks whose temporaries stay cache-resident."""
-    ca = hll_estimate_batch(U, p)
+    p = sks[0].p
+    U = np.stack([s.regs for s in sks])
+    if estimator in _HLL_JOINT:
+        return hll_joint_triple_batch(U[ia], U[ib], p)
+    q = 64 - p
+    card = _HLL_ESTIMATORS[estimator]
+
+    def est(regs: np.ndarray) -> np.ndarray:
+        return card(_row_histograms(regs, q + 2), float(U.shape[1]), q)
+
+    ca = est(U)
     n = len(ia)
     cu = np.empty(n, dtype=np.float64)
     chunk = max(1, (4 << 20) // max(U.shape[1], 1))
     for s in range(0, n, chunk):
         e = min(s + chunk, n)
-        u = np.maximum(U[ia[s:e]], U[ib[s:e]])
-        cu[s:e] = hll_estimate_batch(u, p)
+        cu[s:e] = est(np.maximum(U[ia[s:e]], U[ib[s:e]]))
     inter = np.maximum(0.0, ca[ia] + ca[ib] - cu)
     return np.maximum(0.0, cu - ca[ib]), np.maximum(0.0, cu - ca[ia]), inter
 
 
+#: sketch class -> (the params two sketches must share to go through one
+#: batch kernel, that kernel)
+_PAIR_KERNELS = {
+    HLL: (lambda s: s.p, hll_pair_triple_batch),
+    KMV: (lambda s: s.k, kmv_triple_batch),
+    BloomFilter: (lambda s: (s.lg_bits, s.k), bloom_triple_batch),
+    BBitMinHash: (lambda s: (s.lg_r, s.b), bbmh_triple_batch),
+    HyperMinHash: (lambda s: (s.p, s.b), hmh_triple_batch),
+    SuperMinHash: (lambda s: s.m, smh_triple_batch),
+    CountingKMV: (lambda s: s.k, crmh_triple_batch),
+    CountingBBitMinHash: (lambda s: (s.lg_r, s.b), cbbmh_triple_batch),
+}
+
+
 def triple_batch_from_blobs(a_blobs, b_blobs, estimator: str = "default"):
-    """Whole-batch set triples for row-aligned sketch blob sequences.
+    """Set triples (t0, t1, t2) as float64 arrays for row-aligned sketch
+    blob sequences — the pair stage's one entry.
 
-    Dispatches on the self-describing blob header (serde.py layout),
-    dedupes distinct blobs, and stacks payloads into matrices. Returns
-    (t0, t1, t2) float64 arrays, or None when the batch is heterogeneous
-    (mixed types or params) — callers then use the per-pair fallback."""
-    import struct
-
-    first = a_blobs[0]
-    tid = first[4]
-    if tid == 1:  # HLL — header (type, p), payload uint8[m] at 6
-        p = first[5]
-        if any(x[4] != tid or x[5] != p for bl in (a_blobs, b_blobs) for x in bl):
-            return None
-        if estimator in ("ertl_joint_mle", "ertl_joint"):
-            mreg = 1 << p
-            return hll_joint_triple_batch(
-                _stack_payloads(a_blobs, 6, mreg, np.uint8),
-                _stack_payloads(b_blobs, 6, mreg, np.uint8),
-                p,
-            )
-        uniq, ia, ib = _dedupe_blobs(a_blobs, b_blobs)
-        return hll_pair_triple_batch(
-            _stack_payloads(uniq, 6, 1 << p, np.uint8), ia, ib, p
+    Each distinct blob is deserialized once; the distinct sketches are
+    grouped by (type, params), and each group's pairs go through that
+    type's batch kernel. Only a pair whose two sides differ in params
+    (mixed-k KMV is the case the scalar code can compare) goes through
+    :func:`set_triple_any`; an incomparable pair raises there."""
+    check_estimator(estimator)
+    uniq, ia, ib = _dedupe_blobs(list(a_blobs), list(b_blobs))
+    sks = [sketch_from_bytes(x) for x in uniq]
+    groups: dict = {}
+    gid = np.empty(len(sks), dtype=np.int64)
+    for j, sk in enumerate(sks):
+        if type(sk) not in _PAIR_KERNELS:
+            raise TypeError(f"no set triple for sketch type {type(sk).__name__}")
+        params = _PAIR_KERNELS[type(sk)][0](sk)
+        gid[j] = groups.setdefault((type(sk), params), len(groups))
+    out = np.empty((3, len(ia)), dtype=np.float64)
+    same = gid[ia] == gid[ib]
+    for (cls, _), g in groups.items():
+        rows = np.flatnonzero(same & (gid[ia] == g))
+        if not len(rows):
+            continue
+        members = np.flatnonzero(gid == g)
+        local = np.empty(len(sks), dtype=np.int64)
+        local[members] = np.arange(len(members))
+        kernel = _PAIR_KERNELS[cls][1]
+        out[:, rows] = kernel(
+            [sks[j] for j in members], local[ia[rows]], local[ib[rows]], estimator
         )
-    if tid == 4:  # KMV — header <I k at 5, <I len at 9 (len varies)
-        kk = first[5:9]
-        if any(x[4] != tid or x[5:9] != kk for bl in (a_blobs, b_blobs) for x in bl):
-            return None
-        uniq, ia, ib = _dedupe_blobs(a_blobs, b_blobs)
-        return kmv_triple_batch(uniq, ia, ib)
-    if tid == 5:  # BBMH — (lg_r, b), payload uint64[r] at 7
-        hdr = first[5:7]
-        if any(x[4] != tid or x[5:7] != hdr for bl in (a_blobs, b_blobs) for x in bl):
-            return None
-        uniq, ia, ib = _dedupe_blobs(a_blobs, b_blobs)
-        lg_r, bb = first[5], first[6]
-        return bbmh_triple_batch(
-            _stack_payloads(uniq, 7, 8 * (1 << lg_r), np.uint64), ia, ib, lg_r, bb
-        )
-    if tid == 9:  # HyperMinHash — (p, b), payload uint16[m] at 7
-        hdr = first[5:7]
-        if any(x[4] != tid or x[5:7] != hdr for bl in (a_blobs, b_blobs) for x in bl):
-            return None
-        uniq, ia, ib = _dedupe_blobs(a_blobs, b_blobs)
-        p, bb = first[5], first[6]
-        return hmh_triple_batch(
-            _stack_payloads(uniq, 7, 2 * (1 << p), np.uint16), ia, ib, p, bb, estimator
-        )
-    if tid == 10:  # SuperMinHash — <I m at 5, payload float64[m] at 9
-        hdr = first[5:9]
-        if any(x[4] != tid or x[5:9] != hdr for bl in (a_blobs, b_blobs) for x in bl):
-            return None
-        uniq, ia, ib = _dedupe_blobs(a_blobs, b_blobs)
-        (mm,) = struct.unpack_from("<I", first, 5)
-        return smh_triple_batch(_stack_payloads(uniq, 9, 8 * mm, np.float64), ia, ib)
-    if tid == 8:  # CountingKMV — <I k at 5, <I len at 9 (len varies)
-        kk = first[5:9]
-        if any(x[4] != tid or x[5:9] != kk for bl in (a_blobs, b_blobs) for x in bl):
-            return None
-        uniq, ia, ib = _dedupe_blobs(a_blobs, b_blobs)
-        return crmh_triple_batch(uniq, ia, ib)
-    if tid == 11:  # CountingBBMH — (lg_r, b), uint64[r] mins + uint32[r] counts at 7
-        hdr = first[5:7]
-        if any(x[4] != tid or x[5:7] != hdr for bl in (a_blobs, b_blobs) for x in bl):
-            return None
-        uniq, ia, ib = _dedupe_blobs(a_blobs, b_blobs)
-        lg_r = first[5]
-        r = 1 << lg_r
-        return cbbmh_triple_batch(
-            _stack_payloads(uniq, 7, 8 * r, np.uint64),
-            _stack_payloads(uniq, 7 + 8 * r, 4 * r, np.uint32),
-            ia,
-            ib,
-            lg_r,
-            first[6],
-        )
-    if tid == 2:  # Bloom — (lg_bits, k), payload uint64[m/64] at 7
-        hdr = first[5:7]
-        if any(x[4] != tid or x[5:7] != hdr for bl in (a_blobs, b_blobs) for x in bl):
-            return None
-        uniq, ia, ib = _dedupe_blobs(a_blobs, b_blobs)
-        lg_bits, kk = first[5], first[6]
-        return bloom_triple_batch(
-            _stack_payloads(uniq, 7, 8 * ((1 << lg_bits) >> 6), np.uint64),
-            ia,
-            ib,
-            lg_bits,
-            kk,
-        )
-    return None
+    for i in np.flatnonzero(~same):
+        out[:, i] = set_triple_any(sks[ia[i]], sks[ib[i]], estimator)
+    return out[0], out[1], out[2]

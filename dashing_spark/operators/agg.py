@@ -85,22 +85,36 @@ def _shingle_hash_df(
     df: DataFrame, key_cols: Sequence[str], text_col: str, shingle_w: int, seed: int
 ) -> DataFrame:
     """Explode each row into its w-shingle hashes (one int64 `__ih` per
-    shingle occurrence) — pandas-side hashing, used by the weighted path."""
-    src = df.select(*list(key_cols), text_col)
+    shingle occurrence), used by the weighted path. Tokens are hashed
+    pandas-side (``hash_str_array``, not ``hash_tokens_arrow``), while
+    the key columns are taken from the Arrow batch at each shingle's
+    row, so 64-bit keys stay exact next to nulls."""
+    key_cols = list(key_cols)
+    n_keys = len(key_cols)
+    src = df.select(*key_cols, text_col)
     schema = T.StructType(
         _key_schema(src, key_cols) + [T.StructField("__ih", T.LongType(), False)]
     )
 
     def fn(batches):
-        for pdf in batches:
-            toks, lens = hashing.tokenize_flat(pdf[text_col])
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for rb in batches:
+            toks, lens = hashing.tokenize_flat(rb.column(n_keys).to_pandas())
             th = hashing.hash_str_array(toks)
             sh, doc_idx = hashing.shingle_hashes(th, lens, w=shingle_w, seed=seed)
-            out = pdf.iloc[doc_idx][list(key_cols)].reset_index(drop=True)
-            out["__ih"] = sh.view(np.int64)
-            yield out
+            rows = pa.array(doc_idx, type=pa.int64())
+            cols = [
+                rb.column(i).take(rows).cast(arrow_schema.field(i).type)
+                for i in range(n_keys)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                cols + [pa.array(sh.view(np.int64))], schema=arrow_schema
+            )
 
-    return src.mapInPandas(fn, schema=schema)
+    return src.mapInArrow(fn, schema=schema)
 
 
 def _batch_key_codes(rb, n_keys: int):

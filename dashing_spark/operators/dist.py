@@ -11,10 +11,12 @@ The reference's hand-rolled loops map onto Catalyst joins (SURVEY.md §2.5):
   lock-striped heaps) -> Window ``row_number() <= k`` per left key — the
   heap micro-optimization is irrelevant under Spark's shuffle sort.
 
-The pair kernel is a vectorized pandas UDF: every fixed-width sketch type
-(HLL, KMV, BBMH, HyperMinHash, SuperMinHash, Bloom) takes a whole-batch
-stacked-matrix path (functions.compare.triple_batch_from_blobs — zero
-per-row Python math); heterogeneous batches fall back to a per-pair loop.
+The pair kernel is a vectorized pandas UDF over one entry,
+functions.compare.triple_batch_from_blobs: each distinct blob of a batch
+is deserialized once, and every pair-comparable sketch type (HLL, KMV,
+BBMH, HyperMinHash, SuperMinHash, Bloom and the counting minhashes) runs
+its whole-batch kernel — zero per-row Python math. Only pairs whose
+sides differ in params (mixed-k KMV) take the scalar set_triple_any.
 At 10^12-scale the sketch table has one row per *key* (e.g. per
 language/site/partition), so the O(n²) pair stage is over thousands of
 16 KiB blobs, not over documents — broadcast + block nested loop is the
@@ -31,13 +33,10 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from dashing_spark.functions.compare import (
     DISTANCE_MEASURES,
-    compare,
+    check_estimator,
     measure_from_triple_batch,
-    set_triple_any,
-    measure_from_triple,
     triple_batch_from_blobs,
 )
-from dashing_spark.functions.serde import sketch_from_bytes
 from dashing_spark.operators.agg import SKETCH_COL
 from dashing_spark.operators.ship import ensure_shipped
 
@@ -52,42 +51,23 @@ _SWAP_PREFIX = "swap:"
 
 def _measures_udf(measures: Sequence[str], ksinv: float, estimator: str):
     measures = list(measures)
+    check_estimator(estimator)
 
-    def _one(t0, t1, t2, ms, batch):
+    def _measure(t0, t1, t2, ms):
         # "swap:<measure>": the same measure evaluated in the b->a
         # direction (triple sides exchanged) — used by nearest_neighbors
         # to mirror asymmetric measures correctly
         if ms.startswith(_SWAP_PREFIX):
             t0, t1, ms = t1, t0, ms[len(_SWAP_PREFIX):]
-        fn = measure_from_triple_batch if batch else measure_from_triple
-        return fn(t0, t1, t2, ms, ksinv)
+        return measure_from_triple_batch(t0, t1, t2, ms, ksinv)
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def _cmp(a_blobs: pd.Series, b_blobs: pd.Series) -> pd.Series:
-        n = len(a_blobs)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        triples = None
-        if not any(x is None for x in a_blobs) and not any(
-            x is None for x in b_blobs
-        ):
-            al = [bytes(x) for x in a_blobs]
-            bl = [bytes(x) for x in b_blobs]
-            # whole-batch kernel: payloads stacked into (n, m) matrices,
-            # every estimate vectorized (HLL/KMV/BBMH/HMH/SMH/Bloom);
-            # returns None for heterogeneous batches (mixed type/params)
-            triples = triple_batch_from_blobs(al, bl, estimator)
-        if triples is not None:
-            t0, t1, t2 = triples
-            cols = [_one(t0, t1, t2, ms, True) for ms in measures]
-            stacked = np.stack(cols, axis=1)
-            return pd.Series(list(stacked))
-        out = []
-        for ab, bb in zip(a_blobs, b_blobs):
-            sa, sb = sketch_from_bytes(bytes(ab)), sketch_from_bytes(bytes(bb))
-            t0, t1, t2 = set_triple_any(sa, sb, estimator)
-            out.append([_one(t0, t1, t2, ms, False) for ms in measures])
-        return pd.Series(out)
+        t0, t1, t2 = triple_batch_from_blobs(
+            [bytes(x) for x in a_blobs], [bytes(x) for x in b_blobs], estimator
+        )
+        cols = [_measure(t0, t1, t2, ms) for ms in measures]
+        return pd.Series(list(np.stack(cols, axis=1)), dtype=object)
 
     return _cmp
 
@@ -171,33 +151,53 @@ def pick_pair_strategy(sketches: DataFrame) -> int | None:
     return max(2, min(_MAX_GRID_BLOCKS, -(-size // threshold)))
 
 
+def _pair_join(
+    a: DataFrame, b: DataFrame, key_cols: Sequence[str], n_blocks, cond=None
+) -> DataFrame:
+    """Join the "a_"- and "b_"-prefixed sketch sides, keeping the pairs
+    that satisfy ``cond`` (all pairs when None).
+
+    By default ``b`` is broadcast and the join is a nested loop. With
+    ``n_blocks`` B > 1 it is the GRID join: each ``b`` row lands in
+    block h(b key) mod B (column ``__bb``), each ``a`` row is exploded
+    over the B block ids, and the sides meet in ONE equi-join on the
+    block id — every (a, b) combination on exactly one reducer, ``b``
+    never replicated, no executor holding more than one ``b`` block."""
+    if not (n_blocks and n_blocks > 1):
+        b = F.broadcast(b)
+        return a.crossJoin(b) if cond is None else a.join(b, cond)
+    b = b.withColumn(
+        "__bb",
+        F.pmod(F.xxhash64(*[f"b_{k}" for k in key_cols]), F.lit(n_blocks)).cast("int"),
+    )
+    a = a.withColumn("__bb", F.explode(F.sequence(F.lit(0), F.lit(int(n_blocks) - 1))))
+    pairs = a.join(b, "__bb")
+    if cond is not None:
+        pairs = pairs.filter(cond)
+    return pairs.drop("__bb")
+
+
 def all_pairs(
     sketches: DataFrame,
     key_cols: Sequence[str],
     measures: Sequence[str] = ("ji",),
     ksinv: float = 1.0,
     estimator: str = "default",
-    broadcast: bool = True,
     n_blocks: int | str | None = "auto",
 ) -> DataFrame:
     """Upper-triangular all-pairs comparison: rows with a_key < b_key —
     the long-format equivalent of the packed UT float32 matrix
     (/root/reference/distmat/distmat.h:151-183).
 
-    Physical strategy: with ``broadcast`` (default) the right side is
-    broadcast and the join is a nested loop — right while the sketch
-    table fits an executor (thousands of keys × ~16 KiB blobs). Past
-    that (10^5+ keys → the table no longer broadcasts), pass
-    ``n_blocks`` to switch to the GRID join: each sketch lands in block
-    h(key) mod B; the full B×B block grid is a tiny broadcast table
-    that replicates the LEFT side B ways, and the right side meets it
-    in ONE equi-join on the block id (no right-side replication). Every
-    ordered key combination appears on exactly one reducer — block pair
-    (i, j) holds left block i × right block j, a balanced (n/B)² local
-    cross — and the `a < b` condition keeps each unordered pair once.
-    Total traffic n·(B+1) rows vs the O(n²) a cartesian would shuffle:
-    the classic O(n·√P) theta-join cost, and no executor ever holds
-    more than two blocks.
+    Physical strategy: by default the right side is broadcast and the
+    join is a nested loop — right while the sketch table fits an
+    executor (thousands of keys × ~16 KiB blobs). Past that (10^5+ keys
+    → the table no longer broadcasts), pass ``n_blocks`` to switch to
+    the GRID join (:func:`_pair_join`): the left side is replicated B
+    ways and meets the right side's h(key) mod B block in ONE equi-join
+    on the block id, and the `a < b` condition keeps each unordered
+    pair once. Total traffic n·(B+1) rows vs the O(n²) a cartesian
+    would shuffle: the classic O(n·√P) theta-join cost.
 
     ``n_blocks="auto"`` (the default) picks the strategy from the
     table's Catalyst size statistics via :func:`pick_pair_strategy`;
@@ -212,25 +212,7 @@ def all_pairs(
     cond = F.struct(*[F.col(f"a_{k}") for k in key_cols]) < F.struct(
         *[F.col(f"b_{k}") for k in key_cols]
     )
-    if n_blocks and n_blocks > 1:
-        spark = sketches.sparkSession
-        blk_a = F.pmod(F.xxhash64(*[f"a_{k}" for k in key_cols]), F.lit(n_blocks))
-        blk_b = F.pmod(F.xxhash64(*[f"b_{k}" for k in key_cols]), F.lit(n_blocks))
-        a = a.withColumn("__ba", blk_a)
-        b = b.withColumn("__bb", blk_b)
-        bp = spark.createDataFrame(
-            [(i, j) for i in range(n_blocks) for j in range(n_blocks)],
-            ["__ba", "__bb"],
-        )
-        # left side replicated across its row of the block grid (tiny
-        # broadcast), then ONE equi-join on the block id co-locates each
-        # block pair on a single reducer
-        left = a.join(F.broadcast(bp), "__ba")
-        pairs = left.join(b, "__bb").filter(cond).drop("__ba", "__bb")
-        return _attach_measures(pairs, measures, ksinv, estimator)
-    if broadcast:
-        b = F.broadcast(b)
-    pairs = a.join(b, cond)
+    pairs = _pair_join(a, b, key_cols, n_blocks, cond)
     return _attach_measures(pairs, measures, ksinv, estimator)
 
 
@@ -254,8 +236,8 @@ def query_reference(
     `partdist_loop`, /root/reference/src/dashing.h:660-712); there the
     GRID join splits the reference side into B = ceil(size/threshold)
     id-hash blocks and replicates each query row across the B block ids
-    (explode — no block-pair table needed: a rectangle has no
-    triangular filter), meeting in ONE equi-join on the block id. Per
+    (:func:`_pair_join`, with no triangular filter), meeting in ONE
+    equi-join on the block id. Per
     reducer: |R|/B build rows + a streamed pass of the queries —
     bounded memory at any reference size, traffic |Q|·B + |R| rows vs
     the broadcast's |R| × executors.
@@ -271,20 +253,7 @@ def query_reference(
     _validate_n_blocks(n_blocks)
     q = _prefixed(queries, key_cols, "a_")
     r = _prefixed(references, key_cols, "b_")
-    if n_blocks and n_blocks > 1:
-        rb = r.withColumn(
-            "__br",
-            F.pmod(
-                F.xxhash64(*[f"b_{k}" for k in key_cols]), F.lit(n_blocks)
-            ).cast("int"),
-        )
-        qb = q.withColumn(
-            "__br",
-            F.explode(F.sequence(F.lit(0), F.lit(int(n_blocks) - 1))),
-        )
-        pairs = qb.join(rb, "__br").drop("__br")
-        return _attach_measures(pairs, measures, ksinv, estimator)
-    pairs = q.crossJoin(F.broadcast(r))
+    pairs = _pair_join(q, r, key_cols, n_blocks)
     return _attach_measures(pairs, measures, ksinv, estimator)
 
 

@@ -38,10 +38,6 @@ def _norm_expr(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def _cos_expr(a, b):
-    return _dot_expr(a, b) / (_norm_expr(a) * _norm_expr(b))
-
-
 def _vec_with_norm(embeddings, id_col: str, vec_col: str):
     """(id, v, nv): vector + its norm, computed ONCE per document. Pair
     stages then evaluate only the dot product — same arithmetic, same

@@ -180,6 +180,39 @@ class TestDist:
             assert abs(got[k] - 50) / 50 < 0.1
 
 
+class TestEstimatorFlags:
+    @pytest.mark.parametrize(
+        "flag, estimator", [("-m", "ertl_mle"), ("-E", "original")]
+    )
+    def test_hll_pair_values_follow_the_flag(
+        self, spark, doc_dir, tmp_path, flag, estimator
+    ):
+        """dist -m / -E on HLL sketches give, per pair, what in-process
+        compare() gives under that estimator: the flag reaches the pair
+        stage."""
+        from dashing_spark.functions.compare import compare
+        from dashing_spark.functions.serde import sketch_from_bytes
+
+        skp = str(tmp_path / "sk.parquet")
+        rc = main(["sketch", "-S", "10", "-o", skp, *_paths(doc_dir)], spark=spark)
+        assert rc == 0
+        out = str(tmp_path / "pairs.parquet")
+        rc = main(["dist", "-H", flag, "--out-parquet", out, skp], spark=spark)
+        assert rc == 0
+        sk = {
+            r["key"]: sketch_from_bytes(bytes(r["sketch"]))
+            for r in spark.read.parquet(skp).collect()
+        }
+        got = {
+            (r["a_key"], r["b_key"]): r["ji"]
+            for r in spark.read.parquet(out).collect()
+        }
+        assert len(got) == 3
+        for (a, b), v in got.items():
+            want = compare(sk[a], sk[b], "ji", estimator=estimator)
+            assert abs(v - want) <= 1e-6 * want, (flag, a, b, v, want)
+
+
 class TestSketchUnionFoldView:
     def test_sketch_then_presketched_dist(self, spark, doc_dir, tmp_path):
         skp = str(tmp_path / "sk.parquet")

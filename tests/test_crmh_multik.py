@@ -141,7 +141,7 @@ class TestHyperMinHash:
         }
         for lang, d in exact.items():
             assert abs(est[lang] - d) <= max(0.05 * d, 2.0)
-        # pair kernel falls back to set_triple_any for HMH blobs
+        # the pair stage runs the HyperMinHash batch kernel on HMH blobs
         pairs = dist.all_pairs(sk, ["lang"], measures=("ji",)).collect()
         assert len(pairs) == 10
         for r in pairs:

@@ -542,18 +542,25 @@ class TestTripleBatchKernels:
         return out
 
     @pytest.mark.parametrize(
-        "factory",
+        "factory, estimator",
         [
-            lambda: KMV(128),
-            lambda: BBitMinHash(6, 16),
-            lambda: BBitMinHash(6, 24),
-            lambda: SuperMinHash(64),
-            lambda: HyperMinHash(8, 10),
-            lambda: BloomFilter(10, 4),
+            (lambda: KMV(128), "default"),
+            (lambda: BBitMinHash(6, 16), "default"),
+            (lambda: BBitMinHash(6, 24), "default"),
+            (lambda: SuperMinHash(64), "default"),
+            (lambda: HyperMinHash(8, 10), "default"),
+            (lambda: BloomFilter(10, 4), "default"),
+            (lambda: HLL(10), "ertl_improved"),
+            (lambda: HLL(10), "ertl_mle"),
+            (lambda: HLL(10), "original"),
+            (lambda: HLL(10), "ertl_joint_mle"),
         ],
-        ids=["kmv", "bbmh", "bbmh24", "smh", "hmh", "bloom"],
+        ids=[
+            "kmv", "bbmh", "bbmh24", "smh", "hmh", "bloom",
+            "hll_improved", "hll_mle", "hll_original", "hll_joint_mle",
+        ],
     )
-    def test_batch_matches_scalar(self, factory):
+    def test_batch_matches_scalar(self, factory, estimator):
         from dashing_spark.functions.compare import (
             set_triple_any,
             triple_batch_from_blobs,
@@ -562,11 +569,9 @@ class TestTripleBatchKernels:
         pairs = self._pairs(factory)
         al = [a.to_bytes() for a, _ in pairs]
         bl = [b.to_bytes() for _, b in pairs]
-        batch = triple_batch_from_blobs(al, bl, "default")
-        assert batch is not None
-        t0b, t1b, t2b = batch
+        t0b, t1b, t2b = triple_batch_from_blobs(al, bl, estimator)
         for i, (a, b) in enumerate(pairs):
-            t0, t1, t2 = set_triple_any(a, b, "default")
+            t0, t1, t2 = set_triple_any(a, b, estimator)
             for s, v in ((t0, t0b[i]), (t1, t1b[i]), (t2, t2b[i])):
                 if math.isinf(s) or math.isinf(v):
                     assert s == v, (i, s, v)
@@ -620,12 +625,52 @@ class TestTripleBatchKernels:
                 for s, v in ((t0, t0b[i]), (t1, t1b[i]), (t2, t2b[i])):
                     assert abs(s - v) <= 1e-6 * max(1.0, abs(s)), (i, s, v)
 
-    def test_heterogeneous_batch_falls_back(self):
+    def test_mixed_k_kmv_batch_matches_scalar(self):
+        """One batch of KMV sketches with k=128 and k=256: same-k pairs
+        run their k's batch kernel, cross-k pairs the scalar path, and
+        every pair equals set_triple_any."""
+        from dashing_spark.functions.compare import (
+            set_triple_any,
+            triple_batch_from_blobs,
+        )
+
+        rng = np.random.default_rng(29)
+        shared = rng.integers(0, 2**63, size=400, dtype=np.uint64)
+        sks = []
+        for k in (128, 256, 128, 256, 128):
+            s = KMV(k)
+            n_own = int(rng.integers(0, 900))
+            s.update_hashes(
+                np.concatenate(
+                    [shared, rng.integers(0, 2**63, size=n_own, dtype=np.uint64)]
+                )
+            )
+            sks.append(s)
+        sks.append(KMV(256))  # empty
+        pairs = [(a, b) for a in sks for b in sks]
+        assert any(a.k == b.k for a, b in pairs)
+        assert any(a.k != b.k for a, b in pairs)
+        t0b, t1b, t2b = triple_batch_from_blobs(
+            [a.to_bytes() for a, _ in pairs], [b.to_bytes() for _, b in pairs]
+        )
+        for i, (a, b) in enumerate(pairs):
+            t0, t1, t2 = set_triple_any(a, b)
+            for s, v in ((t0, t0b[i]), (t1, t1b[i]), (t2, t2b[i])):
+                assert abs(s - v) <= 1e-9 * max(1.0, abs(s)), (i, a.k, b.k, s, v)
+
+    def test_incomparable_pair_raises(self):
         from dashing_spark.functions.compare import triple_batch_from_blobs
 
-        a = KMV(128)
-        b = KMV(256)  # same type, different k -> no batch kernel
-        assert triple_batch_from_blobs([a.to_bytes()], [b.to_bytes()]) is None
+        a, b = HLL(10), KMV(128)
+        with pytest.raises(TypeError, match="cannot compare"):
+            triple_batch_from_blobs([a.to_bytes()], [b.to_bytes()])
+
+    def test_unknown_estimator_raises(self):
+        from dashing_spark.functions.compare import triple_batch_from_blobs
+
+        blob = HLL(10).to_bytes()
+        with pytest.raises(ValueError, match="unknown estimator"):
+            triple_batch_from_blobs([blob], [blob], "ertl-mle")
 
     def test_mle_dll_batch_matches_scalar(self):
         """ertl_mle_batch's derivative must agree with the scalar
@@ -777,13 +822,13 @@ class TestEmptyPairBatch:
         from dashing_spark.functions.compare import kmv_triple_batch
 
         rng = np.random.default_rng(1)
-        blobs = []
+        sks = []
         for _ in range(3):
             s = KMV(64)
             s.update_hashes(rng.integers(0, 2**63, 100, dtype=np.int64).astype(np.uint64))
-            blobs.append(s.to_bytes())
+            sks.append(s)
         empty = np.zeros(0, dtype=np.int64)
-        out = kmv_triple_batch(blobs, empty, empty)
+        out = kmv_triple_batch(sks, empty, empty)
         assert isinstance(out, tuple) and len(out) == 3
         assert all(len(x) == 0 for x in out)
 

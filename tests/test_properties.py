@@ -146,6 +146,7 @@ def test_kmv_batch_matches_scalar_property(seed, k, sizes):
         _dedupe_blobs,
     )
     from dashing_spark.functions.kmv import KMV
+    from dashing_spark.functions.serde import sketch_from_bytes
 
     rng = np.random.default_rng(seed)
     al, bl = [], []
@@ -161,7 +162,7 @@ def test_kmv_batch_matches_scalar_property(seed, k, sizes):
         al.append(a.to_bytes())
         bl.append(b.to_bytes())
     uniq, ia, ib = _dedupe_blobs(al, bl)
-    t0b, t1b, t2b = kmv_triple_batch(uniq, ia, ib)
+    t0b, t1b, t2b = kmv_triple_batch([sketch_from_bytes(x) for x in uniq], ia, ib)
     for i, (a, b) in enumerate(pairs):
         t0, t1, t2 = set_triple_any(a, b)
         for s, v in ((t0, t0b[i]), (t1, t1b[i]), (t2, t2b[i])):

@@ -204,21 +204,19 @@ class TestStreaming:
 
 
 class TestStatefulStream:
-    def test_engine_state_matches_batch_and_counts_exactly(self, spark):
+    def test_engine_state_matches_batch_and_counts_exactly(self, spark, tmp_path):
         """applyInPandasWithState per-day HLLs: final estimates must be
         identical to the batch build (max-monoid state is micro-batch-
         boundary-free) and n_updates must count every event once."""
-        import tempfile
-
         from pyspark.sql import Window, functions as F
 
         from dashing_spark.functions import HLL
         from dashing_spark.streaming.stateful import stateful_sketch_stream
 
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        src = tempfile.mkdtemp(prefix="tst_state_src_")
-        ck = tempfile.mkdtemp(prefix="tst_state_ck_")
-        out = tempfile.mkdtemp(prefix="tst_state_out_")
+        src, ck, out = (str(tmp_path / d) for d in ("src", "ck", "out"))
+        for d in (src, ck, out):
+            os.makedirs(d)
         ev.repartition(3).write.mode("overwrite").parquet(src)
         stream = (
             spark.readStream.schema(ev.schema)

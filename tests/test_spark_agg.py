@@ -242,6 +242,21 @@ class TestExactKeys:
                 self._numeric_blob,
             ),
         }
+        # weighted shingles (w > 1 hashes tokens pandas-side): the
+        # reference build keys on k as a string, which stays exact
+        weighted = lambda d: agg.sketch_tokens_by_key(  # noqa: E731
+            d, key_cols, lambda: HLL.empty(10), weighted=True, shingle_w=2
+        )
+        ref = {
+            tuple(
+                r[k] if k != "k" or r[k] is None else int(r[k]) for k in key_cols
+            ): bytes(r["sketch"])
+            for r in weighted(df.withColumn("k", F.col("k").cast("string"))).collect()
+        }
+        builds["weighted_w2"] = (
+            weighted(df),
+            lambda rows: ref[tuple(rows[0][i] for i in idx)],
+        )
         for name, (sk, expect) in builds.items():
             got = {
                 tuple(r[k] for k in key_cols): bytes(r["sketch"]) for r in sk.collect()
