@@ -10,6 +10,13 @@ result_cmp quirk that divides by the union.
 
 ``ksinv`` is 1/k where k is the shingle width (the reference's k-mer
 length) — it scales the Mash-style distance transforms.
+
+This module defines no cardinality estimator: HLL triples and HLL
+estimator names come from ``functions.hll`` (its ``ESTIMATORS`` table and
+``triple_batch``), HyperMinHash cardinalities from ``hmh.hmh_estimator``.
+``compare``/``set_triple_any`` take "default" as the MLE; the pair stage,
+``triple_batch_from_blobs``, takes it as improved raw
+(``hll.PAIR_DEFAULT_ESTIMATOR``) for HLL.
 """
 
 from __future__ import annotations
@@ -22,9 +29,9 @@ from dashing_spark.functions.bbmh import BBitMinHash, bbmh_jaccard
 from dashing_spark.functions.bloom import BloomFilter
 from dashing_spark.functions.cbbmh import CountingBBitMinHash, cbbmh_weighted_jaccard
 from dashing_spark.functions.crmh import CountingKMV, crmh_histogram_intersection
+from dashing_spark.functions import hll
 from dashing_spark.functions.hll import HLL
-from dashing_spark.functions.hll import set_triple as hll_set_triple
-from dashing_spark.functions.hmh import HyperMinHash, hmh_jaccard
+from dashing_spark.functions.hmh import HyperMinHash, hmh_estimator, hmh_jaccard
 from dashing_spark.functions.kmv import KMV, kmv_set_triple
 from dashing_spark.functions.serde import sketch_from_bytes
 from dashing_spark.functions.smh import SuperMinHash, smh_jaccard
@@ -56,13 +63,7 @@ def set_triple_any(a, b, estimator: str = "default") -> tuple[float, float, floa
             f"cannot compare {type(a).__name__} with {type(b).__name__}"
         )
     if isinstance(a, HLL):
-        if estimator in ("ertl_joint_mle", "ertl_joint"):
-            t0, t1, t2 = hll_joint_triple_batch(
-                a.regs[None, :], b.regs[None, :], a.p
-            )
-            return float(t0[0]), float(t1[0]), float(t2[0])
-        est = "ertl_mle" if estimator == "default" else estimator
-        return hll_set_triple(a, b, est)
+        return hll.set_triple(a, b, estimator)
     if isinstance(a, KMV):
         return kmv_set_triple(a, b)
     if isinstance(a, BloomFilter):
@@ -158,373 +159,8 @@ def compare(a, b, measure: str, ksinv: float = 1.0, estimator: str = "default") 
 
 
 # ---------------------------------------------------------------------------
-# Vectorized HLL batch kernel (the hot path of the pair stage)
+# Vectorized measures (the pair stage's per-row tail)
 # ---------------------------------------------------------------------------
-
-
-def _sigma_vec(x: np.ndarray) -> np.ndarray:
-    y = np.ones_like(x)
-    z = x.copy()
-    x = x.copy()
-    for _ in range(64):
-        x *= x
-        z_prev = z.copy()
-        z += x * y
-        y += y
-        if np.all((z == z_prev) | ~np.isfinite(z)):
-            break
-    z[x >= 1.0] = np.inf  # x==1 input ⇒ divergent series
-    return z
-
-
-def _tau_vec(x: np.ndarray) -> np.ndarray:
-    out_zero = (x == 0.0) | (x == 1.0)
-    x = x.copy()
-    y = np.ones_like(x)
-    z = 1.0 - x
-    for _ in range(64):
-        x = np.sqrt(x)
-        z_prev = z.copy()
-        y *= 0.5
-        z -= ((1.0 - x) ** 2) * y
-        if np.all(z == z_prev):
-            break
-    z /= 3.0
-    z[out_zero] = 0.0
-    return z
-
-
-def _row_histograms(vals: np.ndarray, n_buckets: int) -> np.ndarray:
-    """Per-row histograms of an (nrows, m) int matrix via flat bincounts.
-
-    Index arithmetic runs in int32 over row CHUNKS sized so the flat
-    index array stays cache-resident: on a memory-bandwidth-bound host
-    the full-matrix int64 variant is 17-43x slower (measured 9.8 s vs
-    0.23 s for 5000x16384) because it streams an 8-byte temp per
-    register. Chunking caps the temp at ~16 MB regardless of nrows and
-    keeps every flat index < 2^31 by construction."""
-    nrows, m = vals.shape
-    out = np.empty((nrows, n_buckets), dtype=np.float64)
-    # chunk so chunk*m int32 temp ≈ 16 MB and chunk*n_buckets < 2^31
-    chunk = max(1, min(nrows, (4 << 20) // max(m, 1)))
-    off = (np.arange(chunk, dtype=np.int32) * n_buckets)[:, None]
-    for s in range(0, nrows, chunk):
-        e = min(s + chunk, nrows)
-        flat = (vals[s:e].astype(np.int32) + off[: e - s]).ravel()
-        out[s:e] = np.bincount(flat, minlength=(e - s) * n_buckets).reshape(
-            e - s, n_buckets
-        )
-    return out
-
-
-def _ertl_improved_from_hist(c: np.ndarray, m: float, q: int) -> np.ndarray:
-    """Ertl improved-raw estimator over (nrows, q+2) histograms."""
-    denom = m * _tau_vec(1.0 - c[:, q + 1] / m)
-    for k in range(q, 0, -1):
-        denom += c[:, k]
-        denom *= 0.5
-    denom += m * _sigma_vec(c[:, 0] / m)
-    alpha_inf = 1.0 / (2.0 * math.log(2.0))
-    return alpha_inf * m * m / denom
-
-
-def hll_estimate_batch(regs: np.ndarray, p: int) -> np.ndarray:
-    """Ertl improved-raw estimates for a (nrows, m) uint8 register matrix
-    — whole-batch, no per-row Python. Used by the pair-comparison UDF."""
-    q = 64 - p
-    c = _row_histograms(regs, q + 2)
-    return _ertl_improved_from_hist(c, float(regs.shape[1]), q)
-
-
-def _mle_dll_batch(lam: np.ndarray, c: np.ndarray, m: float, q: int) -> np.ndarray:
-    """Vectorized d/dλ of the Poisson log-likelihood (Ertl 2017 §3) for
-    (nrows,) λ against (nrows, q+2) register histograms.
-
-    Each bin's exp(-λ/(m·2^k)) is evaluated DIRECTLY with exp/expm1 of
-    the exact exponent — never by repeated squaring from k=q, where
-    exp(-λ/(m·2^q)) rounds to exactly 1.0 for any realistic λ and stays
-    1.0 through every squaring (total precision loss). Only bins with a
-    nonzero count anywhere in the batch are evaluated; histograms are
-    concentrated around log2(n/m), so this is ~15 bins, not q."""
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        dll = -c[:, 0] / m
-        if np.any(c[:, q + 1] > 0):
-            g = 1.0 / (m * float(1 << q))
-            w = lam * g
-            # g·e^{-w}/(1-e^{-w}) = g·e^{-w}/(-expm1(-w)); w→0 ⇒ ≈ 1/λ
-            sat = g * np.exp(-w) / (-np.expm1(-w))
-            dll = dll + np.where(c[:, q + 1] > 0, c[:, q + 1] * sat, 0.0)
-        for k in range(1, q + 1):
-            ck = c[:, k]
-            if not np.any(ck > 0):
-                continue
-            a = 1.0 / (m * float(1 << k))
-            w = lam * a
-            e = np.exp(-w)
-            # (-a·e_a + 2a·e_a²)/(e_a − e_a²) = a·(2e−1)/(-expm1(-w))
-            term = a * (2.0 * e - 1.0) / (-np.expm1(-w))
-            dll = dll + np.where(ck > 0, ck * term, 0.0)
-    return dll
-
-
-def ertl_mle_batch(c: np.ndarray, m: float, q: int) -> np.ndarray:
-    """Vectorized Poisson-MLE cardinality over (nrows, q+2) histograms —
-    lock-step bracketed bisection on dL/dλ, seeded by improved-raw."""
-    imp = _ertl_improved_from_hist(c, m, q)
-    x0 = np.maximum(np.nan_to_num(imp, nan=1e-12, posinf=1e30), 1e-12)
-    lo, hi = x0.copy(), x0.copy()
-    for _ in range(140):
-        need = _mle_dll_batch(lo, c, m, q) <= 0.0
-        if not need.any():
-            break
-        lo[need] *= 0.5
-    for _ in range(140):
-        need = _mle_dll_batch(hi, c, m, q) >= 0.0
-        if not need.any():
-            break
-        hi[need] *= 2.0
-    for _ in range(100):
-        mid = 0.5 * (lo + hi)
-        gt = _mle_dll_batch(mid, c, m, q) > 0.0
-        lo = np.where(gt, mid, lo)
-        hi = np.where(gt, hi, mid)
-        if np.all(hi - lo <= 1e-9 * hi):
-            break
-    out = 0.5 * (lo + hi)
-    out = np.where(c[:, 0] == m, 0.0, out)        # empty sketch
-    out = np.where(c[:, q + 1] == m, imp, out)    # fully saturated
-    return out
-
-
-def hll_joint_triple_batch(
-    a_regs: np.ndarray, b_regs: np.ndarray, p: int, n_cycles: int = 3
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Ertl joint-MLE set triples (Ertl 2017 §4; the reference's
-    ERTL_JOINT_MLE, used by readfilt — /root/reference/src/readfilt.cpp:118,
-    flag src/distmain.cpp:59-62), vectorized in lockstep over row-aligned
-    register-matrix pairs.
-
-    Model (re-derived from the Poisson model, not transcribed): with
-    independent exclusive cardinalities (λa, λb, λx) of A\\B, B\\A, A∩B,
-    K_A = max(K_a, K_x) and K_B = max(K_b, K_x), so
-      P(K_A ≤ s, K_B ≤ t) = z(min(s,t), λx)·z(s, λa)·z(t, λb),
-      z(k, λ) = exp(−λ·2^{−k}/m)  (z(q+1)=1, z(−1)=0).
-    The register-pair cell probabilities factor per comparison branch
-    (with w_a = λa·2^{−s}/m, w_bx = (λb+λx)·2^{−t}/m, etc.):
-      s > t:  P = e^{−w_a}(1−e^{−w_a}) · e^{−w_bx}(1−e^{−w_bx})
-              (t = 0 second factor: e^{−w_bx}; s = q+1 first: 1−e^{−w_a})
-      s < t:  symmetric
-      s = t = k: P = e^{−g}[expm1(−u)·expm1(−v) + e^{ξ−u−v} − e^{−u−v}],
-              u = (λa+λx)r_k, v = (λb+λx)r_k, ξ = λx·r_k, g = u+v−ξ
-              (k = 0: P = e^{−g}; k = q+1: drop the e^{−g} factor).
-    Everything is evaluated through exp/expm1 of EXACT exponents — never
-    differences of numbers near 1 (a z-value table loses all precision at
-    λ·2^{−k}/m < 1e−16, which is the common case for k near q). The joint
-    log-likelihood is maximized coordinate-wise by bracketed bisection on
-    the analytic ∂logL/∂λ, all pairs advancing in lockstep (pure numpy).
-    Exploits the per-register PAIRING that inclusion–exclusion throws
-    away — substantially lower variance at low/moderate overlap."""
-    n, m_i = a_regs.shape
-    # rows are independent (lockstep bisection never couples pairs), so
-    # large batches are processed in chunks that cap the (chunk, m)
-    # int64 temporaries (va/vb/cell-id/group-id ≈ 32 B/register) at
-    # ~256 MB — a 20k-pair p=14 batch would otherwise materialize ~8 GB.
-    # Chunking is bit-identical: each row's COO cells, seeds, and
-    # bisection path are untouched.
-    chunk = max(1, (8 << 20) // max(m_i, 1))
-    if n > chunk:
-        parts = [
-            hll_joint_triple_batch(
-                a_regs[s : s + chunk], b_regs[s : s + chunk], p, n_cycles
-            )
-            for s in range(0, n, chunk)
-        ]
-        return tuple(np.concatenate(col) for col in zip(*parts))
-    m = float(m_i)
-    q = 64 - p
-    va = a_regs.astype(np.int64)
-    vb = b_regs.astype(np.int64)
-
-    # sparse per-row 2-D histogram: COO (row, ka, kb, weight)
-    width = q + 2
-    combined = va * width + vb  # (n, m) cell ids
-    gid = (np.arange(n, dtype=np.int64) * (width * width))[:, None] + combined
-    uniq, w = np.unique(gid.ravel(), return_counts=True)
-    rows = uniq // (width * width)
-    cell = uniq % (width * width)
-    s = cell // width  # ka per cell
-    t = cell % width   # kb per cell
-    w = w.astype(np.float64)
-
-    # seeds from the inclusion–exclusion triple (improved raw)
-    ca = _ertl_improved_from_hist(_row_histograms(va, width), m, q)
-    cb = _ertl_improved_from_hist(_row_histograms(vb, width), m, q)
-    cu = _ertl_improved_from_hist(_row_histograms(np.maximum(va, vb), width), m, q)
-    la0 = np.maximum(cu - cb, 1.0)
-    lb0 = np.maximum(cu - ca, 1.0)
-    lx0 = np.maximum(ca + cb - cu, 1.0)
-
-    # per-cell branch classification and rates (fixed across iterations).
-    # Every cell belongs to exactly one branch, so the iteration loop
-    # gathers each branch's cells ONCE and evaluates its formula only
-    # there — the per-cell values (hence the bincount below) are
-    # bit-identical to evaluating every formula full-width and masking,
-    # at ~1/3 the exp/expm1 work (dll dominates the bisection cost).
-    br_gt = s > t
-    br_lt = s < t
-    br_eq0 = (s == t) & (s == 0)
-    br_eqk = (s == t) & (s >= 1)          # includes the saturated cell
-    pow2 = 2.0 ** -np.arange(q + 2, dtype=np.float64)
-    r_s = pow2[np.minimum(s, q)] / m      # s = q+1 uses the z(q) rate
-    r_t = pow2[np.minimum(t, q)] / m
-    i_gt = np.flatnonzero(br_gt)
-    i_lt = np.flatnonzero(br_lt)
-    i_eq0 = np.flatnonzero(br_eq0)
-    i_eqk = np.flatnonzero(br_eqk)
-    rows_gt, rows_lt, rows_eqk = rows[i_gt], rows[i_lt], rows[i_eqk]
-    rs_gt, rt_gt = r_s[i_gt], r_t[i_gt]
-    rs_lt, rt_lt = r_s[i_lt], r_t[i_lt]
-    rs_eqk = r_s[i_eqk]
-    sat_s_gt = s[i_gt] == q + 1
-    sat_t_lt = t[i_lt] == q + 1
-    tzero_gt = t[i_gt] == 0
-    szero_lt = s[i_lt] == 0
-    eq_sat = s[i_eqk] == q + 1
-
-    def _dlog_pair_factor(wv, r, sat):
-        """d/dλ of log[e^{−w}(1−e^{−w})] = r(2e^{−w}−1)/(1−e^{−w}),
-        or of log[1−e^{−w}] = r·e^{−w}/(1−e^{−w}) at the saturated index."""
-        e = np.exp(-wv)
-        den = np.maximum(-np.expm1(-wv), 1e-300)
-        return np.where(sat, r * e / den, r * (2.0 * e - 1.0) / den)
-
-    def dll(la, lb, lx, ci, act=None):
-        """Per-row ∂logL/∂λ_ci, assembled from the analytic per-branch
-        derivatives of the stable cell-probability forms.
-
-        ``act`` (bool per row, or None = all) restricts evaluation to
-        the rows whose bracket is still moving: per-row sums are each
-        accumulated over that row's own cells in unchanged cell order
-        (boolean gather preserves relative order), so an active row's
-        derivative is BIT-IDENTICAL to the full-width evaluation and
-        the bisection trajectory is unchanged — inactive rows return 0
-        and are never read by the gated updates. Rows converge at very
-        different speeds, so skipping the settled ones cuts the
-        exp/expm1 volume several-fold late in each bracket."""
-        if act is None:
-            mc = np.ones(len(s), dtype=bool)
-        else:
-            mc = act[rows]
-        pos = np.cumsum(mc) - 1  # cell id -> index in compressed array
-        contrib = np.zeros(int(mc.sum()))
-        rows_c = rows[mc]
-        w_c = w[mc]
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            sg = mc[i_gt]
-            rg = rows_gt[sg]
-            if ci == 0:
-                d_gt = _dlog_pair_factor(
-                    la[rg] * rs_gt[sg], rs_gt[sg], sat_s_gt[sg]
-                )
-            else:  # λb and λx enter the s>t branch only via (λb+λx)·r_t
-                d_gt = np.where(
-                    tzero_gt[sg],
-                    -rt_gt[sg],
-                    _dlog_pair_factor(
-                        (lb[rg] + lx[rg]) * rt_gt[sg], rt_gt[sg], False
-                    ),
-                )
-            contrib[pos[i_gt[sg]]] = d_gt
-            sl = mc[i_lt]
-            rl = rows_lt[sl]
-            if ci == 1:
-                d_lt = _dlog_pair_factor(
-                    lb[rl] * rt_lt[sl], rt_lt[sl], sat_t_lt[sl]
-                )
-            else:  # λa and λx enter the s<t branch only via (λa+λx)·r_s
-                d_lt = np.where(
-                    szero_lt[sl],
-                    -rs_lt[sl],
-                    _dlog_pair_factor(
-                        (la[rl] + lx[rl]) * rs_lt[sl], rs_lt[sl], False
-                    ),
-                )
-            contrib[pos[i_lt[sl]]] = d_lt
-            # s == t == 0: P = exp(−(λa+λb+λx)/m), same dlog for all coords
-            contrib[pos[i_eq0[mc[i_eq0]]]] = -1.0 / m
-            # s == t == k ≥ 1 (r_k = r_s = r_t here)
-            sk_ = mc[i_eqk]
-            rk_ = rows_eqk[sk_]
-            lar, lbr, lxr = la[rk_], lb[rk_], lx[rk_]
-            r_s_k = rs_eqk[sk_]
-            u = (lar + lxr) * r_s_k
-            v = (lbr + lxr) * r_s_k
-            xi = lxr * r_s_k
-            e1 = np.expm1(-u)
-            e2 = np.expm1(-v)
-            e3 = np.exp(-(u + v))
-            e34 = np.exp(xi - u - v) - e3    # e^{−(u+v)}·(e^{ξ}−1), stable
-            inner = np.maximum(e1 * e2 + e34, 1e-300)
-            di_du = -np.exp(-u) * e2 - e34
-            di_dv = -np.exp(-v) * e1 - e34
-            if ci == 0:
-                dnum = di_du
-            elif ci == 1:
-                dnum = di_dv
-            else:
-                dnum = di_du + di_dv + np.exp(xi - u - v)
-            lead = np.where(eq_sat[sk_], 0.0, -r_s_k)  # d(−g)/dλ; absent at q+1
-            contrib[pos[i_eqk[sk_]]] = lead + r_s_k * dnum / inner
-        return np.bincount(rows_c, weights=w_c * contrib, minlength=n)
-
-    params = [la0, lb0, lx0]
-    for _ in range(n_cycles):  # coordinate cycles
-        for ci in range(3):
-            def d_at(lam, act=None, _ci=ci):
-                vals = list(params)
-                vals[_ci] = lam
-                return dll(*vals, _ci, act=act)
-
-            lo = params[ci].copy()
-            hi = params[ci].copy()
-            # expand from the seed: derivative > 0 means the peak is
-            # right. A row that stops needing expansion never needs it
-            # again (its bracket endpoint no longer moves), so each
-            # pass evaluates the derivative only at still-needing rows
-            # — values at those rows are bit-identical to full-width.
-            need = d_at(lo) <= 0.0
-            for _ in range(80):
-                if not need.any():
-                    break
-                lo[need] *= 0.5
-                need = need & (d_at(lo, act=need) <= 0.0)
-            need = d_at(hi) >= 0.0
-            for _ in range(80):
-                if not need.any():
-                    break
-                hi[need] *= 2.0
-                need = need & (d_at(hi, act=need) >= 0.0)
-            # per-row gated: a converged row's bracket never moves again,
-            # so every row's trajectory depends only on its own cells —
-            # results are independent of batch composition (which makes
-            # the chunked recursion above exactly reproducible)
-            for _ in range(60):
-                act = hi - lo > 1e-9 * hi
-                if not act.any():
-                    break
-                mid = 0.5 * (lo + hi)
-                gt = d_at(mid, act=act) > 0.0
-                lo = np.where(act & gt, mid, lo)
-                hi = np.where(act & ~gt, mid, hi)
-            params[ci] = 0.5 * (lo + hi)
-    la, lb, lx = params
-    # degenerate rows: empty sketches have no information at all
-    a_zero = (va == 0).all(axis=1)
-    b_zero = (vb == 0).all(axis=1)
-    la = np.where(a_zero, 0.0, la)
-    lx = np.where(a_zero | b_zero, 0.0, lx)
-    lb = np.where(b_zero, 0.0, lb)
-    return la, lb, lx
 
 
 def measure_from_triple_batch(
@@ -806,14 +442,11 @@ def hmh_triple_batch(
     q = 64 - p
     occ = U != 0
     ranks = (U >> np.uint16(b_bits)).astype(np.int64)
-    hist = _row_histograms(ranks, q + 2)  # bin 0 = unoccupied (rank >= 1)
+    hist = hll.row_histograms(ranks, q + 2)  # bin 0 = unoccupied (rank >= 1)
     nocc = occ.sum(axis=1).astype(np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
         pr = np.where(nocc[:, None] > 0, hist[:, 1:] / nocc[:, None], 0.0)
-    if estimator in ("default", "ertl_mle"):
-        cards = ertl_mle_batch(hist, m, q)
-    else:
-        cards = _ertl_improved_from_hist(hist, m, q)
+    cards = hmh_estimator(estimator)(hist, m, q)
 
     def _pairwise(ja: np.ndarray, jb: np.ndarray):
         occ_a, occ_b = occ[ja], occ[jb]
@@ -995,77 +628,19 @@ def cbbmh_triple_batch(
     )
 
 
-def _flajolet_from_hist(c: np.ndarray, m: float, q: int) -> np.ndarray:
-    """Flajolet et al. 2007 estimates with the linear-counting small-range
-    correction (hll._flajolet_original) over (nrows, q+2) histograms:
-    Σ 2^-register is Σ_k C[k]·2^-k."""
-    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(int(m), 0.7213 / (1.0 + 1.079 / m))
-    est = alpha * m * m / (c @ np.exp2(-np.arange(q + 2, dtype=np.float64)))
-    c0 = c[:, 0]
-    with np.errstate(divide="ignore"):
-        linear = m * np.log(m / np.where(c0 > 0, c0, m))
-    return np.where((est <= 2.5 * m) & (c0 > 0), linear, est)
-
-
-#: HLL estimator name -> per-row cardinality over (nrows, q+2) register
-#: histograms (Ertl 2017, arXiv:1702.01284). The pair stage's "default"
-#: is improved raw; ``compare`` and ``HLL.estimate`` default to the MLE.
-_HLL_ESTIMATORS = {
-    "default": _ertl_improved_from_hist,
-    "ertl_improved": _ertl_improved_from_hist,
-    "ertl_mle": ertl_mle_batch,
-    "original": _flajolet_from_hist,
-}
-#: estimators of the whole triple at once (Ertl 2017 §4), not per sketch
-_HLL_JOINT = frozenset(("ertl_joint_mle", "ertl_joint"))
-_ESTIMATORS = frozenset(_HLL_ESTIMATORS) | _HLL_JOINT
-
-
-def check_estimator(estimator: str) -> None:
-    """Raise ValueError unless ``estimator`` names a pair-stage estimator."""
-    if estimator not in _ESTIMATORS:
-        raise ValueError(
-            f"unknown estimator {estimator!r}; expected one of {sorted(_ESTIMATORS)}"
-        )
-
-
-def hll_pair_triple_batch(
+def hll_triple_batch(
     sks, ia: np.ndarray, ib: np.ndarray, estimator: str = "default"
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """HLL triples under ``estimator``: the joint estimators run Ertl's
-    joint MLE on the gathered register pairs; the others take
-    inclusion–exclusion with per-DISTINCT-sketch side cardinalities,
-    so only the union register max + estimate is pairwise.
-
-    The pairwise part runs gather → max → histogram FUSED over pair
-    chunks: materializing the full (n_pairs, m) gathered matrices first
-    streams ~3·n_pairs·m bytes through main memory and measured 4.6x
-    slower than chunks whose temporaries stay cache-resident."""
-    p = sks[0].p
-    U = np.stack([s.regs for s in sks])
-    if estimator in _HLL_JOINT:
-        return hll_joint_triple_batch(U[ia], U[ib], p)
-    q = 64 - p
-    card = _HLL_ESTIMATORS[estimator]
-
-    def est(regs: np.ndarray) -> np.ndarray:
-        return card(_row_histograms(regs, q + 2), float(U.shape[1]), q)
-
-    ca = est(U)
-    n = len(ia)
-    cu = np.empty(n, dtype=np.float64)
-    chunk = max(1, (4 << 20) // max(U.shape[1], 1))
-    for s in range(0, n, chunk):
-        e = min(s + chunk, n)
-        cu[s:e] = est(np.maximum(U[ia[s:e]], U[ib[s:e]]))
-    inter = np.maximum(0.0, ca[ia] + ca[ib] - cu)
-    return np.maximum(0.0, cu - ca[ib]), np.maximum(0.0, cu - ca[ia]), inter
+    """HLL triples through :func:`hll.triple_batch`, where "default" is
+    the pair stage's own (:data:`hll.PAIR_DEFAULT_ESTIMATOR`)."""
+    name = hll.resolve_estimator(estimator, hll.PAIR_DEFAULT_ESTIMATOR)
+    return hll.triple_batch(np.stack([s.regs for s in sks]), sks[0].p, ia, ib, name)
 
 
 #: sketch class -> (the params two sketches must share to go through one
 #: batch kernel, that kernel)
 _PAIR_KERNELS = {
-    HLL: (lambda s: s.p, hll_pair_triple_batch),
+    HLL: (lambda s: s.p, hll_triple_batch),
     KMV: (lambda s: s.k, kmv_triple_batch),
     BloomFilter: (lambda s: (s.lg_bits, s.k), bloom_triple_batch),
     BBitMinHash: (lambda s: (s.lg_r, s.b), bbmh_triple_batch),
@@ -1085,7 +660,7 @@ def triple_batch_from_blobs(a_blobs, b_blobs, estimator: str = "default"):
     type's batch kernel. Only a pair whose two sides differ in params
     (mixed-k KMV is the case the scalar code can compare) goes through
     :func:`set_triple_any`; an incomparable pair raises there."""
-    check_estimator(estimator)
+    hll.resolve_estimator(estimator)  # ValueError for an unknown name
     uniq, ia, ib = _dedupe_blobs(list(a_blobs), list(b_blobs))
     sks = [sketch_from_bytes(x) for x in uniq]
     groups: dict = {}

@@ -20,7 +20,13 @@ import struct
 
 import numpy as np
 
-from dashing_spark.functions.hll import _bit_length_u64, _ertl_improved, _ertl_mle
+from dashing_spark.functions.hll import (
+    _bit_length_u64,
+    ertl_improved,
+    ertl_mle,
+    resolve_estimator,
+    row_histograms,
+)
 
 _MAGIC = b"DSH1"
 TYPE_ID = 9
@@ -83,12 +89,9 @@ class HyperMinHash:
 
     def estimate(self, estimator: str = "default") -> float:
         """HLL-quality cardinality from the rank parts of the registers."""
-        m = float(1 << self.p)
         q = 64 - self.p
-        c = np.bincount(self._ranks(), minlength=q + 2).astype(np.float64)
-        if estimator in ("default", "ertl_mle"):
-            return _ertl_mle(c, m, q)
-        return _ertl_improved(c, m, q)
+        c = row_histograms(self._ranks()[None, :], q + 2)
+        return float(hmh_estimator(estimator)(c, float(1 << self.p), q)[0])
 
     def to_bytes(self) -> bytes:
         return (
@@ -112,6 +115,14 @@ class HyperMinHash:
             and (self.p, self.b) == (other.p, other.b)
             and bool(np.array_equal(self.regs, other.regs))
         )
+
+
+def hmh_estimator(estimator: str):
+    """The HLL estimator HyperMinHash runs for ``estimator`` over its
+    rank histograms: the Poisson MLE for what resolves to "ertl_mle"
+    ("default" included), improved raw for every other name of the HLL
+    table; ValueError for an unknown name."""
+    return ertl_mle if resolve_estimator(estimator) == "ertl_mle" else ertl_improved
 
 
 def hmh_jaccard(a: HyperMinHash, b: HyperMinHash) -> float:

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from dashing_spark.functions import hashing
 from dashing_spark.functions.cms import CountMinSketch
+from dashing_spark.functions.hll import resolve_estimator
 from dashing_spark.functions.serde import sketch_from_bytes
 from dashing_spark.operators.ship import ensure_shipped
 
@@ -678,7 +679,11 @@ def union_all_sketches(sketches: DataFrame, sketch_col: str = SKETCH_COL) -> Dat
 
 def estimate_expr(estimator: str = "default"):
     """pandas UDF: sketch blob -> cardinality/count estimate (double).
-    The reference's cardinality projection (src/dashing.h:488-495)."""
+    The reference's cardinality projection (src/dashing.h:488-495).
+    ``estimator`` names an HLL estimator (sketch types with one
+    estimator ignore it); an unknown name raises ValueError here, not
+    in the first task."""
+    resolve_estimator(estimator)
 
     @F.pandas_udf(T.DoubleType())
     def _est(blobs: pd.Series) -> pd.Series:

@@ -33,10 +33,10 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from dashing_spark.functions.compare import (
     DISTANCE_MEASURES,
-    check_estimator,
     measure_from_triple_batch,
     triple_batch_from_blobs,
 )
+from dashing_spark.functions.hll import resolve_estimator
 from dashing_spark.operators.agg import SKETCH_COL
 from dashing_spark.operators.ship import ensure_shipped
 
@@ -51,7 +51,7 @@ _SWAP_PREFIX = "swap:"
 
 def _measures_udf(measures: Sequence[str], ksinv: float, estimator: str):
     measures = list(measures)
-    check_estimator(estimator)
+    resolve_estimator(estimator)  # ValueError for an unknown name
 
     def _measure(t0, t1, t2, ms):
         # "swap:<measure>": the same measure evaluated in the b->a

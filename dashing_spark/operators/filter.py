@@ -15,7 +15,13 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from dashing_spark.functions import hashing
-from dashing_spark.functions.hll import HLL
+from dashing_spark.functions.hll import (
+    HLL,
+    JOINT_ESTIMATORS,
+    estimate_rows,
+    hash_idx_rank,
+    joint_triple_batch,
+)
 from dashing_spark.operators.ship import ensure_shipped, widen_if_narrow
 
 
@@ -38,7 +44,7 @@ def containment_scores(
     variance in the low-containment regime the cutoff lives in, at
     roughly 0.2–0.5 ms/row of extra numpy work.
     """
-    if estimator not in ("inclusion_exclusion", "ertl_joint_mle", "ertl_joint"):
+    if estimator != "inclusion_exclusion" and estimator not in JOINT_ESTIMATORS:
         # a typo like "ertl_mle" must not silently fall through to the
         # higher-variance inclusion–exclusion path
         raise ValueError(f"unknown containment estimator: {estimator!r}")
@@ -64,12 +70,6 @@ def containment_scores(
     def fn(batches):
         import pyarrow as pa
 
-        from dashing_spark.functions.compare import (
-            hll_estimate_batch,
-            hll_joint_triple_batch,
-        )
-        from dashing_spark.functions.hll import hash_idx_rank
-
         m = 1 << p
         for rb in batches:
             n = rb.num_rows
@@ -84,15 +84,15 @@ def containment_scores(
                 idx, rank = hash_idx_rank(sh, p)
                 flat = doc_idx * m + idx
                 np.maximum.at(regs.reshape(-1), flat, rank)
-            if estimator in ("ertl_joint_mle", "ertl_joint"):
+            if estimator in JOINT_ESTIMATORS:
                 ref_tiled = np.broadcast_to(ref_regs, (n, m))
-                t0, _, t2 = hll_joint_triple_batch(regs, ref_tiled, p)
+                t0, _, t2 = joint_triple_batch(regs, ref_tiled, p)
                 doc_card = t0 + t2
                 ci = np.where(doc_card > 0, t2 / np.maximum(doc_card, 1e-12), 0.0)
             else:
-                doc_card = hll_estimate_batch(regs, p)
+                doc_card = estimate_rows(regs, p, "ertl_improved")
                 union = np.maximum(regs, ref_regs[None, :])
-                union_card = hll_estimate_batch(union, p)
+                union_card = estimate_rows(union, p, "ertl_improved")
                 inter = np.maximum(0.0, doc_card + ref_card - union_card)
                 ci = np.where(doc_card > 0, inter / np.maximum(doc_card, 1e-12), 0.0)
             # append Arrow-native: a pandas round-trip re-infers dtypes

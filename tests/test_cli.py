@@ -213,6 +213,23 @@ class TestEstimatorFlags:
             assert abs(v - want) <= 1e-6 * want, (flag, a, b, v, want)
 
 
+    def test_card_joint_flag_gives_the_mle(self, spark, doc_dir, tmp_path):
+        """On one sketch the joint model is the §3 Poisson model, so
+        card -J estimates what card -m does, per key."""
+        got = {}
+        for flag in ("-J", "-m"):
+            out = str(tmp_path / f"card{flag}.tsv")
+            rc = main(["card", flag, "-o", out, *_paths(doc_dir)], spark=spark)
+            assert rc == 0
+            with open(out) as f:
+                f.readline()
+                got[flag] = {
+                    k: float(v) for k, v in (ln.rstrip("\n").split("\t") for ln in f)
+                }
+        assert sorted(got["-m"]) == sorted(SETS)
+        assert got["-J"] == got["-m"]
+
+
 class TestSketchUnionFoldView:
     def test_sketch_then_presketched_dist(self, spark, doc_dir, tmp_path):
         skp = str(tmp_path / "sk.parquet")

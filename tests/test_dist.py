@@ -149,6 +149,14 @@ class TestEstimatorValidation:
             with _pytest.raises(ValueError, match="unknown estimator"):
                 fn(*args, estimator="ertl-mle")
 
+    def test_unknown_estimator_raises_when_the_estimate_expr_is_built(self, spark):
+        import pytest as _pytest
+
+        from dashing_spark.operators.agg import estimate_expr
+
+        with _pytest.raises(ValueError, match="unknown estimator"):
+            estimate_expr("bogus")
+
 
 class TestGridQueryReference:
     def test_rect_grid_matches_broadcast_and_is_equi_joined(self, spark):

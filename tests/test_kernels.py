@@ -9,6 +9,7 @@ merges under arbitrary partitioning/permutation (FIXTURES.md §5).
 
 import math
 
+import mpmath
 import numpy as np
 import pytest
 
@@ -70,6 +71,80 @@ class TestHashing:
         assert ab != ba
 
 
+# 40-digit references for the HLL estimators (Ertl 2017, arXiv:1702.01284):
+# improved raw (§2) from its series, the MLE (§3) as the root of dL/dλ
+def _mp_improved(c, p):
+    with mpmath.workdps(40):
+        q, m = 64 - p, mpmath.mpf(1 << p)
+        C = [mpmath.mpf(int(x)) for x in c]
+        eps = mpmath.mpf(10) ** -45
+        x = C[0] / m
+        if x == 1:
+            return 0.0
+        sigma, y, xx = x, mpmath.mpf(1), x
+        while True:
+            xx *= xx
+            d = xx * y
+            sigma += d
+            y *= 2
+            if d <= eps * sigma:
+                break
+        x = 1 - C[q + 1] / m
+        tau = mpmath.mpf(0)
+        if x not in (0, 1):
+            tau, y = 1 - x, mpmath.mpf(1)
+            while True:
+                x = mpmath.sqrt(x)
+                y /= 2
+                d = (1 - x) ** 2 * y
+                tau -= d
+                if d <= eps:
+                    break
+            tau /= 3
+        denom = m * tau * mpmath.mpf(2) ** -q + m * sigma
+        denom += mpmath.fsum(C[k] * mpmath.mpf(2) ** -k for k in range(1, q + 1))
+        return float(m * m / (2 * mpmath.log(2)) / denom) if denom else math.inf
+
+
+def _mp_dll(lam, c, p):
+    """dL/dλ of the Poisson log-likelihood, straight from its terms."""
+    with mpmath.workdps(40):
+        q, m = 64 - p, mpmath.mpf(1 << p)
+        lam = mpmath.mpf(lam)
+        d = -mpmath.mpf(int(c[0])) / m
+        for k in range(1, q + 1):
+            if c[k]:
+                a = 1 / (m * mpmath.mpf(2) ** k)
+                ea, eb = mpmath.exp(-lam * a), mpmath.exp(-2 * lam * a)
+                d += int(c[k]) * (2 * a * eb - a * ea) / (ea - eb)
+        if c[q + 1]:
+            g = 1 / (m * mpmath.mpf(2) ** q)
+            eg = mpmath.exp(-lam * g)
+            d += int(c[q + 1]) * g * eg / (1 - eg)
+        return d
+
+
+def _mp_mle(c, p):
+    q, m = 64 - p, 1 << p
+    if c[0] == m:  # dL/dλ < 0 everywhere: the maximum is at 0
+        return 0.0
+    if c[q + 1] == m:  # dL/dλ > 0 everywhere: no finite maximum
+        return math.inf
+    with mpmath.workdps(40):
+        lo = hi = mpmath.mpf(max(_mp_improved(c, p), 1.0))
+        while _mp_dll(lo, c, p) <= 0:
+            lo /= 2
+        while _mp_dll(hi, c, p) >= 0:
+            hi *= 2
+        while hi - lo > hi * mpmath.mpf(10) ** -30:
+            mid = (lo + hi) / 2
+            if _mp_dll(mid, c, p) > 0:
+                lo = mid
+            else:
+                hi = mid
+        return float((lo + hi) / 2)
+
+
 # ---------------------------------------------------------------- HLL
 class TestHLL:
     @pytest.mark.parametrize("estimator", ["original", "ertl_improved", "ertl_mle"])
@@ -83,6 +158,46 @@ class TestHLL:
         else:
             bound = 3 * 1.04 / math.sqrt(1 << p) + 2.0 / n  # 3σ + tiny-n slack
             assert abs(est - n) / n <= bound
+
+    @pytest.mark.parametrize("p", [4, 8, 10, 14])
+    def test_estimators_match_mpmath_reference(self, p):
+        """Improved raw and the MLE against 40-digit references, for
+        n = 1..10^6 and empty, saturated and half-saturated sketches."""
+        q = 64 - p
+        sks = [HLL(p).update_hashes(_hashes(10**e)) for e in range(7)]
+        sks += [
+            HLL(p),
+            HLL(p, np.full(1 << p, q + 1, np.uint8)),
+            HLL(p, np.where(np.arange(1 << p) % 2 == 0, q + 1, 3).astype(np.uint8)),
+        ]
+        for s in sks:
+            c = np.bincount(s.regs, minlength=q + 2)
+            for est, ref, tol in (
+                ("ertl_improved", _mp_improved(c, p), 1e-12),
+                ("ertl_mle", _mp_mle(c, p), 1e-8),
+            ):
+                with np.errstate(divide="ignore"):  # saturated: inf
+                    got = s.estimate(est)
+                if math.isinf(ref) or ref == 0.0:
+                    assert got == ref, (est, got, ref)
+                else:
+                    assert abs(got - ref) <= tol * ref, (est, got, ref)
+
+    def test_mle_derivative_matches_mpmath_reference(self):
+        """dL/dλ at every λ scale — pins the repeated-squaring precision
+        bug (exp(-λ/(m·2^q)) == 1.0 exactly for realistic λ)."""
+        from dashing_spark.functions.hll import _mle_derivative
+
+        rng = np.random.default_rng(3)
+        h = HyperMinHash(8, 10)
+        h.update_hashes(rng.integers(0, 2**63, size=300, dtype=np.uint64))
+        q = 64 - 8
+        c = np.bincount(h._ranks(), minlength=q + 2).astype(np.float64)
+        dll = _mle_derivative(c[None, :], 256.0, q)
+        for lam in (5.0, 50.0, 160.0, 1000.0, 1e7):
+            ref = float(_mp_dll(lam, c, 8))
+            got = float(dll(np.array([lam]))[0])
+            assert abs(got - ref) <= 1e-9 * max(1.0, abs(ref)), (lam, got, ref)
 
     def test_merge_bit_identical_any_partitioning(self, rng):
         h = _hashes(50_000)
@@ -395,6 +510,21 @@ class TestSuperMinHash:
         assert np.mean(se_s) < np.mean(se_b)
 
 
+# ---------------------------------------------------------------- HyperMinHash
+class TestHyperMinHash:
+    def test_estimator_names(self):
+        """"default" and "ertl_mle" give the MLE, the other HLL names
+        improved raw, and an unknown name raises."""
+        s = HyperMinHash(8, 10).update_hashes(_hashes(3000))
+        mle, imp = s.estimate("ertl_mle"), s.estimate("ertl_improved")
+        assert mle != imp
+        assert s.estimate("default") == mle
+        for name in ("original", "ertl_joint_mle", "ertl_joint"):
+            assert s.estimate(name) == imp
+        with pytest.raises(ValueError, match="unknown estimator"):
+            s.estimate("ertl-mle")
+
+
 # ---------------------------------------------------------------- CountingBBMH
 class TestCountingBBitMinHash:
     def test_weighted_jaccard(self, rng):
@@ -671,26 +801,6 @@ class TestTripleBatchKernels:
         blob = HLL(10).to_bytes()
         with pytest.raises(ValueError, match="unknown estimator"):
             triple_batch_from_blobs([blob], [blob], "ertl-mle")
-
-    def test_mle_dll_batch_matches_scalar(self):
-        """ertl_mle_batch's derivative must agree with the scalar
-        _mle_dll at every λ scale — pins the repeated-squaring precision
-        bug (exp(-λ/(m·2^q)) == 1.0 exactly for realistic λ)."""
-        from dashing_spark.functions.compare import _mle_dll_batch, ertl_mle_batch
-        from dashing_spark.functions.hll import _ertl_mle, _mle_dll
-
-        rng = np.random.default_rng(3)
-        h = HyperMinHash(8, 10)
-        h.update_hashes(rng.integers(0, 2**63, size=300, dtype=np.uint64))
-        q = 64 - 8
-        c = np.bincount(h._ranks(), minlength=q + 2).astype(np.float64)
-        for lam in (5.0, 50.0, 160.0, 1000.0, 1e7):
-            s = _mle_dll(lam, c, 256.0, q)
-            v = float(_mle_dll_batch(np.array([lam]), c[None, :], 256.0, q)[0])
-            assert abs(s - v) <= 1e-9 * max(1.0, abs(s)), (lam, s, v)
-        est_s = _ertl_mle(c, 256.0, q)
-        est_b = float(ertl_mle_batch(c[None, :], 256.0, q)[0])
-        assert abs(est_s - est_b) <= 1e-6 * est_s
 
 
 class TestHeavyKeeper:

@@ -142,8 +142,7 @@ class TestErtlJointMLE:
         assert rmse_j <= 0.01
 
     def test_batch_matches_scalar_wrapper(self):
-        from dashing_spark.functions.compare import hll_joint_triple_batch
-        from dashing_spark.functions.hll import ertl_joint
+        from dashing_spark.functions.hll import joint_triple_batch, set_triple
 
         pairs = [CASES[1], CASES[3], CASES[5]]
         sks = []
@@ -154,9 +153,9 @@ class TestErtlJointMLE:
             )
         a = np.stack([x.regs for x, _ in sks])
         b = np.stack([y.regs for _, y in sks])
-        t0, t1, t2 = hll_joint_triple_batch(a, b, 14)
+        t0, t1, t2 = joint_triple_batch(a, b, 14)
         for i, (x, y) in enumerate(sks):
-            u0, u1, u2 = ertl_joint(x, y)
+            u0, u1, u2 = set_triple(x, y, "ertl_joint_mle")
             # same optimizer, but lockstep early-exit differs per batch
             # composition; agreement is to solver tolerance, not bitwise
             for got, want in ((t0[i], u0), (t1[i], u1), (t2[i], u2)):
