@@ -287,13 +287,17 @@ def ertl_mle(c: np.ndarray, m: float, q: int) -> np.ndarray:
             if not need.any():
                 break
             hi[need] *= 2.0
+        # per-row gated, as in joint_triple_batch: a converged row's
+        # bracket never moves again, so each row follows its one-row
+        # trajectory whatever rows share the call
         for _ in range(100):
+            act = hi - lo > 1e-9 * hi
+            if not act.any():
+                break
             mid = 0.5 * (lo + hi)
             gt = dll(mid) > 0.0
-            lo = np.where(gt, mid, lo)
-            hi = np.where(gt, hi, mid)
-            if np.all(hi - lo <= 1e-9 * hi):
-                break
+            lo = np.where(act & gt, mid, lo)
+            hi = np.where(act & ~gt, mid, hi)
     out = 0.5 * (lo + hi)
     out = np.where(c[:, 0] == m, 0.0, out)        # empty sketch
     out = np.where(c[:, q + 1] == m, imp, out)    # fully saturated

@@ -13,16 +13,16 @@ collapse the batch operator uses, which on boilerplate-heavy corpora
 shrinks the pair mass quadratically: measured 104.6e6 member pairs from
 274e3 set pairs at 50k docs). Per epoch:
 
-- ``sets_epoch_{id}``: (sk, signature array<long>, items array<long>,
+- sets: (sk, signature array<long>, items array<long>,
   nsz, member_ids array<long>) — one row per distinct item set among
   this epoch's NEW docs (sk = :func:`dedup.set_key`, the 16-byte binary
   md5 over the sorted item hashes), with the epoch's member doc ids
   inline. A set with new members in several epochs appears in each,
-  carrying THAT epoch's members — so each epoch dir is self-contained
+  carrying THAT epoch's members — so each epoch's sets table is self-contained
   and TTL expiry of whole epochs keeps exact per-DOC window semantics
   (a set stays matchable exactly while some live epoch carries a
   member of it);
-- ``pairs_epoch_{id}``: (a_id, b_id, ji) — pairs found this epoch.
+- pairs: (a_id, b_id, ji) — pairs found this epoch.
 
 Member rows and band rows are DERIVED (explode / one deterministic
 xxhash64 per band per set), never stored: one state write+read per
@@ -36,7 +36,7 @@ themselves and against the committed index, exact size-ratio
 prefilter, exact item-array verify on SET pairs only) and
 :func:`dedup.expand_members` (member expansion joins whose output is
 exactly the emitted pair rows). Nothing is ever rewritten — state
-grows append-only by one epoch directory per batch, so per-epoch cost
+grows append-only by one segment per batch, so per-epoch cost
 is independent of corpus age (at 100 TB the band index would be a
 bucketed table on (band, bhash) so the join prunes to matching
 buckets).
@@ -44,53 +44,50 @@ buckets).
 Exactness: signatures and band keys are deterministic pure functions of
 the document text (counter-based randomness, no RNG state), so a pair
 collides across epochs iff it collides in a single-shot batch run. The
-union of ``pairs_epoch_*`` therefore equals the batch pipeline
+union of the pairs tables therefore equals the batch pipeline
 signatures → lsh_candidate_pairs → exact_ji_for_pairs ≥ threshold on
 the full corpus — asserted bit-identically in tests.
 
-Crash/retry safety follows streaming/incremental.py's protocol, with a
-LIST manifest (state is the union of committed epochs, not one rolling
-table): epoch dirs are written first, the manifest append is committed
-with an atomic rename, and a foreachBatch retry of a committed epoch is
-a no-op. A crash mid-epoch leaves unreferenced (and deterministically
-rebuilt) directories, never a half-counted pair.
-
-The first commit also writes a ``_LAYOUT`` record (layout version, set
-key scheme, n_hashes and bands after banding, threshold, shingle_w,
-char_n). Every later epoch refuses with ``ValueError`` to resume a
-state_dir whose record differs, or whose manifest has committed epochs
-but no record (state of an older layout): resuming either would match
-against keys this run never produces and silently miss duplicates.
+The state is a snapshot-log table (plans/snapshots.py). Each version's
+properties carry the layout record (layout version, set key scheme,
+n_hashes and bands after banding, threshold, shingle_w, char_n) and the
+ordered segment list: a token per segment, ``"7"`` for epoch 7 or
+``"c7"`` for a compacted segment (see :func:`compact_index`), with the
+data dirs of its sets and pairs tables. An epoch writes both tables,
+then commits them in one version; a crash mid-epoch leaves
+unreferenced (and deterministically rebuilt) dirs, never a half-counted
+pair, and a foreachBatch retry of a committed epoch is a no-op. Every
+epoch refuses with ``ValueError`` to resume a state_dir recorded under
+another layout, or holding state of an older, pre-log layout: resuming
+either would match against keys this run never produces and silently
+miss duplicates.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dashing_spark.operators import dedup
+from dashing_spark.plans import snapshots
 
-_MANIFEST = "_EPOCHS"
-_LAYOUT = "_LAYOUT"
 #: bumped whenever the persisted tables or the set key change shape
-_LAYOUT_VERSION = 1
-#: per-epoch table prefixes (``{prefix}_epoch_{token}`` directories)
+_FORMAT_VERSION = 1
+#: the tables of each segment
 _PREFIXES = ("sets", "pairs")
 
 
-def _manifest_tokens(state_dir: str) -> list[str]:
-    """Raw manifest entries, oldest first. Two token shapes: ``"7"`` is
-    a live epoch dir (``sets_epoch_7`` etc.); ``"c7"`` is a COMPACTED
-    segment (``sets_epoch_c7`` etc.) holding the merged state of every epoch
-    up to 7 (see :func:`compact_index`)."""
-    path = os.path.join(state_dir, _MANIFEST)
-    if not os.path.exists(path):
-        return []
-    with open(path) as fh:
-        return [x for x in fh.read().split() if x.strip()]
+def _segments(state_dir: str, layout: dict | None = None) -> list[dict]:
+    """Committed segments, oldest first: ``{"token", "sets", "pairs"}``
+    (see the module docstring), checked against ``layout`` if given."""
+    props = snapshots.committed_properties(state_dir, layout)
+    return [] if props is None else props["segments"]
+
+
+def _tokens(state_dir: str) -> list[str]:
+    return [s["token"] for s in _segments(state_dir)]
 
 
 def _token_epoch(token: str) -> int:
@@ -98,62 +95,33 @@ def _token_epoch(token: str) -> int:
 
 
 def committed_epochs(state_dir: str) -> list[int]:
-    """Max epoch id each manifest entry covers, oldest first (a
-    compacted segment contributes the highest epoch it absorbed — the
+    """Max epoch id each segment covers, oldest first (a compacted
+    segment contributes the highest epoch it absorbed — the
     retry/restart guard needs only these numbers)."""
-    return [_token_epoch(t) for t in _manifest_tokens(state_dir)]
+    return [_token_epoch(t) for t in _tokens(state_dir)]
 
 
-def _atomic_write(path: str, text: str) -> None:
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as fh:
-        fh.write(text)
-    os.replace(tmp, path)
-
-
-def _write_manifest(state_dir: str, tokens: list[str]) -> None:
-    """Atomic rewrite (write-then-rename) — the manifest is the single
-    source of truth; directories it doesn't reference are garbage."""
-    _atomic_write(os.path.join(state_dir, _MANIFEST), "\n".join(tokens))
-
-
-def _check_layout(state_dir: str, tokens: list[str], layout: dict) -> None:
-    """Refuse a state_dir written under another layout or other
-    parameters: its set keys, band keys or threshold would silently
-    disagree with this run's, and matching would go quietly wrong."""
-    path = os.path.join(state_dir, _LAYOUT)
-    if os.path.exists(path):
-        with open(path) as fh:
-            have = json.load(fh)
-        if have != layout:
-            raise ValueError(
-                f"{state_dir} holds dedup state of layout {have}, this "
-                f"run needs {layout}: use a fresh state_dir"
-            )
-    elif tokens:
-        raise ValueError(
-            f"{state_dir} has committed epochs {tokens} but no {_LAYOUT}: "
-            "state of an older, incompatible layout; use a fresh state_dir"
-        )
-
-
-def _commit_epoch(state_dir: str, epoch_id: int, layout: dict) -> None:
-    """Atomically append an epoch id. The first commit writes the
-    layout record first, so committed epochs never lack one."""
-    path = os.path.join(state_dir, _LAYOUT)
-    if not os.path.exists(path):
-        _atomic_write(path, json.dumps(layout))
-    _write_manifest(state_dir, _manifest_tokens(state_dir) + [str(epoch_id)])
+def _commit(state_dir: str, segments: list[dict], layout: dict | None = None) -> None:
+    """Commit ``segments`` under ``layout`` (default: the committed one)
+    as the next version, then reap the dirs no segment names any more
+    (absorbed, expired, torn)."""
+    if layout is None:
+        layout = snapshots.committed_properties(state_dir)["layout"]
+    snapshots.commit_paths(
+        state_dir,
+        [seg[p] for seg in segments for p in _PREFIXES],
+        "overwrite",
+        {"layout": layout, "segments": segments},
+    )
+    snapshots.expire_snapshots(state_dir, keep_last=1)
 
 
 def _epoch_union(
-    spark: SparkSession, state_dir: str, prefix: str, tokens: Sequence[str]
+    spark: SparkSession, state_dir: str, prefix: str, segments: Sequence[dict]
 ) -> DataFrame | None:
-    paths = [os.path.join(state_dir, f"{prefix}_epoch_{t}") for t in tokens]
-    paths = [p for p in paths if os.path.exists(p)]
-    if not paths:
+    if not segments:
         return None
-    return spark.read.parquet(*paths)
+    return spark.read.parquet(*[os.path.join(state_dir, s[prefix]) for s in segments])
 
 
 def _members(sets_df: DataFrame) -> DataFrame:
@@ -181,10 +149,10 @@ def apply_dedup_batch(
     per epoch (see module docstring).
 
     Maintenance policy (VERDICT r4 #4 — auto-invoked, crash-safe via
-    the atomic manifest; runs AFTER this epoch commits, serialized with
+    the snapshot log; runs AFTER this epoch commits, serialized with
     the stream because foreachBatch epochs run one at a time):
 
-    * ``max_segments``: when the manifest exceeds this many entries,
+    * ``max_segments``: when the log holds more segments than this,
       :func:`compact_index` folds the oldest into one segment keeping
       the newest ``max_segments // 2`` live — halving rather than
       compacting every epoch keeps total rewrite work O(index ×
@@ -211,7 +179,7 @@ def apply_dedup_batch(
     # batch-run equivalence the module docstring pins
     bands_n, n_hashes = dedup.pick_lsh_banding(n_hashes, threshold)
     layout = {
-        "version": _LAYOUT_VERSION,
+        "version": _FORMAT_VERSION,
         "set_key": "unhex(md5(sorted int64 item hashes))",
         "n_hashes": n_hashes,
         "bands": bands_n,
@@ -219,8 +187,7 @@ def apply_dedup_batch(
         "shingle_w": shingle_w,
         "char_n": char_n,
     }
-    tokens = _manifest_tokens(state_dir)
-    _check_layout(state_dir, tokens, layout)
+    segments = _segments(state_dir, layout)
     if batch_df.isEmpty():
         # an empty epoch still advances the TTL horizon: docs older
         # than the window must stop matching (and their pair files age
@@ -232,7 +199,7 @@ def apply_dedup_batch(
         if ttl_epochs is not None:
             expire_epochs(state_dir, min_epoch=epoch_id - ttl_epochs + 1)
         return
-    done = [_token_epoch(t) for t in tokens]
+    done = [_token_epoch(seg["token"]) for seg in segments]
     if done and epoch_id <= max(done):
         if epoch_id == max(done):
             return  # retry of the last committed epoch: no-op
@@ -267,7 +234,7 @@ def apply_dedup_batch(
         # in every later expansion join
         .dropDuplicates(["id"])
     )
-    old_sets = _epoch_union(spark, state_dir, "sets", tokens)
+    old_sets = _epoch_union(spark, state_dir, "sets", segments)
     old_members = None if old_sets is None else _members(old_sets)
     if old_members is not None:
         new_docs = new_docs.join(
@@ -283,9 +250,9 @@ def apply_dedup_batch(
         F.size(F.first("items")).alias("nsz"),
         F.collect_list("id").alias("member_ids"),
     )
-    sets_out = os.path.join(state_dir, f"sets_epoch_{epoch_id}")
-    new_sets.write.mode("overwrite").parquet(sets_out)
-    new_sets = spark.read.parquet(sets_out)  # cut lineage; reuse below
+    sets_path = snapshots.write_data(state_dir, new_sets, "sets")
+    # cut lineage; reuse below
+    new_sets = spark.read.parquet(os.path.join(state_dir, sets_path))
 
     # band rows are DERIVED from the sets tables (one xxhash64 per band
     # per set row), never stored: band keys are deterministic in the
@@ -314,13 +281,12 @@ def apply_dedup_batch(
         threshold=threshold,
     )
     emitted = dedup.expand_members(pairs, _members(new_sets), old_members)
-    emitted.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"pairs_epoch_{epoch_id}")
-    )
-    _commit_epoch(state_dir, epoch_id, layout)
+    pairs_path = snapshots.write_data(state_dir, emitted, "pairs")
+    new_seg = {"token": str(epoch_id), "sets": sets_path, "pairs": pairs_path}
+    _commit(state_dir, segments + [new_seg], layout)
     if ttl_epochs is not None:
         expire_epochs(state_dir, min_epoch=epoch_id - ttl_epochs + 1)
-    if max_segments is not None and len(_manifest_tokens(state_dir)) > max_segments:
+    if max_segments is not None and len(_tokens(state_dir)) > max_segments:
         # with a TTL active, never re-absorb existing segments: folding
         # a segment forward re-stamps its docs with a newer max epoch,
         # so it would never age past the horizon (see compact_index)
@@ -360,7 +326,6 @@ def incremental_dedup_query(
         raise ValueError(f"ttl_epochs must be >= 1, got {ttl_epochs}")
     if max_segments is not None and max_segments < 2:
         raise ValueError(f"max_segments must be >= 2, got {max_segments}")
-    os.makedirs(state_dir, exist_ok=True)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         apply_dedup_batch(
@@ -386,7 +351,7 @@ def compact_index(
     keep_last: int = 1,
     absorb_compacted: bool = True,
 ) -> bool:
-    """Merge all but the last ``keep_last`` manifest entries into ONE
+    """Merge all but the last ``keep_last`` segments into ONE
     compacted segment — the maintenance operation that keeps the
     per-epoch index scan O(segments), not O(corpus age): without it the
     band join reads one directory per historical micro-batch forever
@@ -398,12 +363,12 @@ def compact_index(
     Run with no CONCURRENT consumer of this state_dir: either offline,
     or auto-invoked from ``apply_dedup_batch``'s ``max_segments``
     policy — safe there because foreachBatch serializes epochs, so
-    nothing reads the manifest while it compacts. Crash-safe by the
-    manifest protocol: the merged segment is written to fresh directory
-    names first, then the manifest rewrite commits atomically; a crash
-    before the rewrite leaves only unreferenced garbage and the
-    original state, so a re-run completes the job. Absorbed directories
-    are deleted best-effort afterwards.
+    nothing reads the state while it compacts. Crash-safe by the
+    snapshot log: the merged segment is written to fresh data dirs
+    first, then the new segment list commits atomically; a crash before
+    the commit leaves only unreferenced garbage and the original state,
+    so a re-run completes the job. Absorbed dirs are reaped after the
+    commit.
 
     ``absorb_compacted=False`` restricts the merge to RAW epoch
     entries, leaving existing ``c*`` segments in place. This is how
@@ -418,31 +383,27 @@ def compact_index(
     active.
 
     Returns True if a compaction happened (>= 2 entries merged)."""
-    import shutil
-
-    tokens = _manifest_tokens(state_dir)
+    segments = _segments(state_dir)
     if keep_last < 0:
         raise ValueError(f"keep_last must be >= 0, got {keep_last}")
-    window = tokens[: max(0, len(tokens) - keep_last)] if keep_last else tokens
+    window = segments[: max(0, len(segments) - keep_last)]
     if absorb_compacted:
         merge = list(window)
-        retained_c: list[str] = []
+        retained_c: list[dict] = []
     else:
-        merge = [t for t in window if not t.startswith("c")]
-        retained_c = [t for t in window if t.startswith("c")]
+        merge = [seg for seg in window if not seg["token"].startswith("c")]
+        retained_c = [seg for seg in window if seg["token"].startswith("c")]
     if len(merge) < 2:
         return False
-    kept = tokens[len(window):]
-    target = f"c{max(_token_epoch(t) for t in merge)}"
+    tokens = [seg["token"] for seg in segments]
+    target = f"c{max(_token_epoch(seg['token']) for seg in merge)}"
     if target in tokens:
         raise ValueError(
             f"compacted segment {target} already exists in {tokens}"
         )
+    new_seg = {"token": target}
     for prefix in _PREFIXES:
         merged = _epoch_union(spark, state_dir, prefix, merge)
-        out = os.path.join(state_dir, f"{prefix}_epoch_{target}")
-        if merged is None:
-            continue
         # a set re-written by several absorbed epochs collapses to one
         # row in the merged segment (the per-epoch redundancy exists
         # for TTL self-containment, which the segment now provides as
@@ -455,29 +416,21 @@ def compact_index(
                 F.first("nsz").alias("nsz"),
                 F.flatten(F.collect_list("member_ids")).alias("member_ids"),
             )
-        # A crashed prior attempt may have left this exact target dir on
-        # disk (written but never committed to the manifest) — clear it so
-        # the promised re-run actually completes instead of failing with
-        # path-already-exists.
-        shutil.rmtree(out, ignore_errors=True)
         # coalesce to a handful of files: the point is fewer directories
         # AND fewer parquet footers on every future epoch's index scan
-        merged.coalesce(max(1, spark.sparkContext.defaultParallelism // 4)
-                        ).write.mode("overwrite").parquet(out)
-    # retained (older) segments keep their manifest position ahead of
-    # the new one: every epoch they cover precedes the merge set's
-    _write_manifest(state_dir, retained_c + [target] + kept)
-    for t in merge:  # best-effort: unreferenced after the atomic rewrite
-        for prefix in _PREFIXES:
-            shutil.rmtree(
-                os.path.join(state_dir, f"{prefix}_epoch_{t}"),
-                ignore_errors=True,
-            )
+        new_seg[prefix] = snapshots.write_data(
+            state_dir,
+            merged.coalesce(max(1, spark.sparkContext.defaultParallelism // 4)),
+            prefix,
+        )
+    # retained (older) segments keep their position ahead of the new
+    # one: every epoch they cover precedes the merge set's
+    _commit(state_dir, retained_c + [new_seg] + segments[len(window):])
     return True
 
 
 def expire_epochs(state_dir: str, min_epoch: int) -> list[str]:
-    """TTL policy: drop manifest entries whose covered epochs are all
+    """TTL policy: drop segments whose covered epochs are all
     older than ``min_epoch`` — docs indexed before the horizon STOP
     matching future arrivals (a bounded dedup window, the documented
     way to cap index size when old duplicates no longer matter; use
@@ -485,25 +438,17 @@ def expire_epochs(state_dir: str, min_epoch: int) -> list[str]:
     semantics). Pairs already emitted are dropped with their epoch —
     read them first if they must be retained. Run offline. Returns the
     dropped tokens."""
-    import shutil
-
-    tokens = _manifest_tokens(state_dir)
-    dropped = [t for t in tokens if _token_epoch(t) < min_epoch]
+    segments = _segments(state_dir)
+    dropped = [seg for seg in segments if _token_epoch(seg["token"]) < min_epoch]
     if not dropped:
         return []
-    _write_manifest(state_dir, [t for t in tokens if t not in dropped])
-    for t in dropped:  # best-effort: unreferenced after the rewrite
-        for prefix in _PREFIXES:
-            shutil.rmtree(
-                os.path.join(state_dir, f"{prefix}_epoch_{t}"),
-                ignore_errors=True,
-            )
-    return dropped
+    _commit(state_dir, [seg for seg in segments if seg not in dropped])
+    return [seg["token"] for seg in dropped]
 
 
 def read_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     """All near-dup pairs found across committed epochs."""
-    out = _epoch_union(spark, state_dir, "pairs", _manifest_tokens(state_dir))
+    out = _epoch_union(spark, state_dir, "pairs", _segments(state_dir))
     if out is None:
         raise FileNotFoundError(f"no committed pairs under {state_dir}")
     return out

@@ -7,36 +7,38 @@ result. Because merges are exact monoid operations, the final state is
 bit-identical to a one-shot batch build over the union of all
 micro-batches — asserted in tests.
 
-Crash/retry safety (the part a naive "overwrite current/" gets wrong):
+The state is a snapshot-log table (plans/snapshots.py), and each epoch
+is one ``overwrite`` commit whose properties hold the epoch id and the
+layout record: layout version, sketch header, key columns, and
+``text_col`` or the qualified name of ``build_fn``. Crash/retry safety
+(the part a naive "overwrite current/" gets wrong):
 
-- each epoch writes to its own ``epoch_{id}`` directory, always derived
-  from the PREVIOUS epoch's committed state — so a crashed or retried
-  epoch rebuilds from inputs that do not already contain its batch, and
-  additive sketches (CMS, counting KMV, KLL, t-digest) are never
-  double-counted;
-- the live state is designated by a tiny ``_CURRENT`` manifest file,
-  committed with an atomic rename (os.replace) — a crash mid-epoch
-  leaves the manifest pointing at the last complete epoch, never at a
-  half-written directory;
-- a foreachBatch retry of an epoch the manifest already records is a
-  no-op (the merge result is already committed and the streaming
-  checkpoint will advance past it).
-
-On object stores without atomic rename, swap `_commit_manifest` for a
-conditional-put; everything else is unchanged.
+- each epoch's table is always derived from the PREVIOUS epoch's
+  committed state — so a crashed or retried epoch rebuilds from inputs
+  that do not already contain its batch, and additive sketches (CMS,
+  counting KMV, KLL, t-digest) are never double-counted;
+- a crash mid-epoch leaves the log at the last complete epoch, never at
+  a half-written table; its uncommitted data dir is reaped later;
+- a foreachBatch retry of the committed epoch is a no-op (the merge
+  result is already committed and the streaming checkpoint will advance
+  past it);
+- a resume under another layout raises ValueError before the batch is
+  read: merging other tokens or other sketch parameters into the state
+  would return silently wrong sketches.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dashing_spark.operators import agg
+from dashing_spark.plans import snapshots
+from dashing_spark.plans.pipeline import sketch_tag_for
 
-_MANIFEST = "_CURRENT"
+#: bumped whenever the persisted state table changes shape
+_FORMAT_VERSION = 1
 
 
 def merge_sketch_states(
@@ -47,46 +49,14 @@ def merge_sketch_states(
 
 
 def committed_epoch(state_dir: str) -> int | None:
-    """Epoch id the manifest points at, or None before the first commit."""
-    path = os.path.join(state_dir, _MANIFEST)
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        return int(fh.read().strip())
+    """Epoch id of the committed state, or None before the first commit."""
+    props = snapshots.committed_properties(state_dir)
+    return None if props is None else props["epoch"]
 
 
 def current_state_path(state_dir: str) -> str:
     """Directory of the last committed state table."""
-    epoch = committed_epoch(state_dir)
-    if epoch is None:
-        raise FileNotFoundError(f"no committed state under {state_dir}")
-    return os.path.join(state_dir, f"epoch_{epoch}")
-
-
-def _commit_manifest(state_dir: str, epoch_id: int) -> None:
-    """Atomically repoint the manifest (write-then-rename)."""
-    tmp = os.path.join(state_dir, f"{_MANIFEST}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(epoch_id))
-    os.replace(tmp, os.path.join(state_dir, _MANIFEST))
-
-
-def _gc_old_epochs(state_dir: str, keep_epoch: int) -> None:
-    """Best-effort removal of epoch dirs older than the committed one."""
-    try:
-        for name in os.listdir(state_dir):
-            # tolerate stray entries like "epoch_9.bak" (int() raises
-            # ValueError, which must not kill a just-committed batch)
-            if not name.startswith("epoch_"):
-                continue
-            try:
-                epoch = int(name[6:])
-            except ValueError:
-                continue
-            if epoch < keep_epoch:
-                shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
-    except OSError:
-        pass
+    return snapshots.data_paths(state_dir)[0]
 
 
 def apply_sketch_batch(
@@ -102,9 +72,20 @@ def apply_sketch_batch(
     epoch (see module docstring for the commit protocol). ``build_fn``
     overrides the default text-token sketch builder (any batch →
     sketch-table transform keyed by ``key_cols``)."""
+    layout = {
+        "version": _FORMAT_VERSION,
+        "sketch": sketch_tag_for(make_sketch),
+        "key_cols": list(key_cols),
+        **(
+            {"text_col": text_col}
+            if build_fn is None
+            else {"build_fn": f"{build_fn.__module__}.{build_fn.__qualname__}"}
+        ),
+    }
+    props = snapshots.committed_properties(state_dir, layout)
     if batch_df.isEmpty():
         return
-    prev = committed_epoch(state_dir)
+    prev = None if props is None else props["epoch"]
     if prev is not None and prev >= epoch_id:
         if prev == epoch_id:
             return  # retried epoch already committed: no double-merge
@@ -117,25 +98,21 @@ def apply_sketch_batch(
             f"epoch {epoch_id} precedes committed epoch {prev} in "
             f"{state_dir}: state_dir/checkpoint_dir mismatch"
         )
-    spark = batch_df.sparkSession
     if build_fn is not None:
-        batch_sketches = build_fn(batch_df)
+        merged = build_fn(batch_df)
     else:
-        batch_sketches = agg.sketch_tokens_by_key(
+        merged = agg.sketch_tokens_by_key(
             batch_df, list(key_cols), make_sketch, text_col=text_col
         )
     if prev is not None:
-        state = spark.read.parquet(os.path.join(state_dir, f"epoch_{prev}"))
-        merged = merge_sketch_states(state, batch_sketches, list(key_cols))
-    else:
-        merged = batch_sketches
-    out = os.path.join(state_dir, f"epoch_{epoch_id}")
-    # overwrite is safe: a half-written dir from a crashed attempt of
-    # THIS epoch is rebuilt from the unchanged previous epoch
-    merged.write.mode("overwrite").parquet(out)
-    _commit_manifest(state_dir, epoch_id)
-    if prev is not None:
-        _gc_old_epochs(state_dir, prev)  # keep prev for safety, drop older
+        state = snapshots.read_table(batch_df.sparkSession, state_dir)
+        merged = merge_sketch_states(state, merged, list(key_cols))
+    path = snapshots.write_data(state_dir, merged, f"epoch_{epoch_id}")
+    snapshots.commit_paths(
+        state_dir, [path], "overwrite", {"epoch": epoch_id, "layout": layout}
+    )
+    # keep the previous epoch's table for safety, drop older ones
+    snapshots.expire_snapshots(state_dir, keep_last=2)
 
 
 def incremental_sketch_query(
@@ -150,8 +127,8 @@ def incremental_sketch_query(
 ):
     """Start a streaming query that maintains a per-key sketch table.
 
-    State lives under ``state_dir`` (one parquet dir per epoch plus an
-    atomically-renamed ``_CURRENT`` manifest); the streaming engine's
+    State lives under ``state_dir`` (a snapshot-log table, one version
+    per epoch); the streaming engine's
     checkpoint at ``checkpoint_dir`` provides restart semantics, and the
     epoch protocol makes retried batches idempotent. Late data needs no
     watermark bookkeeping: a late row merges into its window's sketch
@@ -159,7 +136,6 @@ def incremental_sketch_query(
     Returns the StreamingQuery.
     """
     key_cols = list(key_cols)
-    os.makedirs(state_dir, exist_ok=True)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         apply_sketch_batch(
@@ -178,7 +154,7 @@ def incremental_sketch_query(
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Read the last committed state table."""
-    return spark.read.parquet(current_state_path(state_dir))
+    return snapshots.read_table(spark, state_dir)
 
 
 def estimate_state(spark: SparkSession, state_dir: str, key_cols: Sequence[str]) -> DataFrame:

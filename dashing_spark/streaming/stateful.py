@@ -28,6 +28,7 @@ from typing import Callable, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from dashing_spark.functions.hll import resolve_estimator
 from dashing_spark.operators.ship import ensure_shipped
 
 
@@ -41,7 +42,10 @@ def stateful_sketch_stream(
     """Transform a streaming DataFrame with an int64 ``hash_col`` into a
     per-key (keys..., estimate, n_updates) stream maintained by
     engine-managed state. Returns the transformed streaming DataFrame —
-    attach your own writeStream sink."""
+    attach your own writeStream sink. ``estimator`` names an HLL
+    estimator (sketch types with one estimator ignore it); an unknown
+    name raises ValueError here, not in the first micro-batch."""
+    resolve_estimator(estimator)
     ensure_shipped(stream.sparkSession)
     key_cols = list(key_cols)
     # fields MUST follow key_cols order — the groupBy key tuple arrives

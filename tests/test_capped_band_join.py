@@ -201,14 +201,14 @@ class TestAdviceRegressions:
                 state_dir=state,
                 threshold=0.9,
             )
-        before = dedup_stream._manifest_tokens(state)
+        before = dedup_stream._tokens(state)
         assert not dedup_stream.compact_index(spark, state, keep_last=5)
-        assert dedup_stream._manifest_tokens(state) == before
+        assert dedup_stream._tokens(state) == before
 
     def test_compact_retry_after_crash_completes(self, spark, tmp_path):
-        """A crash AFTER writing the compacted segment but BEFORE the
-        manifest rewrite leaves orphan target dirs; the promised re-run
-        must complete, not die on path-already-exists."""
+        """A crash AFTER writing the compacted segment but BEFORE its
+        commit leaves an orphan data dir; the promised re-run must
+        complete, and reap the orphan."""
         import os
         import shutil
 
@@ -227,16 +227,15 @@ class TestAdviceRegressions:
                 state_dir=state,
                 threshold=0.9,
             )
-        # simulate the torn first attempt: the target segment dir exists
-        # (with garbage) but the manifest still lists the raw epochs
-        # (r7: the set-keyed state layout renamed docs_epoch_* to
-        # sets_epoch_* — the torn-dir scenario is unchanged)
-        orphan = os.path.join(state, "sets_epoch_c1")
+        # simulate the torn first attempt: a segment dir of the next
+        # version exists (with garbage) but the log still lists the raw
+        # epochs
+        orphan = os.path.join(state, "data", "000003-sets-torn")
         os.makedirs(orphan, exist_ok=True)
         with open(os.path.join(orphan, "junk"), "w") as fh:
             fh.write("partial")
         assert dedup_stream.compact_index(spark, state, keep_last=1)
-        assert dedup_stream._manifest_tokens(state) == ["c1", "2"]
-        # the garbage file must be gone (segment fully rewritten)
-        assert not os.path.exists(os.path.join(orphan, "junk"))
+        assert dedup_stream._tokens(state) == ["c1", "2"]
+        # the garbage dir must be gone
+        assert not os.path.exists(orphan)
         shutil.rmtree(state, ignore_errors=True)

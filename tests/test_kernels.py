@@ -199,6 +199,23 @@ class TestHLL:
             got = float(dll(np.array([lam]))[0])
             assert abs(got - ref) <= 1e-9 * max(1.0, abs(ref)), (lam, got, ref)
 
+    @pytest.mark.parametrize("p", [4, 8, 10, 14])
+    def test_batched_mle_independent_of_batch_mates(self, p):
+        """Each row of a batched MLE solve is bit-identical to its
+        one-row solve and to HLL.estimate, whatever rows share the
+        call: a row that has converged must stop bisecting."""
+        from dashing_spark.functions.hll import estimate_rows
+
+        sks = [
+            HLL(p).update_hashes(_hashes(int(n), start=i * 10**7))
+            for i, n in enumerate(np.geomspace(3, 3 * 10**5, 29))
+        ]
+        regs = np.stack([s.regs for s in sks])
+        batch = estimate_rows(regs, p, "ertl_mle")
+        one = [estimate_rows(regs[i : i + 1], p, "ertl_mle")[0] for i in range(len(sks))]
+        assert batch.tolist() == one
+        assert one == [s.estimate("ertl_mle") for s in sks]
+
     def test_merge_bit_identical_any_partitioning(self, rng):
         h = _hashes(50_000)
         ref = HLL.empty(11).update_hashes(h)

@@ -186,7 +186,7 @@ class TestStreaming:
             r["lang"]: bytes(r["sketch"]) for r in read_state(spark, state_dir).collect()
         }
         assert after_retry == after_first
-        assert current_state_path(state_dir).endswith("epoch_1")
+        assert "-epoch_1-" in os.path.basename(current_state_path(state_dir))
         # and the merged result equals the one-shot batch build
         full = agg.sketch_tokens_by_key(docs, ["lang"], lambda: HLL.empty(11))
         assert after_first == {r["lang"]: bytes(r["sketch"]) for r in full.collect()}
@@ -201,6 +201,45 @@ class TestStreaming:
         assert {r["lang"]: bytes(r["sketch"]) for r in merged.collect()} == {
             r["lang"]: bytes(r["sketch"]) for r in full.collect()
         }
+
+
+    @pytest.mark.parametrize(
+        "field, change",
+        [
+            ("text_col", {"text_col": "source"}),
+            ("sketch", {"make_sketch": lambda: HLL.empty(12)}),
+            ("key_cols", {"key_cols": ["lang", "source"]}),
+        ],
+    )
+    def test_resume_with_other_layout_raises(self, spark, docs, tmp_path, field, change):
+        """A resume under another text column, other sketch parameters
+        or other key columns must refuse by field name and leave the
+        state as it was, not merge foreign sketches into it."""
+        state_dir = str(tmp_path / "layout_state")
+        args = {"key_cols": ["lang"], "make_sketch": lambda: HLL.empty(10)}
+        half = docs.filter(F.col("doc_id") % 2 == 0)
+        apply_sketch_batch(half, 0, state_dir=state_dir, **args)
+        before = sorted(os.listdir(os.path.join(state_dir, "data")))
+        state = {r["lang"]: bytes(r["sketch"]) for r in read_state(spark, state_dir).collect()}
+        with pytest.raises(ValueError, match=field):
+            apply_sketch_batch(docs, 1, state_dir=state_dir, **{**args, **change})
+        assert committed_epoch(state_dir) == 0
+        assert sorted(os.listdir(os.path.join(state_dir, "data"))) == before
+        assert {
+            r["lang"]: bytes(r["sketch"]) for r in read_state(spark, state_dir).collect()
+        } == state
+
+    def test_resume_of_pre_log_state_raises(self, spark, docs, tmp_path):
+        """State of the older layout (a _CURRENT file naming an epoch_N
+        table, no snapshot log) must be refused by name, not merged."""
+        state_dir = tmp_path / "legacy_state"
+        agg.sketch_tokens_by_key(docs, ["lang"], lambda: HLL.empty(10)).write.parquet(
+            str(state_dir / "epoch_0")
+        )
+        (state_dir / "_CURRENT").write_text("0")
+        with pytest.raises(ValueError, match="older layout.*_CURRENT"):
+            apply_sketch_batch(docs, 1, ["lang"], lambda: HLL.empty(10), str(state_dir))
+        assert sorted(os.listdir(state_dir)) == ["_CURRENT", "epoch_0"]
 
 
 class TestStatefulStream:
@@ -281,6 +320,20 @@ class TestStatefulStream:
         for day, (est, n) in final.items():
             assert est == best[day]  # identical monoid state => identical estimate
             assert n == counts[day]
+
+
+    def test_unknown_estimator_raises_when_built(self, spark, tmp_path):
+        """An unknown estimator name fails when the stream is built,
+        not in its first micro-batch."""
+        from dashing_spark.streaming.stateful import stateful_sketch_stream
+
+        src = str(tmp_path / "est_src")
+        os.makedirs(src)
+        stream = spark.readStream.schema("day string, __h long").parquet(src)
+        with pytest.raises(ValueError, match="unknown estimator"):
+            stateful_sketch_stream(
+                stream, ["day"], lambda: HLL.empty(10), "__h", estimator="ertl_bogus"
+            )
 
 
 class TestStreamingDedup:
@@ -408,15 +461,15 @@ class TestStreamingDedup:
         assert dedup_stream.committed_epochs(state_dir) == [0]
 
     def test_resume_manifest_without_layout_raises(self, spark, docs, tmp_path):
-        """Committed epochs with no _LAYOUT record are state of an older
-        layout (e.g. per-doc docs_/bands_ tables): resuming must refuse,
-        not treat the index as empty."""
+        """A state_dir of an older, pre-snapshot-log layout (an _EPOCHS
+        manifest over per-doc docs_/bands_ tables) must be refused by
+        name, not treated as an empty index."""
         from dashing_spark.streaming import dedup_stream
 
         state_dir = tmp_path / "dd_legacy"
         (state_dir / "docs_epoch_0").mkdir(parents=True)
         (state_dir / "_EPOCHS").write_text("0")
-        with pytest.raises(ValueError, match="_LAYOUT"):
+        with pytest.raises(ValueError, match="older layout.*_EPOCHS"):
             dedup_stream.apply_dedup_batch(
                 docs, 1, id_col="doc_id", state_dir=str(state_dir),
                 threshold=0.9,
@@ -508,7 +561,7 @@ class TestIndexCompaction:
                     batch, e, id_col="doc_id", state_dir=state, threshold=0.9
                 )
         assert dedup_stream.compact_index(spark, compacted, keep_last=0)
-        assert dedup_stream._manifest_tokens(compacted) == ["c1"]
+        assert dedup_stream._tokens(compacted) == ["c1"]
         # the epoch-counter guard must survive compaction
         assert dedup_stream.committed_epochs(compacted) == [1]
         for state in (plain, compacted):
@@ -529,11 +582,11 @@ class TestIndexCompaction:
 
         state = str(tmp_path / "state")
         self._ingest_epochs(spark, docs, state, n_epochs=3)
-        n_before = len([d for d in os.listdir(state) if d.startswith("sets_")])
+        n_before = len(os.listdir(os.path.join(state, "data")))
         assert dedup_stream.compact_index(spark, state, keep_last=1)
-        n_after = len([d for d in os.listdir(state) if d.startswith("sets_")])
+        n_after = len(os.listdir(os.path.join(state, "data")))
         assert n_after < n_before
-        assert dedup_stream._manifest_tokens(state) == ["c1", "2"]
+        assert dedup_stream._tokens(state) == ["c1", "2"]
 
     def test_compaction_noop_when_nothing_to_merge(self, spark, docs, tmp_path):
         from pyspark.sql import functions as F
@@ -569,9 +622,9 @@ class TestIndexCompaction:
                     threshold=0.9, max_segments=policy,
                 )
         # the policy actually fired: segments folded, not 5 raw epochs
-        toks = dedup_stream._manifest_tokens(auto)
+        toks = dedup_stream._tokens(auto)
         assert len(toks) <= 3 and any(t.startswith("c") for t in toks)
-        assert dedup_stream._manifest_tokens(plain) == [
+        assert dedup_stream._tokens(plain) == [
             "0", "1", "2", "3", "4",
         ]
         get = lambda s: {  # noqa: E731
@@ -609,7 +662,7 @@ class TestIndexCompaction:
                 batch, e, id_col="doc_id", state_dir=state,
                 threshold=0.9, max_segments=3, ttl_epochs=ttl,
             )
-        toks = dedup_stream._manifest_tokens(state)
+        toks = dedup_stream._tokens(state)
         # every surviving entry's max covered epoch is within 2×ttl of
         # the head — nothing was refreshed past its horizon
         horizon = (n_epochs - 1) - 2 * ttl
@@ -634,7 +687,7 @@ class TestIndexCompaction:
                 e, id_col="doc_id", state_dir=state,
                 threshold=0.9, ttl_epochs=ttl,
             )
-        assert dedup_stream._manifest_tokens(state) == ["0", "1"]
+        assert dedup_stream._tokens(state) == ["0", "1"]
         empty = small.filter(F.lit(False))
         # epochs 2,3 arrive empty: horizon advances to 3-2+1 = 2 →
         # both indexed epochs age out
@@ -642,12 +695,12 @@ class TestIndexCompaction:
             empty, 2, id_col="doc_id", state_dir=state,
             threshold=0.9, ttl_epochs=ttl,
         )
-        assert dedup_stream._manifest_tokens(state) == ["1"]
+        assert dedup_stream._tokens(state) == ["1"]
         dedup_stream.apply_dedup_batch(
             empty, 3, id_col="doc_id", state_dir=state,
             threshold=0.9, ttl_epochs=ttl,
         )
-        assert dedup_stream._manifest_tokens(state) == []
+        assert dedup_stream._tokens(state) == []
         # a busy epoch after the quiet stretch matches nothing old:
         # replay epoch-0 docs as epoch 4 — in a never-expired index
         # every doc would self-pair; here only in-batch pairs remain

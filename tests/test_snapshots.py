@@ -288,3 +288,166 @@ class TestAdviceR7Regressions:
         )
         assert m2.resumed
         assert "STALE" not in {r["lang"] for r in sk2.select("lang").collect()}
+
+
+class TestFailedWrite:
+    def test_failed_write_removes_its_data_dir(self, spark, tmp_path):
+        """A commit whose data write raises leaves no data dir behind
+        (expire_snapshots could not reap it before some later commit
+        reached its version) and commits nothing."""
+        t = str(tmp_path / "t")
+        S.commit(t, _df(spark, [1]), op="overwrite")
+        before = os.listdir(os.path.join(t, "data"))
+
+        @F.udf("int")
+        def boom(x):
+            raise RuntimeError("injected task failure")
+
+        with pytest.raises(Exception, match="injected task failure"):
+            S.commit(t, _df(spark, [2]).select(boom("x").alias("x")))
+        assert os.listdir(os.path.join(t, "data")) == before
+        assert S.current_version(t) == 0
+
+
+def _torn_write(after: int):
+    """Fault: let ``after`` snapshot data writes through, then make the
+    next one tear — its dir appears with a part file, and it raises."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def apply(m):
+        seen = [0]
+
+        def parquet(self, path, *args, **kwargs):
+            if os.path.basename(os.path.dirname(path)) == "data":
+                seen[0] += 1
+                if seen[0] > after:
+                    os.makedirs(path)
+                    open(os.path.join(path, "part-00000-torn.parquet"), "w").close()
+                    raise OSError("injected write failure")
+            return real(self, path, *args, **kwargs)
+
+        m.setattr(DataFrameWriter, "parquet", parquet)
+
+    return apply
+
+
+def _no_link(m):
+    """Fault: the commit point's hard link fails."""
+
+    def link(src, dst):
+        raise PermissionError(1, "injected link failure")
+
+    m.setattr(os, "link", link)
+
+
+class TestCrashMatrix:
+    """Every caller of the commit point, failed first at its data write
+    and then at its os.link: the state stays at the last commit, the
+    re-run is bit-identical to an uninterrupted run, and after
+    expire_snapshots no data dir is left that no version names."""
+
+    @staticmethod
+    def _crash(monkeypatch, table_dir, fault, run):
+        version = S.current_version(table_dir)
+        with monkeypatch.context() as m:
+            fault(m)
+            with pytest.raises(OSError, match="injected"):
+                run()
+        assert S.current_version(table_dir) == version
+
+    @staticmethod
+    def _assert_no_orphans(table_dir):
+        S.expire_snapshots(table_dir)
+        on_disk = {os.path.join("data", d) for d in os.listdir(os.path.join(table_dir, "data"))}
+        assert on_disk <= S._referenced(table_dir)
+
+    def _run_matrix(self, monkeypatch, tmp_path, ops, faults, read):
+        """Run ``ops`` uninterrupted on one state dir. Before op k, copy
+        that state once per fault in ``faults[k]``; crash op k on the
+        copy, re-run it there, and compare with the uninterrupted run."""
+        ref = str(tmp_path / "ref")
+        for k, op in enumerate(ops):
+            copies = []
+            for i, fault in enumerate(faults.get(k, ())):
+                d = str(tmp_path / f"op{k}_fault{i}")
+                shutil.copytree(ref, d)
+                self._crash(monkeypatch, d, fault, lambda: op(d))
+                copies.append(d)
+            op(ref)
+            for d in copies:
+                op(d)
+                assert read(d) == read(ref)
+                self._assert_no_orphans(d)
+
+    def test_sketch_pipeline(self, spark, tmp_path, monkeypatch):
+        docs = spark.createDataFrame(
+            [("en", "a b c"), ("en", "c d"), ("de", "x y")], "lang string, text string"
+        )
+
+        def build(ckpt):
+            sk, m = build_or_resume_sketch_table(
+                docs, ["lang"], lambda: HLL.empty(10), str(tmp_path / ckpt), lineage=False
+            )
+            return {r["lang"]: bytes(r["sketch"]) for r in sk.collect()}, m
+
+        ref, m_ref = build("ref")
+        snap = os.path.basename(m_ref.checkpoint)
+        for i, fault in enumerate((_torn_write(0), _no_link)):
+            self._crash(
+                monkeypatch, str(tmp_path / f"ck{i}" / snap), fault, lambda: build(f"ck{i}")
+            )
+            out, m = build(f"ck{i}")
+            assert out == ref and not m.resumed
+            self._assert_no_orphans(m.checkpoint)
+
+    def test_incremental_epoch(self, spark, tmp_path, monkeypatch):
+        from dashing_spark.streaming import incremental as inc
+
+        docs = spark.createDataFrame(
+            [(i, "en" if i % 3 else "de", f"t{i} t{i % 7} t{i % 11}") for i in range(60)],
+            "doc_id long, lang string, text string",
+        )
+        ops = [
+            lambda s, e=e: inc.apply_sketch_batch(
+                docs.filter(F.col("doc_id") % 2 == e), e, ["lang"], lambda: HLL.empty(10), s
+            )
+            for e in range(2)
+        ]
+
+        def read(state):
+            rows = inc.read_state(spark, state).collect()
+            return inc.committed_epoch(state), {r["lang"]: bytes(r["sketch"]) for r in rows}
+
+        self._run_matrix(monkeypatch, tmp_path, ops, {1: (_torn_write(0), _no_link)}, read)
+
+    def test_dedup_epoch_and_compaction(self, spark, tmp_path, monkeypatch):
+        from dashing_spark.streaming import dedup_stream as ds
+
+        docs = spark.createDataFrame(
+            [(i, f"alpha beta gamma delta eps{i % 7} zeta{i % 5}") for i in range(60)],
+            ["doc_id", "text"],
+        )
+        ops = [
+            lambda s, e=e: ds.apply_dedup_batch(
+                docs.filter(F.col("doc_id") % 2 == e), e,
+                id_col="doc_id", state_dir=s, threshold=0.9,
+            )
+            for e in range(2)
+        ] + [lambda s: ds.compact_index(spark, s, keep_last=0)]
+
+        def read(state):
+            sets = ds._epoch_union(spark, state, "sets", ds._segments(state))
+            return (
+                ds._tokens(state),
+                sorted(tuple(r) for r in ds.read_pairs(spark, state).collect()),
+                sorted((bytes(r["sk"]), r["nsz"], sorted(r["member_ids"])) for r in sets.collect()),
+            )
+
+        # the torn write is the pairs table's, after the sets table (the
+        # epoch's, or the compacted segment's) was written
+        faults = (_torn_write(1), _no_link)
+        self._run_matrix(monkeypatch, tmp_path, ops, {1: faults, 2: faults}, read)
+        assert ds._tokens(str(tmp_path / "ref")) == ["c1"]
+        assert ds.read_pairs(spark, str(tmp_path / "ref")).count()  # non-vacuous
