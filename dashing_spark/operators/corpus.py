@@ -155,11 +155,12 @@ def curate(
         "left_semi",
     )
     # stage 3b: optional published Gopher rule gates (quality A.1.1 +
-    # repetition A.1.2) — keep only docs passing every rule. The rules
-    # fan s3 out to ~12 branches (lines/paras/top-gram/pos-gram/token
-    # frames plus the joins); checkpoint so the exact-dedup + LSH +
-    # quality lineage upstream runs once, not per branch (the same
-    # guard stages 1b/1c carry)
+    # repetition A.1.2) — keep only docs passing every rule. s3 still
+    # feeds four branches (the quality projection, the repetition
+    # rules' doc-id repartition and their final join, and the
+    # semi-joins' base); checkpoint so the exact-dedup + LSH + quality
+    # lineage upstream runs once, not per branch (the same guard stages
+    # 1b/1c carry)
     s3g = s3
     if gopher:
         if not s3.isStreaming:
@@ -197,11 +198,9 @@ def curate(
     out = s4
     # stage 5: optional Gopher repetition gate (per-doc, pure codegen)
     if max_repetition is not None:
-        grams = text.token_ngrams_col(text_col, 2)
-        dup = F.when(
-            F.size(grams) > 0,
-            F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams),
-        ).otherwise(F.lit(0.0))
+        dup = text.doc_dup_frac(text.token_ngrams_col(text_col, 2)).otherwise(
+            F.lit(0.0)
+        )
         out = out.filter(dup <= max_repetition)
         stats = stats.unionByName(_stage("repetition", out))
     # stage 6: optional benchmark decontamination

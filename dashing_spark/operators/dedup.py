@@ -292,6 +292,22 @@ FUSED_VERIFY_BROADCAST_BYTES = 128 << 20
 FUSED_VERIFY_MAX_AVG_ITEMS = 64
 
 
+def explicit_partition_count(spark) -> int:
+    """Partition count for a hash repartition that AQE must not
+    coalesce: max(2 x defaultParallelism, spark.sql.shuffle.partitions).
+    ``repartition(n, *cols)`` with an explicit ``n`` plans a
+    REPARTITION_BY_NUM exchange, which AQE never coalesces. Use it
+    where rows are few in bytes but each costs real work downstream (a
+    quadratic pair join, a per-doc gram pipeline), which AQE's
+    input-size heuristics cannot see. Reads only the session conf, so
+    it runs no Spark job."""
+    try:
+        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        shuffle_n = 0  # "auto" (non-numeric) — fall back to parallelism
+    return max(spark.sparkContext.defaultParallelism * 2, shuffle_n)
+
+
 def capped_band_join(
     a: DataFrame,
     b: DataFrame,
@@ -412,12 +428,7 @@ def capped_band_join(
         sz = sz.localCheckpoint(eager=False)
     at = a.join(sz, ["band", "bhash"])
     bt = b.join(sz, ["band", "bhash"])
-    spark = a.sparkSession
-    try:
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except ValueError:
-        shuffle_n = 0  # "auto" (non-numeric) — fall back to parallelism
-    n_part = max(spark.sparkContext.defaultParallelism * 2, shuffle_n)
+    n_part = explicit_partition_count(a.sparkSession)
     # both PAIR joins repartition their sides with an EXPLICIT count:
     # band rows are tiny in bytes, so AQE's coalescing would otherwise
     # fuse the join onto one or two reducers (input-size heuristics
@@ -550,22 +561,6 @@ def lsh_candidate_pairs(
     return cand if raw else distinct_pairs(cand)
 
 
-def _shingle_set_expr(text_col: str, shingle_w: int):
-    """Distinct w-shingle array of a text column, all JVM-side."""
-    if shingle_w == 1:
-        return F.array_distinct(F.split(F.col(text_col), " ", -1))
-    toks = F.split(F.col(text_col), " ", -1)
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= shingle_w,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - shingle_w),
-                lambda i: F.array_join(F.slice(toks, i + 1, shingle_w), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
-
-
 def _char_gram_set_expr(text_col: str, n: int):
     """Distinct character n-gram array (ANSI substring semantics, so an
     exact verify lines up with a SQL oracle)."""
@@ -594,10 +589,12 @@ def hashed_item_sets(
     per-pair collision probability — far below the LSH miss rate the
     candidate stage already carries). ``char_n`` switches items from
     word w-shingles to character n-grams."""
+    from dashing_spark.operators.text import token_ngrams_col
+
     item_expr = (
         _char_gram_set_expr(text_col, char_n)
         if char_n is not None
-        else _shingle_set_expr(text_col, shingle_w)
+        else F.array_distinct(token_ngrams_col(text_col, shingle_w))
     )
     item_expr = F.transform(item_expr, lambda x: F.xxhash64(x))
     return df.select(F.col(id_col).alias("id"), item_expr.alias("items"))

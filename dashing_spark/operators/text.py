@@ -184,8 +184,11 @@ def token_ngrams_col(text_col: str, w: int):
     (split → sequence → slice → array_join inside one Generate — no
     Python, no shuffle). Docs shorter than w tokens yield an empty
     array. Matches DuckDB ``ts[i : i+w-1]`` slicing exactly, so oracle
-    queries can replicate gram sets verbatim."""
+    queries can replicate gram sets verbatim. At w=1 the grams are the
+    plain ``split`` tokens (NULL text stays NULL there)."""
     toks = F.split(F.col(text_col), " ", -1)
+    if w == 1:
+        return toks
     n = F.size(toks)
     return F.when(
         n >= w,
@@ -194,6 +197,15 @@ def token_ngrams_col(text_col: str, w: int):
             lambda i: F.array_join(F.slice(toks, i, w), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def doc_dup_frac(grams):
+    """Per-doc duplicate fraction of a gram array: 1 - distinct/total,
+    NULL for a doc with no grams."""
+    return F.when(
+        F.size(grams) > 0,
+        F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams),
+    )
 
 
 def repetition_stats(
@@ -220,11 +232,9 @@ def repetition_stats(
         *key_cols,
         F.size(grams).alias("n_grams"),
         F.size(F.array_distinct(grams)).alias("n_uniq"),
+        doc_dup_frac(grams).alias("dup_frac"),
     )
-    dup_frac = F.when(
-        F.col("n_grams") > 0,
-        F.lit(1.0) - F.col("n_uniq") / F.col("n_grams"),
-    )
+    dup_frac = F.col("dup_frac")
     return per_doc.groupBy(*key_cols).agg(
         F.count("*").alias("n_docs"),
         F.sum("n_grams").alias("total_grams"),
@@ -338,32 +348,6 @@ GOPHER_REPETITION_THRESHOLDS = {
 }
 
 
-def _dup_unit_fracs(df: DataFrame, id_col: str, text_col: str, sep: str, tag: str):
-    """Per-doc duplicate-(line|paragraph) fractions: occurrences beyond
-    the first, as a count fraction and a character fraction (Gopher
-    A.1.2 rows 1-4). One (doc, unit) groupBy — linear, skew-free (the
-    key includes the doc id). ``sep`` is a LITERAL separator (Spark
-    split is regex — quoted like line_dedup so a metachar separator
-    still splits literally and matches the DuckDB string_split twin)."""
-    from dashing_spark.operators.dedup import _regex_quote
-
-    units = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.split(F.col(text_col), _regex_quote(sep), -1)).alias("__u"),
-    )
-    per_unit = units.groupBy("__id", "__u").agg(F.count("*").alias("__c"))
-    ln = F.length("__u")
-    tot_chars = F.sum(F.col("__c") * ln)
-    return per_unit.groupBy("__id").agg(
-        (F.sum(F.col("__c") - 1) / F.sum("__c")).alias(f"dup_{tag}_frac"),
-        # all-empty units (e.g. text "") have zero total chars — ANSI
-        # division would raise; an empty doc duplicates nothing
-        F.when(
-            tot_chars > 0, F.sum((F.col("__c") - 1) * ln) / tot_chars
-        ).otherwise(F.lit(0.0)).alias(f"dup_{tag}_char_frac"),
-    )
-
-
 def gopher_repetition_rules(
     df: DataFrame,
     id_col: str,
@@ -380,134 +364,129 @@ def gopher_repetition_rules(
     like :func:`dedup.dup_islands`, but within one document). One
     boolean per rule (fraction <= threshold) plus ``gopher_rep_keep``.
 
-    Plans: every stage is a (doc, unit)- or (doc, n, gram)-keyed
-    groupBy (linear, skew-free — keys contain the doc id) plus one
-    doc-partitioned window for the island merge; no pair joins, no
+    Plans: one hash repartition by doc id, at an explicit count
+    (:func:`dedup.explicit_partition_count`; AQE coalesces a count-free
+    exchange of these few bytes onto one or two reducers, measured 3x
+    slower). Every later groupBy, window and join is keyed by the doc
+    id and reuses it. Three Generates read each doc — lines and
+    paragraphs as one tagged array, the {2,3,4}-grams, the {5..10}-grams
+    with positions — then one doc-partitioned window merges islands
+    and one per-doc rollup joins the docs once. No pair joins, no
     Python. Fractions are exact int/int divisions — hash-gateable
     against a DuckDB twin. Docs keep their rows always: a doc with no
     grams at some n has fraction 0 for that rule."""
-    from pyspark.sql import Window
+    from dashing_spark.operators.dedup import (
+        _regex_quote, explicit_partition_count, merge_position_islands,
+    )
 
-    th = dict(GOPHER_REPETITION_THRESHOLDS)
-    th.update(thresholds or {})
+    th = {**GOPHER_REPETITION_THRESHOLDS, **(thresholds or {})}
     base = df.select(
         F.col(id_col).alias("__id"),
         F.coalesce(F.col(text_col), F.lit("")).alias("__t"),
-    ).withColumn("__nchars", F.length("__t"))
+    ).repartition(explicit_partition_count(df.sparkSession), "__id")
 
-    lines = _dup_unit_fracs(base, "__id", "__t", "\n", "line")
-    paras = _dup_unit_fracs(base, "__id", "__t", para_sep, "para")
+    def tagged(arr, name, pos=False, **tags):
+        """Each element of ``arr`` as a struct: the constant ``tags``,
+        its 0-based index (``pos``) and the element as ``name``."""
+        consts = [F.lit(v).alias(k) for k, v in tags.items()]
+        if pos:
+            return F.transform(arr, lambda x, i: F.struct(*consts, i.alias("__pos"), x.alias(name)))
+        return F.transform(arr, lambda x: F.struct(*consts, x.alias(name)))
+
+    def rows(arrays):
+        """One Generate over the concatenated struct arrays."""
+        return base.select("__id", F.inline(F.concat(*arrays)))
+
+    # --- duplicate lines / paragraphs: occurrences beyond the first, as
+    # count and character fractions. Separators are LITERAL (split is
+    # regex — quoted like line_dedup, matching DuckDB string_split)
+    per_unit = rows(
+        tagged(F.split("__t", _regex_quote(sep), -1), "__u", __k=kind)
+        for kind, sep in (("line", "\n"), ("para", para_sep))
+    ).groupBy("__id", "__k", "__u").agg(F.count("*").alias("__c"))
+    ln = F.length("__u")
+    tot_chars = F.sum(F.col("__c") * ln)
+    unit_fracs = per_unit.groupBy("__id", "__k").agg(
+        (F.sum(F.col("__c") - 1) / F.sum("__c")).alias("__frac"),
+        # all-empty units (e.g. text "") have zero total chars — ANSI
+        # division would raise; an empty doc duplicates nothing
+        F.when(
+            tot_chars > 0, F.sum((F.col("__c") - 1) * ln) / tot_chars
+        ).otherwise(F.lit(0.0)).alias("__cfrac"),
+    )
 
     # --- top-{2,3,4}-gram character fraction: chars of the single most
     # frequent n-gram (count * len, only when count >= 2) / doc chars.
-    # Tie-break: max (count, char contribution) struct — deterministic
-    # and replicable as max(struct_pack(...)) in DuckDB.
-    top_grams = None
-    for n in (2, 3, 4):
-        g = base.select(
-            "__id", F.lit(n).alias("__n"),
-            F.explode(token_ngrams_col("__t", n)).alias("__g"),
-        )
-        top_grams = g if top_grams is None else top_grams.unionByName(g)
-    gcnt = top_grams.groupBy("__id", "__n", "__g").agg(F.count("*").alias("__c"))
-    # count floor 2 is the PUBLISHED behavior: reference
+    # Count floor 2 is the PUBLISHED behavior: reference
     # implementations (DataTrove gopher_repetition_filter) guard with
     # `top_n_gram[1] > 1`, so a once-occurring top gram contributes 0 —
     # without the floor every short doc fails top-3/4-gram on its first
-    # 4-gram alone. Tie-break by char contribution, deterministic in
-    # both engines.
+    # 4-gram alone. Tie-break: max (count, char contribution) struct —
+    # deterministic and replicable as max(struct_pack(...)) in DuckDB.
     top = (
-        gcnt.filter(F.col("__c") >= 2)
+        rows(tagged(token_ngrams_col("__t", n), "__g", __n=n) for n in (2, 3, 4))
+        .groupBy("__id", "__n", "__g")
+        .agg(F.count("*").alias("__c"))
+        .filter(F.col("__c") >= 2)
         .groupBy("__id", "__n")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__c").alias("c"),
-                    (F.col("__c") * F.length("__g")).alias("cl"),
-                )
-            )["cl"].alias("__topchars")
-        )
+        .agg(F.max(F.struct("__c", (F.col("__c") * F.length("__g")).alias("cl")))["cl"]
+             .alias("__chars"))
     )
 
-    # --- duplicated-{5..10}-gram COVERED character fraction: positions
-    # of within-doc duplicated n-grams merged into islands; covered
-    # chars = token chars at covered positions + one separator per
-    # adjacent covered pair (islands of p positions have p-1 internal
-    # spaces)
-    toks = base.select(
-        "__id",
-        F.posexplode(F.split("__t", " ", -1)).alias("__pos", "__tok"),
-    ).withColumn("__tlen", F.length("__tok"))
-    pos_grams = None
-    for n in range(5, 11):
-        g = base.select(
-            "__id", F.lit(n).alias("__n"),
-            F.posexplode(token_ngrams_col("__t", n)).alias("__pos", "__g"),
+    # --- duplicated-{5..10}-gram COVERED character fraction: start
+    # positions of within-doc duplicated n-grams merged into islands;
+    # island [s, s+len-1] covers its tokens joined by single spaces
+    dup_pos = (
+        rows(
+            tagged(token_ngrams_col("__t", n), "__g", pos=True, __n=n)
+            for n in range(5, 11)
         )
-        pos_grams = g if pos_grams is None else pos_grams.unionByName(g)
-    dup_g = (
-        pos_grams.groupBy("__id", "__n", "__g")
+        .groupBy("__id", "__n", "__g")
         .agg(F.count("*").alias("__c"), F.collect_list("__pos").alias("__ps"))
         .filter(F.col("__c") >= 2)
         .select("__id", "__n", F.explode("__ps").alias("__pos"))
     )
-    from dashing_spark.operators.dedup import merge_position_islands
-
-    isl = merge_position_islands(dup_g, ["__id", "__n"], F.col("__n"))
-    isl = isl.select(
-        "__id", "__n", "__isl",
-        F.explode(
-            F.sequence(
-                F.col("__start"), F.col("__start") + F.col("__len") - 1
-            )
-        ).alias("__pos"),
-    )
-    cov = isl.join(toks.select("__id", "__pos", "__tlen"), ["__id", "__pos"])
-    cov_per = cov.groupBy("__id", "__n").agg(
-        (
-            F.sum("__tlen")
-            + F.count("*")
-            - F.countDistinct("__isl")
-        ).alias("__covchars")
+    isl = merge_position_islands(dup_pos, ["__id", "__n"], F.col("__n"))
+    covered = F.slice(F.split("__t", " ", -1), F.col("__start") + 1, F.col("__len"))
+    cov = isl.join(base, "__id").groupBy("__id", "__n").agg(
+        F.sum(F.length(F.array_join(covered, " "))).alias("__chars")
     )
 
-    out = base.select("__id", "__nchars")
-    for frame, cols in (
-        (lines, ["dup_line_frac", "dup_line_char_frac"]),
-        (paras, ["dup_para_frac", "dup_para_char_frac"]),
-    ):
-        out = out.join(frame, "__id", "left")
-    for n in (2, 3, 4):
-        t = top.filter(F.col("__n") == n).select(
-            "__id", F.col("__topchars").alias(f"__tc{n}")
+    # --- one per-doc rollup: rule rows -> columns, one join to the docs
+    unit_cols = {
+        f"dup_{k}{sfx}": F.max(F.when(F.col("__k") == k, F.col(v)))
+        for k in ("line", "para")
+        for v, sfx in (("__frac", "_frac"), ("__cfrac", "_char_frac"))
+    }
+    roll = (
+        top.unionByName(cov)
+        .unionByName(unit_fracs, allowMissingColumns=True)
+        .groupBy("__id")
+        .agg(
+            *[c.alias(name) for name, c in unit_cols.items()],
+            *[F.max(F.when(F.col("__n") == n, F.col("__chars"))).alias(f"__c{n}")
+              for n in range(2, 11)],
         )
-        out = out.join(t, "__id", "left").withColumn(
-            f"top_{n}gram_char_frac",
-            F.when(
-                F.col("__nchars") > 0,
-                F.coalesce(F.col(f"__tc{n}"), F.lit(0)) / F.col("__nchars"),
-            ).otherwise(F.lit(0.0)),
-        ).drop(f"__tc{n}")
-    for n in range(5, 11):
-        c = cov_per.filter(F.col("__n") == n).select(
-            "__id", F.col("__covchars").alias(f"__cc{n}")
-        )
-        out = out.join(c, "__id", "left").withColumn(
-            f"dup_{n}gram_char_frac",
-            F.when(
-                F.col("__nchars") > 0,
-                F.coalesce(F.col(f"__cc{n}"), F.lit(0)) / F.col("__nchars"),
-            ).otherwise(F.lit(0.0)),
-        ).drop(f"__cc{n}")
-    rules = {}
-    for name, bound in th.items():
-        rules[f"{name}_ok"] = F.coalesce(F.col(name), F.lit(0.0)) <= bound
-    out = out.withColumns(rules)
-    out = out.withColumn(
+    )
+    nchars = F.length("__t")
+
+    def char_frac(n):
+        return F.when(
+            nchars > 0, F.coalesce(F.col(f"__c{n}"), F.lit(0)) / nchars
+        ).otherwise(F.lit(0.0))
+
+    out = base.join(roll, "__id", "left").select(
+        F.col("__id").alias(id_col),
+        *unit_cols,
+        *[char_frac(n).alias(f"top_{n}gram_char_frac") for n in (2, 3, 4)],
+        *[char_frac(n).alias(f"dup_{n}gram_char_frac") for n in range(5, 11)],
+    )
+    rules = {
+        f"{name}_ok": F.coalesce(F.col(name), F.lit(0.0)) <= bound
+        for name, bound in th.items()
+    }
+    out = out.withColumns(rules).withColumn(
         "gopher_rep_keep", reduce(lambda a, b: a & b, rules.values())
-    )
-    joined = df.join(
-        out.withColumnRenamed("__id", id_col).drop("__nchars"), id_col, "left"
     )
     # a NULL id never matches the id-keyed stat joins (the recurring
     # equi-join NULL-key class) — such a row cannot be attributed, so
@@ -515,7 +494,7 @@ def gopher_repetition_rules(
     # that a .filter() would silently drop
     fixes = {c: F.coalesce(F.col(c), F.lit(False))
              for c in [*rules, "gopher_rep_keep"]}
-    return joined.withColumns(fixes)
+    return df.join(out, id_col, "left").withColumns(fixes)
 
 
 def gopher_quality_rules(

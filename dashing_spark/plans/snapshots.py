@@ -24,10 +24,9 @@ raises, leaving no tmp file or new data dir):
 - **self-describing state**: :func:`committed_properties` refuses to
   resume state recorded under another layout, or a directory holding
   files of an older, pre-log layout;
-- **crash recovery**: ``version-hint.text`` is a read accelerator, not
-  truth — the committed version is max(vN.json present), exactly
-  Iceberg's HadoopTableOperations rule, so a crash between metadata
-  rename and hint update loses nothing;
+- **committed version**: max(vN.json present), exactly Iceberg's
+  HadoopTableOperations rule — one listing of ``metadata/``, no
+  pointer file to keep in step with it;
 - **time travel**: every snapshot records its full file-set (directly,
   no manifest-list indirection at this scale) + parent version +
   operation, so ``read_table(..., version=k)`` and ``history()`` are
@@ -54,7 +53,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 _META = "metadata"
 _DATA = "data"
-_HINT = "version-hint.text"
 
 #: operations recorded in the log
 _OPS = ("append", "overwrite", "rollback")
@@ -87,9 +85,7 @@ def _versions(table_dir: str) -> list[int]:
 
 
 def current_version(table_dir: str) -> int | None:
-    """Committed version: max vN.json present. The hint file is only a
-    shortcut start point — never trusted on its own (crash between
-    metadata rename and hint write must lose nothing)."""
+    """Committed version: max vN.json present."""
     versions = _versions(table_dir)
     return versions[-1] if versions else None
 
@@ -212,11 +208,6 @@ def commit_paths(
         os.fsync(fd)
     finally:
         os.close(fd)
-    # hint is best-effort: written via tmp+rename so it is never torn
-    hint_tmp = os.path.join(table_dir, _HINT + ".tmp")
-    with open(hint_tmp, "w") as f:
-        f.write(str(version))
-    os.rename(hint_tmp, os.path.join(table_dir, _HINT))
     return version
 
 
@@ -269,7 +260,7 @@ def committed_properties(table_dir: str, layout: dict | None = None) -> dict | N
     if v is None:
         foreign = sorted(
             set(os.listdir(table_dir) if os.path.isdir(table_dir) else ())
-            - {_META, _DATA, _HINT}
+            - {_META, _DATA}
         )
         if foreign:
             raise ValueError(

@@ -465,6 +465,30 @@ class TestRound6PlanPins:
         assert "CartesianProduct" not in plan
         assert "InPandas" not in plan and "PythonUDF" not in plan
 
+    def test_gopher_repetition_one_doc_id_exchange(self, spark, docs):
+        """The repetition rules hash-repartition the docs by id ONCE, at
+        an explicit count (an exchange with no count is coalesced by
+        AQE: measured 3x slower), and read each doc with three
+        Generates (lines+paragraphs, {2,3,4}-grams, {5..10}-grams) plus
+        the island explode. Every branch reuses the doc-id exchange, so
+        the plan has at most 8 Exchange and 6 Generate operator lines;
+        building it runs no Spark job."""
+        from dashing_spark.operators import text as _text
+
+        sc = spark.sparkContext
+        sc.setJobGroup("gopher_plan_build", "plan build only")
+        try:
+            plan = _plan(_text.gopher_repetition_rules(docs, "doc_id"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup("gopher_plan_build")) == []
+        ops = [re.sub(r"^[\s:+|-]*", "", line) for line in plan.splitlines()]
+        exchanges = [o for o in ops if o.startswith("Exchange")]
+        assert len(exchanges) <= 8, exchanges
+        assert sum(o.startswith("Generate") for o in ops) <= 6
+        by_id = [o for o in exchanges if o.startswith("Exchange hashpartitioning(__id#")]
+        assert by_id and all("REPARTITION_BY_NUM" in o for o in by_id), by_id
+
     def test_c4_rules_is_single_projection(self, spark, docs):
         """c4_rules is row-local: zero exchanges — one projection over
         the scan."""

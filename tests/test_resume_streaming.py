@@ -175,6 +175,10 @@ class TestStreaming:
         half2 = docs.filter(F.col("doc_id") % 2 == 1)
         apply_sketch_batch(half1, 0, ["lang"], lambda: HLL.empty(11), state_dir)
         assert committed_epoch(state_dir) == 0
+        # the hint file older versions of the snapshot log wrote on every
+        # commit: resuming such a state dir neither needs nor refuses it
+        with open(os.path.join(state_dir, "version-hint.text"), "w") as f:
+            f.write("0")
         apply_sketch_batch(half2, 1, ["lang"], lambda: HLL.empty(11), state_dir)
         after_first = {
             r["lang"]: bytes(r["sketch"]) for r in read_state(spark, state_dir).collect()

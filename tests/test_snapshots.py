@@ -56,10 +56,14 @@ class TestSnapshotLog:
         assert _xs(S.read_table(spark, t)) == [2]
 
     def test_hint_file_is_not_truth(self, spark, tmp_path):
+        """A commit writes no version-hint.text; a stale one left by an
+        older writer of the log is never read."""
         t = str(tmp_path / "t")
         S.commit(t, _df(spark, [1]), op="overwrite")
         S.commit(t, _df(spark, [2]), op="overwrite")
-        os.unlink(os.path.join(t, "version-hint.text"))  # crash before hint
+        assert sorted(os.listdir(t)) == ["data", "metadata"]
+        with open(os.path.join(t, "version-hint.text"), "w") as f:
+            f.write("0")
         assert S.current_version(t) == 1
         assert _xs(S.read_table(spark, t)) == [2]
 
