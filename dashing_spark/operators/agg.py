@@ -373,8 +373,8 @@ def sketch_tokens_by_key(
 
         if shingle_w == 1:
             items = df.select(
-                *key_cols, F.explode(F.split(F.col(text_col), " ", -1)).alias("__item")
-            ).withColumn("__ih", F.xxhash64("__item"))
+                *key_cols, F.explode(token_hashes_col(text_col, seed)).alias("__ih")
+            )
         else:
             items = _shingle_hash_df(df, key_cols, text_col, shingle_w, seed)
         w = Window.partitionBy(*key_cols, "__ih").orderBy(
@@ -573,6 +573,19 @@ def sketch_hash_col_by_key(
     )
 
 
+def _merge_blobs(columns):
+    """Merge the sketch blobs of an iterable of Arrow arrays in arrival
+    order, one array's blobs at a time; None when there are none."""
+    acc = None
+    for col in columns:
+        for b in col.to_pylist():
+            if acc is None:
+                acc = sketch_from_bytes(b)
+            else:
+                acc.merge(sketch_from_bytes(b))
+    return acc
+
+
 def _merge_groups(
     df: DataFrame, key_cols: Sequence[str], acc_merges=None
 ) -> DataFrame:
@@ -587,12 +600,9 @@ def _merge_groups(
     def merge(table):
         import pyarrow as pa
 
-        blobs = table.column(SKETCH_COL).to_pylist()
-        sk = sketch_from_bytes(blobs[0])
-        for b in blobs[1:]:
-            sk.merge(sketch_from_bytes(b))
+        sk = _merge_blobs(table.column(SKETCH_COL).chunks)
         if acc_merges is not None:
-            acc_merges.add(len(blobs) - 1)
+            acc_merges.add(table.num_rows - 1)
         return (
             table.select(key_cols)
             .slice(0, 1)
@@ -658,22 +668,20 @@ def merge_sketches_by_key(
 def union_all_sketches(sketches: DataFrame, sketch_col: str = SKETCH_COL) -> DataFrame:
     """Merge every sketch in a table into ONE — `dashing union`
     (/root/reference/src/union.cpp:32-58). Partition-level partial merge
-    (mapInPandas) then a single final merge, i.e. a two-level tree."""
+    (mapInArrow) then a single final merge, i.e. a two-level tree."""
     ensure_shipped(sketches.sparkSession)
     schema = T.StructType([T.StructField(SKETCH_COL, T.BinaryType(), False)])
 
     def partial(batches):
-        acc = None
-        for pdf in batches:
-            for b in pdf[sketch_col]:
-                if acc is None:
-                    acc = sketch_from_bytes(b)
-                else:
-                    acc.merge(sketch_from_bytes(b))
-        if acc is not None:
-            yield pd.DataFrame({SKETCH_COL: [acc.to_bytes()]})
+        import pyarrow as pa
 
-    partials = sketches.select(sketch_col).mapInPandas(partial, schema=schema)
+        acc = _merge_blobs(rb.column(0) for rb in batches)
+        if acc is not None:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([acc.to_bytes()], pa.binary())], names=[SKETCH_COL]
+            )
+
+    partials = sketches.select(sketch_col).mapInArrow(partial, schema=schema)
     return _merge_groups(partials, []).withColumnRenamed(SKETCH_COL, sketch_col)
 
 

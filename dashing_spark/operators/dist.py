@@ -82,9 +82,8 @@ def _attach_measures(
     measures: Sequence[str],
     ksinv: float,
     estimator: str,
-    a_col: str = f"a_{SKETCH_COL}",
-    b_col: str = f"b_{SKETCH_COL}",
 ) -> DataFrame:
+    a_col, b_col = f"a_{SKETCH_COL}", f"b_{SKETCH_COL}"
     udf = _measures_udf(measures, ksinv, estimator)
     pairs = pairs.withColumn("__m", udf(F.col(a_col), F.col(b_col)))
     for i, ms in enumerate(measures):
@@ -271,31 +270,20 @@ def nearest_neighbors(
     the measure's natural direction (emt2nntype, src/dashing.h:268-280).
     ``n_blocks`` selects the grid pair strategy (see all_pairs)."""
     key_cols = list(key_cols)
-    if measure in ASYMMETRIC_MEASURES:
-        # directional measure: the mirrored row must carry the value
-        # evaluated b->a, not a copy of a->b (containment(X in Y) and
-        # containment(Y in X) differ whenever |X| != |Y|) — one pair
-        # stage computes both directions from the same triple
-        swap_name = _SWAP_PREFIX + measure
-        ut = all_pairs(
-            sketches, key_cols, (measure, swap_name), ksinv, estimator,
-            n_blocks=n_blocks,
-        )
-        swapped = ut.select(
-            *[F.col(f"b_{k}").alias(f"a_{k}") for k in key_cols],
-            *[F.col(f"a_{k}").alias(f"b_{k}") for k in key_cols],
-            F.col(swap_name).alias(measure),
-        )
-        ut = ut.drop(swap_name)
-    else:
-        ut = all_pairs(
-            sketches, key_cols, (measure,), ksinv, estimator, n_blocks=n_blocks
-        )
-        swapped = ut.select(
-            *[F.col(f"b_{k}").alias(f"a_{k}") for k in key_cols],
-            *[F.col(f"a_{k}").alias(f"b_{k}") for k in key_cols],
-            F.col(measure),
-        )
+    # a directional measure's mirrored row must carry the value evaluated
+    # b->a, not a copy of a->b (containment(X in Y) and containment(Y in
+    # X) differ whenever |X| != |Y|) — one pair stage computes both
+    # directions from the same triple
+    swap = _SWAP_PREFIX + measure if measure in ASYMMETRIC_MEASURES else measure
+    ut = all_pairs(
+        sketches, key_cols, tuple(dict.fromkeys((measure, swap))), ksinv,
+        estimator, n_blocks=n_blocks,
+    )
+    swapped = ut.select(
+        *[F.col(f"b_{k}").alias(f"a_{k}") for k in key_cols],
+        *[F.col(f"a_{k}").alias(f"b_{k}") for k in key_cols],
+        F.col(swap).alias(measure),
+    )
     both = ut.select(swapped.columns).unionByName(swapped)
     direction = (
         [F.col(measure).asc()] if measure in DISTANCE_MEASURES else [F.col(measure).desc()]

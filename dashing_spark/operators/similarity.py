@@ -4,16 +4,23 @@ Training-data-pipeline addition (no dashing counterpart — its nearest
 neighbors run over sketch distances, /root/reference/src/sketch_and_cmp.h:712-783;
 here the vectors are dense embeddings).
 
-Two paths:
+Paths:
 - ``cosine_topk_exact``: brute-force via JVM expressions (zip_with +
   aggregate) — the exact baseline, oracle-comparable;
 - ``cosine_topk_blocked``: the scale path — queries broadcast as a numpy
   matrix, one matmul per Arrow batch of references, per-partition
   partial top-k, final top-k by Window. O(#refs × #queries) FLOPs but
   only O(#queries × k) rows per partition cross the shuffle;
-- ``lsh_cosine_topk``: random-hyperplane LSH bucketing — candidates
-  share a signature bucket; recall measured against brute force in
+- ``lsh_cosine_topk`` / ``ivf_topk`` / ``ivfpq_topk`` /
+  ``query_ann_index``: approximate — candidates share a hyperplane-LSH
+  bucket or an inverted list; recall measured against brute force in
   tests rather than guaranteed.
+
+Every search is candidates → score → top-k, with one copy of each step:
+the exact cosine (:func:`_cos`, attached by :func:`_with_cos` or the
+broadcast cross join :func:`_cross_cos`), the per-query window
+(:func:`_ranked` / :func:`_topk`), the IVF list join
+(:func:`_ivf_candidates`) and the ADC rank-or-rerank (:func:`_adc_topk`).
 """
 
 from __future__ import annotations
@@ -48,6 +55,63 @@ def _vec_with_norm(embeddings, id_col: str, vec_col: str):
     )
 
 
+def _side(e: DataFrame, id_col: str, s: str) -> DataFrame:
+    """One pair side of a :func:`_vec_with_norm` frame, its columns
+    prefixed ``s``: (s_id, s_vec, s_nv)."""
+    return e.select(
+        F.col(id_col).alias(f"{s}_id"), F.col("v").alias(f"{s}_vec"),
+        F.col("nv").alias(f"{s}_nv"),
+    )
+
+
+def _cos(a: str, b: str):
+    """The exact cosine of the ``a``- and ``b``-prefixed sides of a pair
+    frame: the dot product over the product of the stored norms."""
+    return _dot_expr(F.col(f"{a}_vec"), F.col(f"{b}_vec")) / (
+        F.col(f"{a}_nv") * F.col(f"{b}_nv")
+    )
+
+
+def _with_cos(
+    pairs: DataFrame, e: DataFrame, id_col: str, a: str, b: str
+) -> DataFrame:
+    """Candidate pairs (a_id, b_id) with each side's vector and norm
+    joined from the :func:`_vec_with_norm` frame ``e``, plus ``cos``."""
+    for s in (a, b):
+        pairs = pairs.join(_side(e, id_col, s), f"{s}_id")
+    return pairs.withColumn("cos", _cos(a, b))
+
+
+def _cross_cos(
+    left: DataFrame, right: DataFrame, id_col: str, vec_col: str, a: str,
+    b: str, keep,
+) -> DataFrame:
+    """Brute-force pairs: ``left`` x broadcast ``right`` (sides prefixed
+    ``a``/``b``), filtered by the ``keep`` condition, plus ``cos``."""
+    la = _side(_vec_with_norm(left, id_col, vec_col), id_col, a)
+    rb = _side(_vec_with_norm(right, id_col, vec_col), id_col, b)
+    return la.crossJoin(F.broadcast(rb)).filter(keep).withColumn("cos", _cos(a, b))
+
+
+def _ranked(pairs: DataFrame, score: str) -> DataFrame:
+    """``pairs`` plus each query's ``rank``: row_number over ``q_id`` by
+    ``score`` desc, ties broken by ``n_id`` asc — the one ordering of
+    every top-k here (dashing's nndist_loop, src/sketch_and_cmp.h:712-783)."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(), F.col("n_id").asc())
+    return pairs.withColumn("rank", F.row_number().over(w))
+
+
+def _topk(
+    pairs: DataFrame, score: str, k: int, name: str | None = None
+) -> DataFrame:
+    """(q_id, n_id, score as ``name``, rank) for each query's top ``k``."""
+    return (
+        _ranked(pairs, score)
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", F.col(score).alias(name or score), "rank")
+    )
+
+
 def cosine_topk_exact(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -57,24 +121,11 @@ def cosine_topk_exact(
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (JVM-side arithmetic).
     Excludes self-pairs; deterministic tie-break on neighbor id."""
-    qn = _vec_with_norm(queries, id_col, vec_col)
-    rn = _vec_with_norm(embeddings, id_col, vec_col)
-    q = qn.select(
-        F.col(id_col).alias("q_id"), F.col("v").alias("q_vec"), F.col("nv").alias("q_nv")
+    pairs = _cross_cos(
+        queries, embeddings, id_col, vec_col, "q", "n",
+        F.col("q_id") != F.col("n_id"),
     )
-    r = rn.select(
-        F.col(id_col).alias("n_id"), F.col("v").alias("n_vec"), F.col("nv").alias("n_nv")
-    )
-    pairs = q.crossJoin(F.broadcast(r)).filter(F.col("q_id") != F.col("n_id"))
-    pairs = pairs.withColumn(
-        "cos", _dot_expr(F.col("q_vec"), F.col("n_vec")) / (F.col("q_nv") * F.col("n_nv"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cos", "rank")
-    )
+    return _topk(pairs, "cos", k)
 
 
 def cosine_topk_blocked(
@@ -129,13 +180,7 @@ def cosine_topk_blocked(
             )
 
     partial = embeddings.select(id_col, vec_col).mapInPandas(fn, schema=schema)
-    partial = partial.filter(F.col("q_id") != F.col("n_id"))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cos", "rank")
-    )
+    return _topk(partial.filter(F.col("q_id") != F.col("n_id")), "cos", k)
 
 
 def hyperplane_signatures(
@@ -249,24 +294,7 @@ def lsh_cosine_topk(
         .select(F.col("a_id").alias("q_id"), F.col("b_id").alias("n_id"))
     )
     e = _vec_with_norm(embeddings, id_col, vec_col)
-    pairs = (
-        cand.join(
-            e.select(F.col(id_col).alias("q_id"), F.col("v").alias("q_vec"),
-                     F.col("nv").alias("q_nv")), "q_id")
-        .join(
-            e.select(F.col(id_col).alias("n_id"), F.col("v").alias("n_vec"),
-                     F.col("nv").alias("n_nv")), "n_id")
-        .withColumn(
-            "cos",
-            _dot_expr(F.col("q_vec"), F.col("n_vec")) / (F.col("q_nv") * F.col("n_nv")),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cos", "rank")
-    )
+    return _topk(_with_cos(cand, e, id_col, "q", "n"), "cos", k)
 
 
 def _sample_matrix(
@@ -356,6 +384,34 @@ def ivf_assignments(
     return embeddings.select(id_col, vec_col).mapInPandas(fn, schema=schema)
 
 
+def _ivf_candidates(
+    embeddings: DataFrame,
+    centroids: np.ndarray | None,
+    n_centroids: int,
+    nprobe: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Distinct (q_id, n_id) self-pairs that share an inverted list, the
+    candidates of :func:`ivf_topk` and :func:`ivfpq_topk`. Trains the
+    coarse quantizer when ``centroids`` is None."""
+    if centroids is None:
+        centroids = train_ivf_centroids(
+            embeddings, n_centroids, seed=seed, vec_col=vec_col
+        )
+    # reference vectors live in exactly their nearest list; queries probe nprobe
+    ref = ivf_assignments(embeddings, centroids, 1, id_col, vec_col)
+    qry = ivf_assignments(embeddings, centroids, nprobe, id_col, vec_col)
+    return (
+        qry.select(F.col(id_col).alias("q_id"), "list_id")
+        .join(ref.select(F.col(id_col).alias("n_id"), "list_id"), "list_id")
+        .filter(F.col("q_id") != F.col("n_id"))
+        .select("q_id", "n_id")
+        .distinct()
+    )
+
+
 def ivf_topk(
     embeddings: DataFrame,
     k: int,
@@ -371,40 +427,11 @@ def ivf_topk(
     top-k on candidates only. Shuffle is a hash partition on list_id —
     the standard coarse-quantizer ANN shape (vs. the data-independent
     LSH variant). Recall measured against brute force in tests."""
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            embeddings, n_centroids, seed=seed, vec_col=vec_col
-        )
-    cent = centroids
-    # reference vectors live in exactly their nearest list; queries probe nprobe
-    ref = ivf_assignments(embeddings, cent, nprobe=1, id_col=id_col, vec_col=vec_col)
-    qry = ivf_assignments(embeddings, cent, nprobe=nprobe, id_col=id_col, vec_col=vec_col)
-    cand = (
-        qry.select(F.col(id_col).alias("q_id"), "list_id")
-        .join(ref.select(F.col(id_col).alias("n_id"), "list_id"), "list_id")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id")
-        .distinct()
+    cand = _ivf_candidates(
+        embeddings, centroids, n_centroids, nprobe, seed, id_col, vec_col
     )
     e = _vec_with_norm(embeddings, id_col, vec_col)
-    pairs = (
-        cand.join(
-            e.select(F.col(id_col).alias("q_id"), F.col("v").alias("q_vec"),
-                     F.col("nv").alias("q_nv")), "q_id")
-        .join(
-            e.select(F.col(id_col).alias("n_id"), F.col("v").alias("n_vec"),
-                     F.col("nv").alias("n_nv")), "n_id")
-        .withColumn(
-            "cos",
-            _dot_expr(F.col("q_vec"), F.col("n_vec")) / (F.col("q_nv") * F.col("n_nv")),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cos", "rank")
-    )
+    return _topk(_with_cos(cand, e, id_col, "q", "n"), "cos", k)
 
 
 def train_pq_codebooks(
@@ -520,6 +547,41 @@ def _adc_score_expr(codebooks: np.ndarray):
     return _adc
 
 
+def _adc_topk(
+    pairs: DataFrame,
+    books: np.ndarray,
+    k: int,
+    rerank: int,
+    embeddings: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """ADC ranking of candidate pairs (q_id, q_vec, n_id, codes), shared
+    by :func:`ivfpq_topk` and :func:`query_ann_index`: the top ``k`` by
+    ADC score, or with ``rerank`` > 0 the IVFADC+R refinement — the top
+    k*rerank ADC candidates re-scored by the exact cosine against the
+    full vectors of ``embeddings`` (``id_col``, ``vec_col``). Returns
+    (q_id, n_id, score, rank)."""
+    pairs = pairs.withColumn(
+        "adc", _adc_score_expr(books)(F.col("q_vec"), F.col("codes"))
+    )
+    if not rerank:
+        return _topk(pairs, "adc", k, "score")
+    short = (
+        _ranked(pairs, "adc")
+        .filter(F.col("rank") <= k * rerank)
+        .select("q_id", "q_vec", "n_id")
+    )
+    e = _vec_with_norm(embeddings, id_col, vec_col)
+    refined = (
+        short.join(_side(e, id_col, "n"), "n_id")
+        .withColumn("q_vec", F.col("q_vec").cast("array<double>"))
+        .withColumn("q_nv", _norm_expr(F.col("q_vec")))
+        .withColumn("cos", _cos("q", "n"))
+    )
+    return _topk(refined, "cos", k, "score")
+
+
 def ivfpq_topk(
     embeddings: DataFrame,
     k: int,
@@ -548,81 +610,18 @@ def ivfpq_topk(
     the final ranking. ``rerank=0`` ranks by raw ADC. Returns
     (q_id, n_id, score, rank); recall is measured against brute force
     in tests/gate, not guaranteed."""
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            embeddings, n_centroids, seed=seed, vec_col=vec_col
-        )
-    cent = centroids
     books = train_pq_codebooks(
         embeddings, m=m, k_codes=k_codes, seed=seed, vec_col=vec_col
     )
     codes = pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col)
-    ref = ivf_assignments(embeddings, cent, nprobe=1, id_col=id_col, vec_col=vec_col)
-    qry = ivf_assignments(embeddings, cent, nprobe=nprobe, id_col=id_col, vec_col=vec_col)
-    cand = (
-        qry.select(F.col(id_col).alias("q_id"), "list_id")
-        .join(ref.select(F.col(id_col).alias("n_id"), "list_id"), "list_id")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id")
-        .distinct()
+    cand = _ivf_candidates(
+        embeddings, centroids, n_centroids, nprobe, seed, id_col, vec_col
     )
-    pairs = (
-        cand.join(
-            embeddings.select(
-                F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-            ),
-            "q_id",
-        )
-        .join(
-            codes.select(F.col(id_col).alias("n_id"), "codes"), "n_id"
-        )
-        .withColumn("adc", _adc_score_expr(books)(F.col("q_vec"), F.col("codes")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id").asc())
-    if not rerank:
-        return (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "n_id", F.col("adc").alias("score"), "rank")
-        )
-    short = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rerank)
-        .select("q_id", "q_vec", "n_id")
-    )
-    return _exact_rerank(short, embeddings, id_col, vec_col, k)
-
-
-def _exact_rerank(
-    short: DataFrame, embeddings: DataFrame, id_col: str, vec_col: str, k: int
-) -> DataFrame:
-    """Exact-cosine re-rank of an ADC shortlist (q_id, q_vec, n_id) —
-    the IVFADC+R refinement shared by :func:`ivfpq_topk` and
-    :func:`query_ann_index`."""
-    e = _vec_with_norm(embeddings, id_col, vec_col)
-    refined = (
-        short.join(
-            e.select(
-                F.col(id_col).alias("n_id"), F.col("v").alias("n_vec"),
-                F.col("nv").alias("n_nv"),
-            ),
-            "n_id",
-        )
-        .withColumn("qv", F.col("q_vec").cast("array<double>"))
-        .withColumn(
-            "score",
-            _dot_expr(F.col("qv"), F.col("n_vec"))
-            / (_norm_expr(F.col("qv")) * F.col("n_nv")),
-        )
-    )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("n_id").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "score", "rank")
-    )
+    pairs = cand.join(
+        embeddings.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        "q_id",
+    ).join(codes.select(F.col(id_col).alias("n_id"), "codes"), "n_id")
+    return _adc_topk(pairs, books, k, rerank, embeddings, id_col, vec_col)
 
 
 def build_ann_index(
@@ -745,25 +744,14 @@ def query_ann_index(
     pairs = cand.join(
         queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
         "q_id",
-    ).withColumn("adc", _adc_score_expr(books)(F.col("q_vec"), F.col("codes")))
-    w = Window.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("n_id").asc())
-    if not rerank:
-        return (
-            pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "n_id", F.col("adc").alias("score"), "rank")
-        )
-    if index_embeddings is None:
-        raise ValueError("rerank > 0 requires index_embeddings")
-    short = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rerank)
-        .select("q_id", "q_vec", "n_id")
     )
+    if rerank and index_embeddings is None:
+        raise ValueError("rerank > 0 requires index_embeddings")
     # the index side's column names come from the persisted properties
     # (the query frame's id_col/vec_col params apply to queries only)
-    return _exact_rerank(
-        short, index_embeddings, idx_id, props.get("vec_col", vec_col), k
+    return _adc_topk(
+        pairs, books, k, rerank, index_embeddings, idx_id,
+        props.get("vec_col", vec_col),
     )
 
 
@@ -793,20 +781,11 @@ def embedding_near_dups(
         .distinct()
     )
     e = _vec_with_norm(embeddings, id_col, vec_col)
-    pairs = (
-        cand.join(
-            e.select(F.col(id_col).alias("a_id"), F.col("v").alias("a_vec"),
-                     F.col("nv").alias("a_nv")), "a_id")
-        .join(
-            e.select(F.col(id_col).alias("b_id"), F.col("v").alias("b_vec"),
-                     F.col("nv").alias("b_nv")), "b_id")
-        .withColumn(
-            "cos",
-            _dot_expr(F.col("a_vec"), F.col("b_vec")) / (F.col("a_nv") * F.col("b_nv")),
-        )
+    return (
+        _with_cos(cand, e, id_col, "a", "b")
         .filter(F.col("cos") >= threshold)
+        .select("a_id", "b_id", "cos")
     )
-    return pairs.select("a_id", "b_id", "cos")
 
 
 def exact_cosine_pairs(
@@ -819,18 +798,10 @@ def exact_cosine_pairs(
     JVM dot product. The exact baseline — O(n²) FLOPs, so the verify
     tier at gate scale and the oracle for the LSH scale path, not the
     production path."""
-    e = _vec_with_norm(embeddings, id_col, vec_col)
-    a = e.select(
-        F.col(id_col).alias("a_id"), F.col("v").alias("av"), F.col("nv").alias("anv")
-    )
-    b = e.select(
-        F.col(id_col).alias("b_id"), F.col("v").alias("bv"), F.col("nv").alias("bnv")
-    )
     return (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn(
-            "cos", _dot_expr(F.col("av"), F.col("bv")) / (F.col("anv") * F.col("bnv"))
+        _cross_cos(
+            embeddings, embeddings, id_col, vec_col, "a", "b",
+            F.col("a_id") < F.col("b_id"),
         )
         .filter(F.col("cos") >= threshold)
         .select("a_id", "b_id", "cos")

@@ -862,6 +862,22 @@ class TestPersistedANNIndex:
         with pytest.raises(ValueError):
             similarity.query_ann_index(spark, idx, q, k=3, rerank=4)
 
+    def test_renamed_query_columns(self, spark, emb, tmp_path):
+        """``id_col``/``vec_col`` name the query frame's columns only: the
+        reranked answer equals the query under the index's own names."""
+        idx = str(tmp_path / "ann_index4")
+        similarity.build_ann_index(emb, idx, n_centroids=8, m=8, k_codes=16)
+        q = emb.filter(F.col("vec_id") % 7 == 0)
+        renamed = q.select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+        )
+        kw = dict(k=3, nprobe=2, rerank=4, index_embeddings=emb)
+        want = similarity.query_ann_index(spark, idx, q, **kw).collect()
+        got = similarity.query_ann_index(
+            spark, idx, renamed, id_col="qid", vec_col="qvec", **kw
+        ).collect()
+        assert want and sorted(map(tuple, got)) == sorted(map(tuple, want))
+
 
 class TestCorpusCuration:
     def test_stages_monotone_and_deterministic(self, spark, docs):
