@@ -138,69 +138,47 @@ def minhash_signatures(
     return src.mapInPandas(fn, schema=schema)
 
 
-def pick_lsh_bands(n_hashes: int, threshold: float, max_miss: float = 1e-8) -> int:
-    """Largest rows-per-band r (fewest false candidates) whose miss
-    probability (1−t^r)^(n_hashes/r) at JI = threshold stays ≤ max_miss;
-    returns the band count n_hashes // r. A fixed r=4 silently loses
-    ~12% recall at t=0.5 — banding must follow the threshold.
+#: the banded-LSH miss budget: the probability that a pair at exactly
+#: JI = threshold shares no band stays <= LSH_MAX_MISS (with 5% slack
+#: on the log scale, see :func:`pick_lsh_banding`)
+LSH_MAX_MISS = 1e-8
+
+
+def pick_lsh_banding(n_hashes: int, threshold: float) -> tuple[int, int]:
+    """(bands, n_hashes_used): the largest rows-per-band r (fewest false
+    candidates), then the FEWEST bands b whose miss probability
+    (1−t^r)^b at JI = threshold stays ≤ :data:`LSH_MAX_MISS`, banding
+    only the first ``b * r`` of the ``n_hashes`` signature components.
+    A fixed r=4 silently loses ~12% recall at t=0.5 — banding must
+    follow the threshold.
+
+    Every band beyond the bound adds a full copy of the true-duplicate
+    pair mass to the candidate join's output — on a near-dup-heavy
+    corpus that is the dominant row count of the whole dedup (guide
+    section 2.3: shuffle fewer bytes) — and adds nothing but recall the
+    bound already guarantees, so an exact downstream verify returns the
+    identical pair set. Fewer components also shrink the signature
+    kernel's per-permutation pass proportionally.
 
     The bound is compared with 5% slack on the log scale: exact
-    round-number thresholds land within an ulp-scale margin of the
-    bound (at t=0.5, (1−0.25)^64 = 1.0045e-8 vs 1e-8), and dropping a
-    whole r level there — r=1 makes every shared hash a candidate, a
+    round-number thresholds land within an ulp-scale margin of it
+    (at t=0.5, (1−0.25)^64 = 1.0045e-8 vs 1e-8), and dropping a whole
+    r level there — r=1 makes every shared hash a candidate, a
     near-quadratic join on low-entropy corpora — costs vastly more
-    than a 1.05× miss allowance."""
+    than a 1.05× miss allowance. When even r=1 misses the bound,
+    (1−t)^n_hashes > LSH_MAX_MISS, it raises instead of silently
+    breaking the documented guarantee (t=0.1, n=128: 1.4e-6)."""
     import math
 
-    target = math.log(max_miss) + 0.05  # allow miss ≤ e^0.05 ≈ 1.05 × max_miss
-    for r in (8, 4, 2, 1):
-        if n_hashes % r:
-            continue
-        b = n_hashes // r
-        if b * math.log1p(-(threshold**r)) <= target:
-            return b
-    # even r=1 misses the bound: (1-t)^n_hashes > max_miss. Silently
-    # returning r=1 anyway would violate the documented miss guarantee
-    # by orders of magnitude at low thresholds (t=0.1, n=128:
-    # 1.4e-6 vs the promised 1e-8) — make the caller choose.
-    need = math.ceil(math.log(max_miss) / math.log1p(-threshold))
-    raise ValueError(
-        f"no banding of {n_hashes} hashes meets miss <= {max_miss:g} at "
-        f"threshold {threshold}; use n_hashes >= {need} or relax max_miss"
-    )
-
-
-def pick_lsh_banding(
-    n_hashes: int, threshold: float, max_miss: float = 1e-8
-) -> tuple[int, int]:
-    """(bands, n_hashes_used): same rows-per-band r and miss contract
-    as :func:`pick_lsh_bands`, but the FEWEST bands meeting the bound
-    instead of every band the full signature affords, banding only the
-    first ``bands * r`` signature components.
-
-    :func:`pick_lsh_bands` must return ``n_hashes // r`` (its callers
-    band the whole signature), so at t=0.9/n=128 it emits 32 bands
-    where 18 already hold the documented miss <= 1.05 x 1e-8 (miss at
-    b=18 is 0.3439^18 ~ 4.5e-9). Every band beyond the bound adds a
-    full copy of the true-duplicate pair mass to the candidate join's
-    output — on a near-dup-heavy corpus that is the dominant row count
-    of the whole dedup (guide section 2.3: shuffle fewer bytes) — and
-    adds nothing but recall the bound already guarantees. Candidate
-    recall at JI >= threshold is unchanged within the documented miss
-    budget; an exact downstream verify therefore returns the identical
-    pair set. Fewer components also shrink the signature kernel's
-    per-permutation pass proportionally."""
-    import math
-
-    target = math.log(max_miss) + 0.05  # same 5% log-scale slack
+    target = math.log(LSH_MAX_MISS) + 0.05  # miss ≤ e^0.05 ≈ 1.05 × bound
     for r in (8, 4, 2, 1):
         b_min = max(1, math.ceil(target / math.log1p(-(threshold**r))))
         if b_min * r <= n_hashes:
             return b_min, b_min * r
-    need = math.ceil(math.log(max_miss) / math.log1p(-threshold))
+    need = math.ceil(math.log(LSH_MAX_MISS) / math.log1p(-threshold))
     raise ValueError(
-        f"no banding of {n_hashes} hashes meets miss <= {max_miss:g} at "
-        f"threshold {threshold}; use n_hashes >= {need} or relax max_miss"
+        f"no banding of {n_hashes} hashes meets miss <= {LSH_MAX_MISS:g} "
+        f"at threshold {threshold}; use n_hashes >= {need}"
     )
 
 
@@ -314,7 +292,6 @@ def capped_band_join(
     *,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
     symmetric: bool = False,
-    materialize: bool = True,
 ) -> DataFrame:
     """Skew-safe equi-join of two band-row tables on (band, bhash) —
     the shared candidate-generation kernel for batch LSH dedup, n-gram
@@ -371,13 +348,10 @@ def capped_band_join(
     aliases): one count agg then sizes both sides, skipping the second
     agg and the size-table join.
 
-    ``materialize`` (default True) lazily localCheckpoints the size
-    table so the four routing branches share one computation.
-    localCheckpoint storage is executor-local and NON-fault-tolerant:
-    an executor loss after materialization fails the job instead of
-    recomputing (the job is idempotent — rerun it). On clusters with
-    preemptible executors pass False to keep full lineage at the cost
-    of re-running the count agg per branch.
+    On batch frames the size table is lazily localCheckpointed so the
+    four routing branches share one computation. That storage is
+    executor-local and not fault-tolerant: an executor loss after it
+    is computed fails the (idempotent) job instead of recomputing.
 
     Columns beyond the required (id, band, bhash) triple ride through
     the join untouched and appear on the output (e.g. a per-row set
@@ -421,7 +395,7 @@ def capped_band_join(
                 gexpr("__nb").alias("__gb"),
             )
         )
-    if materialize and not a.isStreaming and not b.isStreaming:
+    if not a.isStreaming and not b.isStreaming:
         # the size table feeds four branches (cold/hot x a/b tag
         # joins); a lazy checkpoint computes it once instead of
         # re-running the count agg per branch
@@ -502,6 +476,24 @@ def distinct_pairs(df: DataFrame, cols: Sequence[str] = ("a_id", "b_id")) -> Dat
     return df.select(*cols).repartition(n_part, *cols).dropDuplicates()
 
 
+def band_pairs(
+    banded: DataFrame, id_col: str, bucket_cap: int | None
+) -> DataFrame:
+    """The band self-join of every banded-LSH operator: (id, band,
+    bhash) rows in, the raw (a_id, b_id) rows with a_id < b_id of the
+    symmetric :func:`capped_band_join` out — one row per colliding band,
+    so a pair sharing several bands repeats. Callers whose band rows
+    carry expensive lineage checkpoint them first: the join's sizing
+    and routing branches read them 4-6 times."""
+    a = banded.select(F.col(id_col).alias("a_id"), "band", "bhash")
+    b = banded.select(F.col(id_col).alias("b_id"), "band", "bhash")
+    return (
+        capped_band_join(a, b, bucket_cap=bucket_cap, symmetric=True)
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id")
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
@@ -509,7 +501,6 @@ def lsh_candidate_pairs(
     n_hashes: int = 128,
     bands: int = 32,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
     raw: bool = False,
 ) -> DataFrame:
     """Banded LSH: docs sharing any band of their signature become a
@@ -532,17 +523,10 @@ def lsh_candidate_pairs(
 
     ``bucket_cap`` bounds any single reducer's pair output per (band,
     bhash) bucket via :func:`capped_band_join` (exact — identical
-    candidate set); None restores the uncapped plan.
-
-    ``materialize`` (default True) lazily localCheckpoints the band
-    rows: the capped join's sizing/routing branches reference them 4-6
-    times, and the checkpoint computes the (possibly expensive
-    mapInPandas) signature lineage ONCE, serving every branch from
-    executor storage, GC-unpersisted with the plan (no session-pinned
-    cache). The storage is executor-local and NON-fault-tolerant — an
-    executor loss after materialization fails the (idempotent) job
-    rather than recomputing. On clusters with preemptible executors
-    pass False: full lineage is kept and each branch recomputes.
+    candidate set); None restores the uncapped plan. With a cap, batch
+    band rows are lazily localCheckpointed: the capped join's
+    sizing/routing branches read them 4-6 times, and the checkpoint
+    runs the (possibly expensive mapInPandas) signature lineage once.
 
     ``raw=True`` skips the distinct and returns the (a_id, b_id)
     candidate stream with its per-band duplicate emissions — for
@@ -550,14 +534,9 @@ def lsh_candidate_pairs(
     :func:`verify_pairs`). The multiset's distinct support is identical
     either way."""
     banded = lsh_band_rows(signatures, id_col, n_hashes=n_hashes, bands=bands)
-    if materialize and bucket_cap is not None and not banded.isStreaming:
+    if bucket_cap is not None and not banded.isStreaming:
         banded = banded.localCheckpoint(eager=False)
-    a = banded.select(F.col(id_col).alias("a_id"), "band", "bhash")
-    b = banded.select(F.col(id_col).alias("b_id"), "band", "bhash")
-    cand = capped_band_join(
-        a, b, bucket_cap=bucket_cap, symmetric=True,
-        materialize=materialize,
-    ).filter(F.col("a_id") < F.col("b_id")).select("a_id", "b_id")
+    cand = band_pairs(banded, id_col, bucket_cap)
     return cand if raw else distinct_pairs(cand)
 
 
@@ -822,7 +801,6 @@ def minhash_lsh_dedup(
     text_col: str = "text",
     threshold: float = 0.9,
     n_hashes: int = DEFAULT_LSH_HASH_BUDGET,
-    bands: int | None = None,
     shingle_w: int = 1,
     char_n: int | None = None,
 ) -> DataFrame:
@@ -864,11 +842,7 @@ def minhash_lsh_dedup(
         F.col(id_col) == F.col("__rep"),
         "left_semi",
     )
-    if bands is None:
-        # minimal banding: same r and miss bound as pick_lsh_bands but
-        # no bands beyond the bound — each surplus band re-emits the
-        # whole true-duplicate pair mass into the candidate join
-        bands, n_hashes = pick_lsh_banding(n_hashes, threshold)
+    bands, n_hashes = pick_lsh_banding(n_hashes, threshold)
     sigs = minhash_signatures(
         rep_docs, id_col, text_col, n_hashes, shingle_w, char_n=char_n
     )
@@ -922,7 +896,6 @@ def simhash_near_dups(
     max_hamming: int = 3,
     fps: DataFrame | None = None,
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairs with SimHash Hamming distance ≤ max_hamming, exact recall.
 
@@ -944,10 +917,10 @@ def simhash_near_dups(
     family (near-identical docs → identical fingerprints) still
     collides wholesale in every table — the same hot-bucket pocket as
     the MinHash band join, so the self-join rides the same
-    :func:`capped_band_join` (``bucket_cap``/``materialize`` as in
-    :func:`lsh_candidate_pairs`; fingerprints are re-attached to the
-    surviving candidate ids afterwards — output-bound equi-joins —
-    rather than carried through the pair join)."""
+    :func:`band_pairs` (``bucket_cap`` as in :func:`lsh_candidate_pairs`;
+    fingerprints are re-attached to the surviving candidate ids
+    afterwards — output-bound equi-joins — rather than carried through
+    the pair join)."""
     n_blocks = max_hamming + 3
     bounds = [round(i * 64 / n_blocks) for i in range(n_blocks + 1)]
     block_exprs = [
@@ -964,22 +937,15 @@ def simhash_near_dups(
     ]
     if fps is None:
         fps = simhash_fingerprints(df, id_col, text_col)
-    if materialize and not fps.isStreaming:
+    if not fps.isStreaming:
         # consumed by both band-row sides AND the two post-join
         # fingerprint attaches — capped or not, one mapInPandas pass
-        # instead of four (same tradeoff as lsh_candidate_pairs)
+        # instead of four
         fps = fps.localCheckpoint(eager=False)
     banded = fps.select(
         F.col(id_col), F.posexplode(F.array(*tables)).alias("band", "bhash")
     )
-    a = banded.select(F.col(id_col).alias("a_id"), "band", "bhash")
-    b = banded.select(F.col(id_col).alias("b_id"), "band", "bhash")
-    cands = distinct_pairs(
-        capped_band_join(
-            a, b, bucket_cap=bucket_cap, symmetric=True,
-            materialize=materialize,
-        ).filter(F.col("a_id") < F.col("b_id"))
-    )
+    cands = distinct_pairs(band_pairs(banded, id_col, bucket_cap))
     sh = fps.select(F.col(id_col).alias("__jid"), "simhash")
     pairs = (
         cands.join(
@@ -1034,10 +1000,10 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact character-n-gram Jaccard ≥ threshold between documents.
 
-    Candidates come from char-gram MinHash-LSH (r=2 rows/band, b=64
-    bands: miss probability at JI=t is (1−t²)⁶⁴ — 1.005e−8 at t=0.5
-    (within pick_lsh_bands' 1.05× slack), ≤4e−13 at t=0.6); the JI
-    emitted is EXACT (item-array verify with codepoint substring
+    Candidates come from char-gram MinHash-LSH banded by
+    :func:`pick_lsh_banding` (at 128 hashes: r=2/b=64 at t=0.5, miss
+    (1−t²)⁶⁴ = 1.005e−8 within its 1.05× slack; r=2/b=42 at t=0.6,
+    miss 7e−9); the JI emitted is EXACT (item-array verify with codepoint substring
     semantics, matching the codepoint-gram signatures). A direct gram-level equi-join is not used: its
     output is O(Σ per-gram df²), which a single stopword-like gram melts
     down (measured 2.2e9 joined rows on the 5k-doc fixture, where a df
@@ -1227,7 +1193,6 @@ def line_dedup(
     text_col: str = "text",
     line_sep: str = "\n",
     min_line_chars: int = 1,
-    materialize: bool = True,
 ) -> DataFrame:
     """C4-style corpus-wide line deduplication (Raffel et al. 2020
     §2.2 applied at line granularity — the preprocessing step that
@@ -1244,11 +1209,6 @@ def line_dedup(
     ``text_out = ''`` and ``n_kept = 0``, not dropped; NULL text comes
     back as NULL with zero lines (a pipeline stage must never lose
     rows — pinned by test and relied on by ``corpus.curate``).
-    ``materialize`` (default True) lazily localCheckpoints the line
-    rows, which feed four plan branches (keeper agg, semi probe,
-    short-line filter, totals) — pass False on preemptible clusters to
-    keep full lineage at the cost of re-running the explode per
-    branch.
 
     Scale: hot lines ("Home", "") are the dominant input class, and
     NO stage here keys on the bare line for anything bigger than one
@@ -1269,7 +1229,7 @@ def line_dedup(
             F.split(F.col(text_col), _regex_quote(line_sep), -1)
         ).alias("__pos", "__line"),
     )
-    if materialize and not lines.isStreaming:
+    if not lines.isStreaming:
         # four consumers below (keeper agg, semi probe, short-line
         # filter, totals) — one explode pass, not four
         lines = lines.localCheckpoint(eager=False)

@@ -45,6 +45,15 @@ def top_k_tokens(
     )
 
 
+def _token_hashes(df: DataFrame, key_cols: Sequence[str], text_col: str) -> DataFrame:
+    """(*key_cols, token, __h): the token stream with its seedless
+    xxhash64 — the build-side convention :func:`cms_point_query` hashes
+    its candidates with, kept in one place so the two cannot drift."""
+    return df.select(
+        *key_cols, F.explode(F.split(F.col(text_col), " ", -1)).alias("token")
+    ).withColumn("__h", F.xxhash64("token"))
+
+
 def freq_sketches_by_key(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -54,13 +63,8 @@ def freq_sketches_by_key(
 ) -> DataFrame:
     """EVERY frequency sketch in ``factories`` (name -> factory, e.g.
     CMS + HeavyKeeper) per key from ONE pass over the token stream —
-    output (sketch_type, *key_cols, sketch). Keeps the build-side
-    tokenize+hash convention (explode(split) + seedless xxhash64) in
-    this module, matched with cms_point_query's candidate hashing, so
-    the two cannot drift apart."""
-    toks = df.select(
-        *key_cols, F.explode(F.split(F.col(text_col), " ", -1)).alias("token")
-    ).withColumn("__h", F.xxhash64("token"))
+    output (sketch_type, *key_cols, sketch), over :func:`_token_hashes`."""
+    toks = _token_hashes(df, key_cols, text_col)
     return agg.sketch_hash_col_multi_type(toks, key_cols, factories, "__h", salt=salt)
 
 
@@ -73,11 +77,9 @@ def cms_by_key(
     salt: int | None = None,
 ) -> DataFrame:
     """One count-min sketch of the token stream per key."""
-    toks = df.select(
-        *key_cols, F.explode(F.split(F.col(text_col), " ", -1)).alias("token")
-    ).withColumn("__h", F.xxhash64("token"))
     return agg.sketch_hash_col_by_key(
-        toks, key_cols, lambda: CountMinSketch.empty(lg_width, depth), "__h", salt=salt
+        _token_hashes(df, key_cols, text_col), key_cols,
+        lambda: CountMinSketch.empty(lg_width, depth), "__h", salt=salt,
     )
 
 
@@ -95,11 +97,9 @@ def heavykeeper_by_key(
     (both sketches expose query_hashes)."""
     from dashing_spark.functions.heavykeeper import HeavyKeeper
 
-    toks = df.select(
-        *key_cols, F.explode(F.split(F.col(text_col), " ", -1)).alias("token")
-    ).withColumn("__h", F.xxhash64("token"))
     return agg.sketch_hash_col_by_key(
-        toks, key_cols, lambda: HeavyKeeper(lg_width, depth), "__h", salt=salt
+        _token_hashes(df, key_cols, text_col), key_cols,
+        lambda: HeavyKeeper(lg_width, depth), "__h", salt=salt,
     )
 
 
@@ -151,10 +151,9 @@ def min_count_filter(
     key_cols: Sequence[str],
     min_count: int,
     text_col: str = "text",
-    use_cms: bool = False,
     lg_width: int | None = None,
     depth: int | None = None,
-    backend: str | None = None,
+    backend: str = "exact",
 ) -> DataFrame:
     """(key, token) rows whose token frequency within the key ≥ min_count
     — the reference's `--min-count` pre-filter (src/sketch_and_cmp.h:347).
@@ -167,31 +166,22 @@ def min_count_filter(
     src/dashing.h:131-136): estimates never EXCEED the true count, so
     nothing infrequent slips through, but a flow decayed out of its
     buckets can be dropped — the right trade for top-heavy filters.
-    ``use_cms`` is the legacy spelling of backend="cms".
 
     ``lg_width``/``depth`` default per backend (CMS: 20/1, HK: 12/2);
     explicit values are honored as given — the sketch constructor
     validates them, nothing is silently clamped.
     """
-    if backend is None:
-        backend = "cms" if use_cms else "exact"
-    if lg_width is None:
-        lg_width = 12 if backend == "hk" else 20
-    if depth is None:
-        depth = 2 if backend == "hk" else 1
     counts = token_counts(df, key_cols, text_col)
     if backend == "exact":
         return counts.filter(F.col("cnt") >= min_count)
-    if backend == "cms":
-        sketches = cms_by_key(df, key_cols, text_col, lg_width, depth)
-        est = cms_point_query(counts.drop("cnt"), sketches, key_cols)
-        return est.filter(F.col("cm_est") >= min_count)
-    if backend == "hk":
-        sketches = heavykeeper_by_key(
-            df, key_cols, text_col, lg_width=lg_width, depth=depth
-        )
-        est = cms_point_query(
-            counts.drop("cnt"), sketches, key_cols, est_col="hk_est"
-        )
-        return est.filter(F.col("hk_est") >= min_count)
-    raise ValueError(f"unknown min_count_filter backend: {backend}")
+    if backend not in ("cms", "hk"):
+        raise ValueError(f"unknown min_count_filter backend: {backend}")
+    hk = backend == "hk"
+    est_col = "hk_est" if hk else "cm_est"
+    sketches = (heavykeeper_by_key if hk else cms_by_key)(
+        df, key_cols, text_col,
+        lg_width=(12 if hk else 20) if lg_width is None else lg_width,
+        depth=(2 if hk else 1) if depth is None else depth,
+    )
+    est = cms_point_query(counts.drop("cnt"), sketches, key_cols, est_col=est_col)
+    return est.filter(F.col(est_col) >= min_count)

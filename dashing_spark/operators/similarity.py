@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from dashing_spark.operators.dedup import DEFAULT_BUCKET_CAP, capped_band_join
+from dashing_spark.operators.dedup import DEFAULT_BUCKET_CAP, band_pairs
 from dashing_spark.operators.ship import ensure_shipped
 
 
@@ -239,32 +239,26 @@ def _bucket_candidate_pairs(
     id_col: str,
     vec_col: str,
     bucket_cap: int | None,
-    materialize: bool,
 ) -> DataFrame:
     """Shared LSH candidate generator for :func:`lsh_cosine_topk` and
-    :func:`embedding_near_dups`: hyperplane signatures → (a_id, b_id)
-    bucket collisions through the skew-safe :func:`capped_band_join`
-    (a cluster of near-identical embeddings shares buckets in every
-    table — the same template-family pocket as the MinHash/SimHash band
-    joins). ``bucket_cap=None`` restores the plain bucket self-join
-    (also the streaming-compatible shape: the capped join's count agg +
-    join-back is unsupported on a stream); ``materialize=False`` keeps
-    full lineage for preemptible clusters."""
+    :func:`embedding_near_dups`: hyperplane signatures → raw
+    (a_id < b_id) bucket collisions through the skew-safe
+    :func:`dedup.band_pairs` (a cluster of near-identical embeddings
+    shares buckets in every table — the same template-family pocket as
+    the MinHash/SimHash band joins). ``bucket_cap=None`` restores the
+    plain bucket self-join (also the streaming-compatible shape: the
+    capped join's count agg + join-back is unsupported on a stream)."""
     sig = hyperplane_signatures(
         embeddings, n_planes, n_tables, seed, id_col, vec_col
     ).select(
         id_col, F.col("table").alias("band"), F.col("bucket").alias("bhash")
     )
-    if materialize and not sig.isStreaming:
+    if not sig.isStreaming:
         # the band rows feed both join sides (and the capped join's
         # routing branches) — one mapInPandas signature pass, not one
         # per branch
         sig = sig.localCheckpoint(eager=False)
-    a = sig.select(F.col(id_col).alias("a_id"), "band", "bhash")
-    b = sig.select(F.col(id_col).alias("b_id"), "band", "bhash")
-    return capped_band_join(
-        a, b, bucket_cap=bucket_cap, symmetric=True, materialize=materialize
-    )
+    return band_pairs(sig, id_col, bucket_cap)
 
 
 def lsh_cosine_topk(
@@ -276,22 +270,19 @@ def lsh_cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """Approximate top-k: compare only vectors sharing a bucket in any
     table. Shuffle is a hash partition on (table, bucket); candidate
-    pairs deduped before the cosine. Recall vs brute force is the test
-    gate, n_tables the recall/cost dial. ``bucket_cap``/``materialize``
-    as in :func:`dedup.capped_band_join` (None restores the uncapped
+    pairs deduped before the cosine, each distinct pair then serving
+    both of its ends as a query. Recall vs brute force is the test
+    gate, n_tables the recall/cost dial. ``bucket_cap`` as in
+    :func:`dedup.capped_band_join` (None restores the uncapped
     streaming-compatible plan)."""
-    cand = (
-        _bucket_candidate_pairs(
-            embeddings, n_planes, n_tables, seed, id_col, vec_col,
-            bucket_cap, materialize,
-        )
-        .filter(F.col("a_id") != F.col("b_id"))
-        .distinct()
-        .select(F.col("a_id").alias("q_id"), F.col("b_id").alias("n_id"))
+    cand = _bucket_candidate_pairs(
+        embeddings, n_planes, n_tables, seed, id_col, vec_col, bucket_cap
+    ).distinct().selectExpr(
+        "inline(array(named_struct('q_id', a_id, 'n_id', b_id),"
+        " named_struct('q_id', b_id, 'n_id', a_id)))"
     )
     e = _vec_with_norm(embeddings, id_col, vec_col)
     return _topk(_with_cos(cand, e, id_col, "q", "n"), "cos", k)
@@ -306,7 +297,9 @@ def _sample_matrix(
     depends on partition order; orderBy().limit() is a full sort of the
     table at scale). Falls back to widening the filter if the modulus
     over-prunes on small inputs. Shared by the IVF coarse quantizer and
-    the PQ codebook trainer."""
+    the PQ codebook trainer. The id is the first non-vector column, so
+    the operators hand the trainers (id, vector) frames: a sample keyed
+    on whatever column comes first would depend on column order."""
     id_cols = [c for c in embeddings.columns if c != vec_col][:1]
     base = embeddings.select(*id_cols, vec_col)
     total = base.count()
@@ -398,7 +391,8 @@ def _ivf_candidates(
     coarse quantizer when ``centroids`` is None."""
     if centroids is None:
         centroids = train_ivf_centroids(
-            embeddings, n_centroids, seed=seed, vec_col=vec_col
+            embeddings.select(id_col, vec_col), n_centroids, seed=seed,
+            vec_col=vec_col,
         )
     # reference vectors live in exactly their nearest list; queries probe nprobe
     ref = ivf_assignments(embeddings, centroids, 1, id_col, vec_col)
@@ -611,7 +605,8 @@ def ivfpq_topk(
     (q_id, n_id, score, rank); recall is measured against brute force
     in tests/gate, not guaranteed."""
     books = train_pq_codebooks(
-        embeddings, m=m, k_codes=k_codes, seed=seed, vec_col=vec_col
+        embeddings.select(id_col, vec_col), m=m, k_codes=k_codes, seed=seed,
+        vec_col=vec_col,
     )
     codes = pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col)
     cand = _ivf_candidates(
@@ -647,11 +642,10 @@ def build_ann_index(
 
     from dashing_spark.plans import snapshots
 
-    cent = train_ivf_centroids(
-        embeddings, n_centroids, seed=seed, vec_col=vec_col
-    )
+    by_id = embeddings.select(id_col, vec_col)
+    cent = train_ivf_centroids(by_id, n_centroids, seed=seed, vec_col=vec_col)
     books = train_pq_codebooks(
-        embeddings, m=m, k_codes=k_codes, seed=seed, vec_col=vec_col
+        by_id, m=m, k_codes=k_codes, seed=seed, vec_col=vec_col
     )
     assign = ivf_assignments(
         embeddings, cent, nprobe=1, id_col=id_col, vec_col=vec_col
@@ -764,22 +758,16 @@ def embedding_near_dups(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ threshold) via
     multi-table LSH bucketing + exact verify on the candidate pairs.
     For true near-dups (cos→1) per-table collision prob → 1, so recall
     is high even with one table; extra tables cover the 0.9s.
-    ``bucket_cap``/``materialize`` as in :func:`dedup.capped_band_join`
-    — near-dup clusters ARE the hot-bucket input class here."""
-    cand = (
-        _bucket_candidate_pairs(
-            embeddings, n_planes, n_tables, seed, id_col, vec_col,
-            bucket_cap, materialize,
-        )
-        .filter(F.col("a_id") < F.col("b_id"))
-        .distinct()
-    )
+    ``bucket_cap`` as in :func:`dedup.capped_band_join` — near-dup
+    clusters ARE the hot-bucket input class here."""
+    cand = _bucket_candidate_pairs(
+        embeddings, n_planes, n_tables, seed, id_col, vec_col, bucket_cap
+    ).distinct()
     e = _vec_with_norm(embeddings, id_col, vec_col)
     return (
         _with_cos(cand, e, id_col, "a", "b")

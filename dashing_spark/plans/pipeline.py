@@ -76,32 +76,6 @@ def params_fingerprint(
     return hashlib.md5(blob.encode()).hexdigest()[:16]
 
 
-def _fs_path(spark, path: str):
-    jvm = spark._jvm
-    return jvm.org.apache.hadoop.fs.Path(path)
-
-
-def _fs_exists(spark, path: str) -> bool:
-    """Existence check through the Hadoop filesystem of the path — works
-    on s3a/gs/hdfs URIs where driver-local os.path.exists silently
-    returns False (which would make resume inert on a real cluster)."""
-    p = _fs_path(spark, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _fs_write_text(spark, path: str, content: str) -> None:
-    """Small-text write through the Hadoop filesystem (metrics JSON) —
-    driver-local open() cannot create s3a/gs/hdfs objects."""
-    p = _fs_path(spark, path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
-
-
 def input_token_for(df: DataFrame) -> str:
     """Stable identifier of a DataFrame's input: the analyzed-plan
     semantic hash when available, else the sorted source-file list."""
@@ -173,7 +147,7 @@ def build_or_resume_sketch_table(
     # snapshot-log table (plans/snapshots.py): resume = a committed
     # version exists; legacy pre-r6 checkpoints (bare parquet dir with
     # _SUCCESS) stay readable
-    legacy = _fs_exists(spark, os.path.join(snap, "_SUCCESS"))
+    legacy = os.path.exists(os.path.join(snap, "_SUCCESS"))
     committed = snapshots.current_version(snap) is not None
     if not force and (committed or legacy):
         # a committed snapshot WINS over leftover legacy files: a
@@ -237,5 +211,6 @@ def build_or_resume_sketch_table(
         checkpoint=snap,
         params=params.to_dict(),
     )
-    _fs_write_text(spark, metrics_path, m.to_json())
+    with open(metrics_path, "w") as f:
+        f.write(m.to_json())
     return out, m

@@ -280,6 +280,25 @@ def committed_properties(table_dir: str, layout: dict | None = None) -> dict | N
     return props
 
 
+def epoch_is_new(table_dir: str, epoch_id: int, committed: int | None) -> bool:
+    """Whether micro-batch ``epoch_id`` still has to be applied to the
+    streaming state in ``table_dir``, whose last committed epoch is
+    ``committed`` (None before the first commit). A retry of the
+    committed epoch is a no-op (False). The streaming engine replays at
+    most the last batch, so a lower epoch id means the query's counter
+    restarted against an old state dir (a fresh checkpoint, or two
+    queries sharing state): skipping it would silently drop every new
+    batch up to the old counter, so it raises ValueError."""
+    if committed is None or epoch_id > committed:
+        return True
+    if epoch_id == committed:
+        return False
+    raise ValueError(
+        f"epoch {epoch_id} precedes committed epoch {committed} in "
+        f"{table_dir}: state_dir/checkpoint_dir mismatch"
+    )
+
+
 def history(table_dir: str) -> list[dict]:
     """The snapshot log, oldest first — (version, parent, op,
     committed_at, properties), the audit trail resume decisions read."""

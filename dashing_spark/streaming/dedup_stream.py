@@ -173,8 +173,8 @@ def apply_dedup_batch(
         raise ValueError(f"ttl_epochs must be >= 1, got {ttl_epochs}")
     if max_segments is not None and max_segments < 2:
         raise ValueError(f"max_segments must be >= 2, got {max_segments}")
-    # minimal banding (same r / miss bound as pick_lsh_bands, fewest
-    # bands): deterministic in (n_hashes, threshold), so every epoch of
+    # minimal banding (pick_lsh_banding, as the batch operator):
+    # deterministic in (n_hashes, threshold), so every epoch of
     # a state_dir bands identically and cross-epoch collisions keep the
     # batch-run equivalence the module docstring pins
     bands_n, n_hashes = dedup.pick_lsh_banding(n_hashes, threshold)
@@ -200,18 +200,8 @@ def apply_dedup_batch(
             expire_epochs(state_dir, min_epoch=epoch_id - ttl_epochs + 1)
         return
     done = [_token_epoch(seg["token"]) for seg in segments]
-    if done and epoch_id <= max(done):
-        if epoch_id == max(done):
-            return  # retry of the last committed epoch: no-op
-        # the streaming engine replays at most the LAST batch; a lower
-        # epoch id means this query's counter restarted (fresh
-        # checkpoint_dir pointed at an old state_dir, or two queries
-        # sharing one state_dir). Silently treating it as a retry would
-        # drop genuinely-new documents — refuse instead.
-        raise ValueError(
-            f"epoch {epoch_id} precedes committed epochs {done} in "
-            f"{state_dir}: state_dir/checkpoint_dir mismatch"
-        )
+    if not snapshots.epoch_is_new(state_dir, epoch_id, max(done, default=None)):
+        return
     spark = batch_df.sparkSession
     sigs = dedup.minhash_signatures(
         batch_df, id_col, text_col, n_hashes=n_hashes,

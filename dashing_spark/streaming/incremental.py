@@ -86,18 +86,8 @@ def apply_sketch_batch(
     if batch_df.isEmpty():
         return
     prev = None if props is None else props["epoch"]
-    if prev is not None and prev >= epoch_id:
-        if prev == epoch_id:
-            return  # retried epoch already committed: no double-merge
-        # the engine replays at most the LAST batch; a lower epoch id
-        # means the query's counter restarted against an old state_dir
-        # (fresh checkpoint, or two queries sharing state). Silently
-        # skipping would drop every new batch up to the old counter —
-        # refuse instead (same contract as dedup_stream.apply_dedup_batch)
-        raise ValueError(
-            f"epoch {epoch_id} precedes committed epoch {prev} in "
-            f"{state_dir}: state_dir/checkpoint_dir mismatch"
-        )
+    if not snapshots.epoch_is_new(state_dir, epoch_id, prev):
+        return
     if build_fn is not None:
         merged = build_fn(batch_df)
     else:

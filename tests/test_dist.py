@@ -251,7 +251,8 @@ class TestLshBandBoundEnforced:
         from dashing_spark.operators import dedup
 
         with pytest.raises(ValueError, match="n_hashes"):
-            dedup.pick_lsh_bands(128, 0.1)
+            dedup.pick_lsh_banding(128, 0.1)
         # and the documented thresholds still resolve
-        assert dedup.pick_lsh_bands(128, 0.5) == 64   # r=2
-        assert dedup.pick_lsh_bands(128, 0.9) == 32   # r=4
+        assert dedup.pick_lsh_banding(128, 0.5) == (64, 128)  # r=2
+        assert dedup.pick_lsh_banding(128, 0.9) == (18, 72)   # r=4
+        assert dedup.pick_lsh_banding(264, 0.9) == (33, 264)  # r=8

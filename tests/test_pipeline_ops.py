@@ -862,6 +862,29 @@ class TestPersistedANNIndex:
         with pytest.raises(ValueError):
             similarity.query_ann_index(spark, idx, q, k=3, rerank=4)
 
+    def test_training_ignores_column_order(self, spark, emb, tmp_path):
+        """The IVF and PQ trainers sample by the id column: a frame that
+        lists another column first persists the same centroids and
+        codebooks, and the self-top-k operators return the same rows."""
+        from dashing_spark.plans import snapshots
+
+        moved = emb.select("label", "vec_id", "embedding")
+        built = []
+        for name, frame in (("id_first", emb), ("label_first", moved)):
+            idx = str(tmp_path / name)
+            similarity.build_ann_index(frame, idx, n_centroids=8, m=8, k_codes=16)
+            props = snapshots.snapshot_properties(idx)
+            built.append((props["centroids_npy_b64"], props["codebooks_npy_b64"]))
+        assert built[0] == built[1]
+        kw = dict(k=2, n_centroids=8, nprobe=2)
+        for op, extra in (
+            (similarity.ivf_topk, {}),
+            (similarity.ivfpq_topk, dict(m=8, k_codes=16)),
+        ):
+            want = sorted(map(tuple, op(emb, **kw, **extra).collect()))
+            got = sorted(map(tuple, op(moved, **kw, **extra).collect()))
+            assert got == want
+
     def test_renamed_query_columns(self, spark, emb, tmp_path):
         """``id_col``/``vec_col`` name the query frame's columns only: the
         reranked answer equals the query under the index's own names."""
@@ -1066,12 +1089,12 @@ class TestAdaptiveBanding:
         """threshold=0.5 must still find the exact JI>=0.5 pair set —
         the adaptive banding widens to two-hash bands (a fixed r=4
         misses ~12% here; r=2/b=64 keeps the miss at 1.005e-8 within
-        pick_lsh_bands' 1.05x slack — see ADVICE r2 #1, which dropped
+        pick_lsh_banding's 1.05x slack — see ADVICE r2 #1, which dropped
         the r=1 full-candidate fallback this boundary used to hit)."""
-        from dashing_spark.operators.dedup import pick_lsh_bands
+        from dashing_spark.operators.dedup import pick_lsh_banding
 
-        assert pick_lsh_bands(128, 0.9) == 32
-        assert pick_lsh_bands(128, 0.5) == 64
+        assert pick_lsh_banding(128, 0.9) == (18, 72)
+        assert pick_lsh_banding(128, 0.5) == (64, 128)
         found = {
             (r["a_id"], r["b_id"])
             for r in dedup.minhash_lsh_dedup(docs, "doc_id", threshold=0.5).collect()

@@ -210,15 +210,15 @@ class TestPlanInvariants:
         # the only equi-joins allowed are on band/bhash and on ids
         assert "bhash" in opt
 
-    def test_pick_lsh_bands_round_thresholds(self):
+    def test_pick_lsh_banding_round_thresholds(self):
         """ADVICE r2: t=0.5 with 128 hashes must select r=2/b=64 — the
         documented banding — not fall to r=1 (all-pairs-ish candidates)
         because (1-0.25)^64 = 1.0045e-8 is an ulp past 1e-8."""
-        from dashing_spark.operators.dedup import pick_lsh_bands
+        from dashing_spark.operators.dedup import pick_lsh_banding
 
-        assert pick_lsh_bands(128, 0.5) == 64  # r=2
-        assert pick_lsh_bands(128, 0.9) == 32  # r=4, miss 1.4e-15
-        assert pick_lsh_bands(128, 0.6) == 64  # r=2, miss 4e-13
+        assert pick_lsh_banding(128, 0.5) == (64, 128)  # r=2
+        assert pick_lsh_banding(128, 0.9) == (18, 72)  # r=4, miss 4.5e-9
+        assert pick_lsh_banding(128, 0.6) == (42, 84)  # r=2, miss 7e-9
 
     def test_lsh_candidate_pairs_validates_banding(self, spark, docs):
         """bands must divide n_hashes; bands > n_hashes must raise, not

@@ -380,9 +380,9 @@ class TestStreamingDedup:
         sigs = sigs.join(valid, sigs["doc_id"] == valid["id"]).select(
             "doc_id", "signature"
         )
-        bands_n = dedup.pick_lsh_bands(128, 0.9)
+        bands_n, n_used = dedup.pick_lsh_banding(128, 0.9)
         cand = dedup.lsh_candidate_pairs(
-            sigs, "doc_id", n_hashes=128, bands=bands_n
+            sigs, "doc_id", n_hashes=n_used, bands=bands_n
         )
         batch = {
             (r["a_id"], r["b_id"], r["ji"])
@@ -492,6 +492,44 @@ class TestStreamingDedup:
             dedup_stream.apply_dedup_batch(
                 docs, 3, id_col="doc_id", state_dir=state_dir, threshold=0.9
             )
+
+
+class TestEpochGuard:
+    """Both streams share one epoch rule: a retry of the committed epoch
+    is a no-op, and a lower epoch id (a restarted query counter) raises
+    instead of silently dropping its batch."""
+
+    @staticmethod
+    def _apply(kind, df, epoch_id, state_dir):
+        from dashing_spark.streaming import dedup_stream
+
+        if kind == "sketch":
+            apply_sketch_batch(
+                df, epoch_id, ["lang"], lambda: HLL.empty(11), state_dir
+            )
+        else:
+            dedup_stream.apply_dedup_batch(
+                df, epoch_id, id_col="doc_id", state_dir=state_dir,
+                threshold=0.9,
+            )
+
+    @pytest.mark.parametrize("kind", ["sketch", "dedup"])
+    def test_retry_is_noop_and_lower_epoch_raises(
+        self, spark, docs, tmp_path, kind
+    ):
+        from dashing_spark.plans import snapshots
+
+        state_dir = str(tmp_path / kind)
+        os.makedirs(state_dir)
+        half = docs.filter(F.col("doc_id") % 2 == 0)
+        self._apply(kind, half, 1, state_dir)
+        version = snapshots.current_version(state_dir)
+        assert version is not None
+        self._apply(kind, half, 1, state_dir)
+        assert snapshots.current_version(state_dir) == version
+        with pytest.raises(ValueError, match="epoch 0 precedes committed epoch 1"):
+            self._apply(kind, docs.filter(F.col("doc_id") % 2 == 1), 0, state_dir)
+        assert snapshots.current_version(state_dir) == version
 
 
 class TestStatefulKeyOrder:
