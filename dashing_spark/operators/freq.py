@@ -146,6 +146,14 @@ def cms_point_query(
     return joined.mapInPandas(fn, schema=schema)
 
 
+# min_count_filter sketch backend → (builder, estimate column,
+# default lg_width, default depth)
+_SKETCH_FILTERS = {
+    "cms": (cms_by_key, "cm_est", 20, 1),
+    "hk": (heavykeeper_by_key, "hk_est", 12, 2),
+}
+
+
 def min_count_filter(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -174,14 +182,13 @@ def min_count_filter(
     counts = token_counts(df, key_cols, text_col)
     if backend == "exact":
         return counts.filter(F.col("cnt") >= min_count)
-    if backend not in ("cms", "hk"):
+    if backend not in _SKETCH_FILTERS:
         raise ValueError(f"unknown min_count_filter backend: {backend}")
-    hk = backend == "hk"
-    est_col = "hk_est" if hk else "cm_est"
-    sketches = (heavykeeper_by_key if hk else cms_by_key)(
+    build, est_col, lg_default, depth_default = _SKETCH_FILTERS[backend]
+    sketches = build(
         df, key_cols, text_col,
-        lg_width=(12 if hk else 20) if lg_width is None else lg_width,
-        depth=(2 if hk else 1) if depth is None else depth,
+        lg_width=lg_default if lg_width is None else lg_width,
+        depth=depth_default if depth is None else depth,
     )
     est = cms_point_query(counts.drop("cnt"), sketches, key_cols, est_col=est_col)
     return est.filter(F.col(est_col) >= min_count)

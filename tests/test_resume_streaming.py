@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from dashing_spark.functions import HLL
 from dashing_spark.operators import agg
 from dashing_spark.params import SketchParams
+from dashing_spark.plans import snapshots
 from dashing_spark.plans.pipeline import (
     build_or_resume_sketch_table,
     params_fingerprint,
@@ -183,9 +184,15 @@ class TestStreaming:
         after_first = {
             r["lang"]: bytes(r["sketch"]) for r in read_state(spark, state_dir).collect()
         }
+        version = snapshots.current_version(state_dir)
         # retry of the already-committed epoch 1: state must be unchanged
         apply_sketch_batch(half2, 1, ["lang"], lambda: HLL.empty(11), state_dir)
         assert committed_epoch(state_dir) == 1
+        assert snapshots.current_version(state_dir) == version
+        # a lower epoch id (restarted query counter) is refused, not skipped
+        with pytest.raises(ValueError, match="epoch 0 precedes committed epoch 1"):
+            apply_sketch_batch(half1, 0, ["lang"], lambda: HLL.empty(11), state_dir)
+        assert snapshots.current_version(state_dir) == version
         after_retry = {
             r["lang"]: bytes(r["sketch"]) for r in read_state(spark, state_dir).collect()
         }
@@ -380,10 +387,10 @@ class TestStreamingDedup:
         sigs = sigs.join(valid, sigs["doc_id"] == valid["id"]).select(
             "doc_id", "signature"
         )
-        bands_n, n_used = dedup.pick_lsh_banding(128, 0.9)
-        cand = dedup.lsh_candidate_pairs(
-            sigs, "doc_id", n_hashes=n_used, bands=bands_n
-        )
+        # full r=4 banding over all 128 hashes: a strictly larger
+        # candidate set than the stream's minimal banding, so equality
+        # also shows the stream loses no pair that full banding finds
+        cand = dedup.lsh_candidate_pairs(sigs, "doc_id", n_hashes=128, bands=32)
         batch = {
             (r["a_id"], r["b_id"], r["ji"])
             for r in dedup.exact_ji_for_pairs(docs, cand, "doc_id")
@@ -422,6 +429,14 @@ class TestStreamingDedup:
             (F.col("a_id") % 2) != (F.col("b_id") % 2)
         ).count()
         assert cross > 0
+        # a lower epoch id (restarted query counter) is refused, not skipped
+        version = snapshots.current_version(state_dir)
+        with pytest.raises(ValueError, match="epoch 0 precedes committed epoch 1"):
+            dedup_stream.apply_dedup_batch(
+                half, 0, id_col="doc_id", state_dir=state_dir, threshold=0.9
+            )
+        assert snapshots.current_version(state_dir) == version
+        assert dedup_stream.committed_epochs(state_dir) == [0, 1]
 
     def test_redelivered_docs_not_reindexed(self, spark, docs, tmp_path):
         # at-least-once delivery: epoch 1 redelivers every doc of epoch 0
@@ -492,44 +507,6 @@ class TestStreamingDedup:
             dedup_stream.apply_dedup_batch(
                 docs, 3, id_col="doc_id", state_dir=state_dir, threshold=0.9
             )
-
-
-class TestEpochGuard:
-    """Both streams share one epoch rule: a retry of the committed epoch
-    is a no-op, and a lower epoch id (a restarted query counter) raises
-    instead of silently dropping its batch."""
-
-    @staticmethod
-    def _apply(kind, df, epoch_id, state_dir):
-        from dashing_spark.streaming import dedup_stream
-
-        if kind == "sketch":
-            apply_sketch_batch(
-                df, epoch_id, ["lang"], lambda: HLL.empty(11), state_dir
-            )
-        else:
-            dedup_stream.apply_dedup_batch(
-                df, epoch_id, id_col="doc_id", state_dir=state_dir,
-                threshold=0.9,
-            )
-
-    @pytest.mark.parametrize("kind", ["sketch", "dedup"])
-    def test_retry_is_noop_and_lower_epoch_raises(
-        self, spark, docs, tmp_path, kind
-    ):
-        from dashing_spark.plans import snapshots
-
-        state_dir = str(tmp_path / kind)
-        os.makedirs(state_dir)
-        half = docs.filter(F.col("doc_id") % 2 == 0)
-        self._apply(kind, half, 1, state_dir)
-        version = snapshots.current_version(state_dir)
-        assert version is not None
-        self._apply(kind, half, 1, state_dir)
-        assert snapshots.current_version(state_dir) == version
-        with pytest.raises(ValueError, match="epoch 0 precedes committed epoch 1"):
-            self._apply(kind, docs.filter(F.col("doc_id") % 2 == 1), 0, state_dir)
-        assert snapshots.current_version(state_dir) == version
 
 
 class TestStatefulKeyOrder:
